@@ -36,7 +36,10 @@ object Bench {
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -130,6 +133,16 @@ object Bench {
       "\"" + key + "\":" + (if (short) r2(v) else r4(v))
     }.mkString("{", ",", "}")
     val total = r4(results.map(_._2).filter(_ >= 0).sum)
+    // a query that threw in ANY pass is failed — `total` above keeps its
+    // meaning (sum of successful mins), so the failures are reported beside
+    // it instead of vanishing from it
+    val failed = defs.map(_.name).filter(n => passes.exists(_(n) < 0))
+    def namesJson(short: Boolean): String = failed
+      .map(n => "\"" + (if (short && shortOk) n.takeWhile(_ != '_') else n) + "\"")
+      .mkString("[", ",", "]")
+    val runJson = s""""n_failed":${failed.length},"cpus_applied":$cpus,""" +
+      s""""master":"${spark.sparkContext.master}",""" +
+      s""""default_parallelism":${spark.sparkContext.defaultParallelism}"""
     val totalMedian = r4(medians.map(_._2).filter(_ >= 0).sum)
 
     // Micro-benchmarks matching the reference's own published workload
@@ -151,7 +164,10 @@ object Bench {
     val stdoutLine =
       s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,""" +
       s""""calibration_sec":$calJson,"passes":$nPasses,"isolation":"$isolate","sf":"$sfDir",""" +
-      s""""queries":${mapJson(results, short = true)}}"""
+      s""""queries":${mapJson(results, short = true)},""" +
+      // run facts LAST: a reader that keeps only the line's tail (see the
+      // 2000-char note above) still gets them when the head is clipped
+      s"""$runJson,"failed":${namesJson(short = true)}}"""
     if (stdoutLine.length > 1950)
       System.err.println(s"[bench] WARNING stdout line ${stdoutLine.length} chars — may clip at the driver's 2000-char tail")
     println(stdoutLine)
@@ -160,6 +176,7 @@ object Bench {
     val fileLine =
       s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,""" +
       s""""calibration_sec":$calJson,"passes":$nPasses,"isolation":"$isolate",""" +
+      s"""$runJson,"failed":${namesJson(short = false)},""" +
       s""""queries":${mapJson(results, short = false)},""" +
       s""""medians":${mapJson(medians, short = false)},""" +
       s""""micro":$micro,"sf":"$sfDir"}"""

@@ -36,4 +36,29 @@ object GraftConf {
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
   }
+
+  /** A Long-valued session conf: `default` when unset; a malformed value
+    * throws naming its key instead of a bare NumberFormatException.
+    */
+  def longConf(spark: SparkSession, key: String, default: Long): Long =
+    spark.conf.getOption(key).fold(default) { v =>
+      try v.toLong catch {
+        case _: NumberFormatException =>
+          throw new IllegalArgumentException(s"$key must be a long, got: '$v'")
+      }
+    }
+
+  /** A session clone (shared SparkContext, own conf and catalog) with
+    * `spark.sql.shuffle.partitions` set to `shufflePartitions`, so an
+    * operator sizes its own shuffles without mutating the caller's
+    * session. newSession() rebuilds SQLConf from the context's SparkConf,
+    * DROPPING the runtime-set semantics confs (ANSI off, ns-as-long, …) —
+    * they are re-applied here.
+    */
+  def cloneSession(spark: SparkSession, shufflePartitions: Int): SparkSession = {
+    val s2 = spark.newSession()
+    tune(s2)
+    s2.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    s2
+  }
 }

@@ -149,9 +149,10 @@ object Classify {
         .select(col("label"), col("bucket"), col("c"))
       val bt = tok.unionByName(docRows).persist()
       graft.ops.CacheRegistry.register(bt)
-      EpochStream.appendEpoch(bt, stateDir, batchId)
+      val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+      state.append(bt, batchId)
       if ((batchId + 1) % snapshotEvery == 0) {
-        val cum = EpochStream.settled(bt, stateDir, batchId).unionByName(bt)
+        val cum = state.settled(batchId).unionByName(bt)
           .groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c"))
           .persist()
         graft.ops.CacheRegistry.register(cum)
@@ -161,8 +162,7 @@ object Classify {
             buckets, alpha), outDir, batchId)
       }
       if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        Dedup.compactEpochPartitions(bt.sparkSession, stateDir)(
-          _.groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c")))
+        state.compact(_.groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c")))
     }
   }
 

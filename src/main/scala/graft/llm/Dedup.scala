@@ -4,6 +4,7 @@ import graft.expressions.{MinHashSig, ShingleTokens, SimHash64}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines (north-star
   * extension). Four families, each chosen for 100 TB shape:
@@ -299,6 +300,12 @@ object Dedup {
       }: _*)).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.v0"), col("bb.v1"), col("bb.v2"), col("bb.v3"))
 
+  /** The id, epoch and signature columns of a state read: all a band
+    * derivation needs (the hs arrays are dead weight there).
+    */
+  private def sigColumns(state: DataFrame): DataFrame =
+    state.select((col("id") +: col("epoch") +: (0 until 16).map(j => col(s"s$j"))): _*)
+
   /** [[stateBands]] over an epoch-partitioned state read, keeping the
     * epoch — the on-the-fly fallback for index epochs that predate (or
     * crash-missed) the at-rest band family.
@@ -390,104 +397,8 @@ object Dedup {
     * Precondition (same style as TableDiff/asOfBroadcast): ids are
     * unique across the whole ingested corpus — a re-used id would
     * shadow the earlier doc's signatures and duplicate result rows.
-    */
-  /** Lock-file name guarding the index lifecycle (single-writer). Leading
-    * `_` keeps it invisible to parquet directory reads.
-    */
-  val IndexLockFile = "_graft_lock"
-
-  /** Default lease TTL (ms): a holder older than this is presumed crashed
-    * and its lease may be stolen. Override per-session with the Spark conf
-    * `spark.graft.index.leaseTtlMs`.
-    */
-  val IndexLeaseTtlMsDefault: Long = 30L * 60 * 1000
-
-  /** Create-exclusive lease over `indexDir` for the duration of `body` —
-    * the single-writer contract made LOUD: an increment racing a
-    * compaction would otherwise read partitions mid-delete (silently
-    * wrong keep decisions), so the second writer must fail, not proceed.
-    * `fs.create(overwrite = false)` is the atomic primitive; the lease is
-    * released on every non-crash exit.
     *
-    * Crashed holders self-heal: acquisition checks the held lock's age
-    * (its mtime — the holder stamps the tag at acquire time and never
-    * touches it again), and past the TTL the lease is STOLEN via atomic
-    * rename-to-tombstone — of N concurrent stealers exactly ONE wins the
-    * rename (HDFS/POSIX rename atomicity), re-acquires create-exclusive,
-    * and proceeds; the losers see their rename fail and report locked.
-    * Delete-then-create would instead let a slow loser delete the
-    * winner's FRESH lock. The at-rest content is crash-safe by
-    * construction either way (epoch isolation), so stealing only risks
-    * duplicated work, never corruption.
-    */
-  private[graft] def withIndexLock[T](spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, op: String)(body: => T): T = {
-    val lock = new org.apache.hadoop.fs.Path(indexDir.stripSuffix("/") + "/" + IndexLockFile)
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(lock.getParent)
-    val ttlMs = spark.conf.getOption("spark.graft.index.leaseTtlMs")
-      .map(_.toLong).getOrElse(IndexLeaseTtlMsDefault)
-    def locked() = new IllegalStateException(
-      s"near-dedup index at $indexDir is locked by a concurrent writer — " +
-      s"index operations are single-writer; retry after it finishes (a " +
-      s"crashed holder's lease self-heals after ${ttlMs} ms)")
-    // TTL steal: returns true when THIS caller renamed the stale lock away
-    // and may retry the create-exclusive acquisition exactly once.
-    def stealIfStale(): Boolean = {
-      val age = try System.currentTimeMillis() -
-        fs.getFileStatus(lock).getModificationTime
-      catch { case _: java.io.FileNotFoundException => return true } // holder just released
-      if (age <= ttlMs) false
-      else {
-        val tomb = new org.apache.hadoop.fs.Path(
-          lock.getParent, IndexLockFile + ".stale." + java.util.UUID.randomUUID())
-        val won = try fs.rename(lock, tomb) catch { case _: java.io.IOException => false }
-        if (won) fs.delete(tomb, false)
-        won
-      }
-    }
-    // Acquisition must be ATOMIC create-exclusive. Hadoop's
-    // create(overwrite=false) is atomic on HDFS but RawLocal/Checksum
-    // filesystems implement it as exists()-then-create — two racers can
-    // both pass the check. For file:// paths use O_EXCL via NIO instead;
-    // only a genuine already-exists maps to the "locked" error, any other
-    // IO failure (permissions, disk full) propagates as itself.
-    // branch on the RESOLVED filesystem, not the raw URI: a scheme-less
-    // path under fs.defaultFS=hdfs:// must take the Hadoop branch — the
-    // raw scheme is null there and NIO would lock the driver's local
-    // disk. (fs.getUri, not fs.getScheme: the latter THROWS on
-    // FileSystem impls that never override it.)
-    // the tag records holder + acquire time (diagnostics; staleness itself
-    // reads the mtime, which this write stamps and nothing later touches)
-    val tag = s"$op acquired_ms=${System.currentTimeMillis()}"
-    def tryCreate(): Boolean =
-      if (fs.getUri.getScheme == "file") {
-        val uri = fs.makeQualified(lock).toUri
-        try java.nio.file.Files.createFile(java.nio.file.Paths.get(uri.getPath))
-        catch { case _: java.nio.file.FileAlreadyExistsException => return false }
-        try java.nio.file.Files.write(java.nio.file.Paths.get(uri.getPath),
-          tag.getBytes("UTF-8"))
-        catch { case e: Throwable => fs.delete(lock, false); throw e }
-        true
-      } else {
-        val out = try fs.create(lock, false) catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-          case e: java.io.IOException if fs.exists(lock) => return false
-        }
-        // a failed holder-tag write must not leak the acquired lock
-        try out.write(tag.getBytes("UTF-8")) catch {
-          case e: Throwable => out.close(); fs.delete(lock, false); throw e
-        }
-        out.close()
-        true
-      }
-    // acquire, with at most ONE steal retry: a second already-exists after
-    // a won steal means a live third writer re-acquired first — locked.
-    if (!tryCreate() && !(stealIfStale() && tryCreate())) throw locked()
-    try body finally fs.delete(lock, false)
-  }
-
-  /** Incremental near-dup dedup of `batch` against the persistent index
+    * Incremental near-dup dedup of `batch` against the persistent index
     * at `indexDir` (and within the batch), appending the batch's own
     * signatures for future increments. Returns (id, kept).
     *
@@ -502,7 +413,7 @@ object Dedup {
     */
   def nearDedupIncrement(batch: DataFrame, idCol: String, textCol: String,
       indexDir: String, threshold: Double, epoch: Long): DataFrame =
-    withIndexLock(batch.sparkSession, indexDir, s"increment epoch=$epoch") {
+    StateFamily.withLease(batch.sparkSession, indexDir, s"increment epoch=$epoch") {
       nearDedupIncrementLocked(batch, idCol, textCol, indexDir, threshold, epoch)
     }
 
@@ -552,14 +463,8 @@ object Dedup {
     // best-effort (another writer racing the same cleanup is harmless).
     // Parse the TTL OUTSIDE the best-effort sweep: a malformed conf value
     // must surface as an error, not silently disable reclamation forever.
-    val ttlMs = lazyDf.sparkSession.conf
-      .getOption("spark.graft.index.scratchTtlMs").map { v =>
-        try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.index.scratchTtlMs must be a long (ms), got: '$v'")
-        }
-      }
-      .getOrElse(7L * 24 * 3600 * 1000)
+    val ttlMs = graft.GraftConf.longConf(lazyDf.sparkSession,
+      "spark.graft.index.scratchTtlMs", 7L * 24 * 3600 * 1000)
     try {
       val conf = lazyDf.sparkSession.sparkContext.hadoopConfiguration
       val dir = new org.apache.hadoop.fs.Path(epochDir)
@@ -604,94 +509,33 @@ object Dedup {
     */
   def exactDedupIncrement(batch: DataFrame, idCol: String, fpCol: Column,
       indexDir: String, epoch: Long): DataFrame =
-    withIndexLock(batch.sparkSession, indexDir, s"exact-increment epoch=$epoch") {
+    StateFamily.withLease(batch.sparkSession, indexDir, s"exact-increment epoch=$epoch") {
       // the raised In threshold must cover the ACTIONS below (pushdown
       // conversion happens at physical planning, not plan construction)
       withPushedInThreshold(batch.sparkSession) {
-      val spark = batch.sparkSession
-      val statePath = indexDir.stripSuffix("/") + "/exact_state"
       val fps = batch.select(col(idCol).cast("long").as("id"), fpCol.cast("string").as("fp"))
         .persist()
       graft.ops.CacheRegistry.register(fps)
-      val hasIndex = {
-        val p = new org.apache.hadoop.fs.Path(statePath)
-        graft.ops.Layout.hasParquetData(
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-      }
-      // history fingerprints hit by this batch: the batch's (bounded)
-      // distinct fingerprint set broadcast into the scan — and, for
-      // trigger-sized batches, ALSO pushed as `fp IN` so the fp-sorted
-      // files (especially the compacted sentinel) group-skip instead of
-      // scanning O(history) fingerprints
       val batchFps = fps.select(col("fp")).filter(col("fp").isNotNull).distinct()
-      // persisted across its two consumers (the dropped materialization
-      // and the new-fp anti-join) — recomputing would re-run the probed
-      // scan, doubling the per-increment index IO; released below
-      val seen = (if (!hasIndex) batchFps.limit(0) else {
-        val base = readEpochState(spark, statePath, batchFps.schema)
-          .filter(col("epoch") < epoch)
-        val prefiltered = pushableKeys(batchFps) match {
-          case Some(vals) => base.filter(col("fp").isin(vals: _*))
-          case None => base
+      val dropped = new StateFamily(batch.sparkSession, indexDir.stripSuffix("/") + "/exact_state",
+          batchFps.schema, FpState)
+        .probeAppend(batchFps, epoch) { seen =>
+          val batchMin = fps.filter(col("fp").isNotNull)
+            .groupBy(col("fp")).agg(min(col("id")).as("keep_id"))
+          // materialized INSIDE the lease to epoch-scoped scratch parquet
+          // (bounded by the batch, but storage-backed — nothing data-sized
+          // crosses to the driver), and BEFORE the append — the result must
+          // not re-read index files a compaction could later rewrite
+          materializeScratch(indexDir, "exact_dropped", epoch, fps.join(batchMin, "fp")
+            .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
+            .filter(col("id") =!= col("keep_id") || col("__hist").isNotNull)
+            .select(col("id")))
         }
-        prefiltered
-          .join(broadcast(batchFps), Seq("fp"), "left_semi")
-          .select(col("fp")).distinct()
-      }).persist()
-      val batchMin = fps.filter(col("fp").isNotNull)
-        .groupBy(col("fp")).agg(min(col("id")).as("keep_id"))
-      val droppedLazy = fps.join(batchMin, "fp")
-        .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
-        .filter(col("id") =!= col("keep_id") || col("__hist").isNotNull)
-        .select(col("id"))
-      // materialized INSIDE the lease to epoch-scoped scratch parquet
-      // (bounded by the batch, but storage-backed — nothing data-sized
-      // crosses to the driver), and BEFORE the append — the result must
-      // not re-read index files a compaction could later rewrite
-      val dropped = materializeScratch(indexDir, "exact_dropped", epoch, droppedLazy)
-      val newFps = batchMin.select(col("fp")).join(seen, Seq("fp"), "left_anti").persist()
-      graft.ops.CacheRegistry.register(newFps)
-      val outFiles = graft.ops.Layout.sizedFileCount(newFps.count())
-      newFps.withColumn("epoch", lit(epoch)).coalesce(outFiles)
-        // fp-sorted small groups + fp bloom: the pushed fp IN above must
-        // skip groups — novel keys via the bloom, present keys via the
-        // sort (epoch leads or partitionBy's writer re-sorts)
-        .sortWithinPartitions(col("epoch"), col("fp"))
-        .write.mode("append")
-        .option("parquet.block.size", StateBlockBytes)
-        .options(fpBloomOptions("fp"))
-        .partitionBy("epoch").parquet(statePath)
-      // seen is fully consumed (dropped scratch + newFps cache)
-      seen.unpersist(blocking = false)
       batch.select(col(idCol).cast("long").as("id"))
         .join(broadcast(dropped.withColumn("__dropped", lit(true))), Seq("id"), "left")
         .select(col("id"), col("__dropped").isNull.as("kept"))
       }
     }
-
-  /** At-rest LAYOUT VERSION of a bands directory, stamped in a
-    * `_GRAFT_BANDS_LAYOUT` marker before the first band file lands.
-    * Current layout `bk-v1`: one row per (doc, band) carrying the full
-    * band signature plus `bk` = xxhash64(band, v0..v3) — files sorted
-    * by bk, SMALL row groups (128 KiB) and a parquet-native BLOOM
-    * FILTER on bk. The probe pushes `bk IN (batch's ≤4B key hashes)`;
-    * blooms skip row groups containing none of them — the only stats
-    * that CAN skip here, measured: scattered hash keys give every
-    * min/max unit a full-range span, so range/page/dictionary stats
-    * never prune (a bucket-range layout was built, measured at parity
-    * or worse than the plain sig scan, and retired — see PLANS.md).
-    * Per-increment band IO ≈ hitGroups × 128 KiB + per-group
-    * footer/bloom overhead — flat in history volume, linear only in
-    * batch size, and the granularity SURVIVES compaction's fold (the
-    * sentinel epoch is just more groups).
-    *
-    * Directories holding band data WITHOUT the marker are the retired
-    * bucket layout: readers IGNORE them (the sig-derive fallback reads
-    * fewer bytes than that layout ever saved) and writers stop
-    * appending; the next compaction rebuilds them as bk-v1.
-    */
-  private val BandsLayoutMarker = "_GRAFT_BANDS_LAYOUT"
-  private val BandsLayoutV1 = "bk-v1"
 
   /** Band-family row-group size — the probe's skip granularity (and its
     * per-hit read cost): a hit band key costs ~one 128 KiB group, so a
@@ -708,17 +552,17 @@ object Dedup {
     */
   private val BandBloomFpp = "0.0001"
 
-  /** Parquet bloom options for a fingerprint-membership state family
-    * (exact/gram): the batch's pushed `fp IN` mostly probes ABSENT keys
+  /** Parquet bloom options for a hashed key column (the band key `bk`,
+    * the exact/gram `fp`): the batch's pushed `key IN` mostly probes ABSENT keys
     * (novel documents are the common trigger), which min/max stats over
     * scattered hashes can never exclude but a bloom always can — a
     * fully-novel trigger then reads no data groups at all. fpp 1e-4
     * keeps the spurious-group rate ≈ K×1e-4 under the 1000-value
     * pushdown cap; ndv sized to rows-per-group.
     */
-  private[llm] def fpBloomOptions(colName: String): Map[String, String] = Map(
+  private def keyBloomOptions(colName: String, ndv: Int): Map[String, String] = Map(
     s"parquet.bloom.filter.enabled#$colName" -> "true",
-    s"parquet.bloom.filter.expected.ndv#$colName" -> "200000",
+    s"parquet.bloom.filter.expected.ndv#$colName" -> ndv.toString,
     s"parquet.bloom.filter.fpp#$colName" -> BandBloomFpp,
     // dictionary encoding OFF for the key column: unique hashes gain
     // nothing from a dictionary, and parquet's dictionary FILTER runs
@@ -735,6 +579,50 @@ object Dedup {
     */
   private val StateBlockBytes = 4 * 1024 * 1024
   private val StatePageBytes = 32 * 1024
+
+  /** The near-dup signature state: one row per document, id-SORTED with
+    * small pages — the hs fetch pushes `id IN` and rides the parquet
+    * column index (unsorted files would give every page a full-range id
+    * min/max and nothing would skip), and a compacted sentinel holding
+    * the whole settled corpus group-skips the same way.
+    */
+  private val NearState = FamilyLayout("near-v1", Seq("id"), Map(
+    "parquet.block.size" -> StateBlockBytes.toString,
+    "parquet.page.size" -> StatePageBytes.toString))
+
+  /** The fingerprint-membership state (exact `exact_state`, gram
+    * `gram_state`): one row per key, fp-sorted with small groups and the
+    * fp bloom, so the pushed `fp IN` skips groups — novel keys via the
+    * bloom, present keys via the sort.
+    */
+  private[llm] val FpState = FamilyLayout("fp-v1", Seq("fp"), Map(
+    "parquet.block.size" -> StateBlockBytes.toString,
+    "parquet.page.size" -> StatePageBytes.toString) ++ keyBloomOptions("fp", 200000))
+
+  /** The band routing family, layout `bk-v1`: one row per (doc, band)
+    * carrying the full band signature plus `bk` = xxhash64(band, v0..v3)
+    * — files sorted (and, past one file, range-clustered) by bk, SMALL
+    * row groups (128 KiB) and a parquet-native BLOOM FILTER on bk. The
+    * probe pushes `bk IN (batch's ≤4B key hashes)`; blooms skip row
+    * groups containing none of them — the only stats that CAN skip here,
+    * measured: scattered hash keys give every min/max unit a full-range
+    * span, so range/page/dictionary stats never prune (a bucket-range
+    * layout was built, measured at parity or worse than the plain sig
+    * scan, and retired — see PLANS.md). Per-increment band IO ≈ hitGroups
+    * × 128 KiB + per-group footer/bloom overhead — flat in history
+    * volume, linear only in batch size, and the granularity SURVIVES
+    * compaction's rebuild (the sentinel epoch is just more groups).
+    *
+    * Directories holding band data WITHOUT the family stamp are the
+    * retired bucket layout: readers IGNORE them (the sig-derive fallback
+    * reads fewer bytes than that layout ever saved) and writers stop
+    * appending; the next compaction rebuilds them as bk-v1.
+    */
+  private[graft] val BandsLayout = FamilyLayout("bk-v1", Seq("bk"),
+    // bloom ndv = expected distinct keys per row GROUP (~3.2k band rows
+    // at 128 KiB)
+    Map("parquet.block.size" -> BandBlockBytes.toString) ++ keyBloomOptions("bk", 4000),
+    unstampedRetired = true, clusterAppends = true)
 
   /** Cap on the value-set size the probe pushes as a parquet In filter.
     * Spark expands a pushed In into a chained OR of EQs (the form that
@@ -765,23 +653,6 @@ object Dedup {
     }
   }
 
-  /** Epoch-partitioned state family read with the WRITER's schema
-    * supplied explicitly (`dataSchema` = the appended frame's columns;
-    * `epoch` rides as the typed partition column). A bare
-    * `spark.read.parquet` re-infers the schema on the DRIVER — an extra
-    * directory listing plus a footer read, measured 65-80 ms warm per
-    * call (round 16) — on EVERY increment, for a schema the family's
-    * writer fixed once. Partition discovery still happens; only the
-    * inference is skipped.
-    */
-  private[llm] def readEpochState(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      dataSchema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.StructType(
-        dataSchema.fields :+ org.apache.spark.sql.types.StructField(
-          "epoch", org.apache.spark.sql.types.LongType)))
-      .parquet(path)
-
   /** The batch's key set as pushable literal values: Some(values) when
     * within [[MaxPushedInValues]] (one bounded collect), None when the
     * batch saturates the cap and the caller should scan instead.
@@ -789,34 +660,6 @@ object Dedup {
   private[llm] def pushableKeys(keys: DataFrame): Option[Seq[Any]] = {
     val vals = keys.limit(MaxPushedInValues + 1).collect().map(_.get(0)).toSeq
     if (vals.size > MaxPushedInValues) None else Some(vals)
-  }
-
-  /** The layout tag of a bands directory: Some(tag) when stamped, None
-    * for marker-less directories (retired layout or empty).
-    */
-  private def bandsLayout(fs: org.apache.hadoop.fs.FileSystem,
-      bandsPath: String): Option[String] = {
-    val marker = new org.apache.hadoop.fs.Path(bandsPath, BandsLayoutMarker)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        "UTF-8").trim)
-      finally in.close()
-    }
-  }
-
-  /** Stamp the layout marker (idempotent; BEFORE the first band file, so
-    * no reader ever sees v1 data without its tag).
-    */
-  private def writeBandsLayoutMarker(fs: org.apache.hadoop.fs.FileSystem,
-      bandsPath: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(bandsPath, BandsLayoutMarker)
-    if (!fs.exists(marker)) {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(bandsPath))
-      val out = fs.create(marker, true)
-      try out.write(BandsLayoutV1.getBytes("UTF-8")) finally out.close()
-    }
   }
 
   /** Histories at or below this many epochs take the plain column-pruned
@@ -860,23 +703,9 @@ object Dedup {
     * reliance on min/max ordering (scattered hash keys give every
     * min/max unit a full-range span — measured unprunable).
     */
-  private[graft] def probeBands(spark: org.apache.spark.sql.SparkSession,
-      bandsPath: String, schema: org.apache.spark.sql.types.StructType,
-      epochs: Seq[Long], bandKeys: Seq[Long]): DataFrame =
-    spark.read.schema(schema).parquet(bandsPath)
-      .filter(col("epoch").isin(epochs: _*) && col("bk").isin(bandKeys: _*))
-
-  /** Epoch-partition directory names under `path` (one listing — the
-    * epoch set is the directory layout, never a distinct job).
-    */
-  private def epochDirs(spark: org.apache.spark.sql.SparkSession,
-      path: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
-      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toLong).toSet
-  }
+  private[graft] def probeBands(bands: StateFamily, epochs: Seq[Long],
+      bandKeys: Seq[Long]): DataFrame =
+    bands.read.filter(col("epoch").isin(epochs: _*) && col("bk").isin(bandKeys: _*))
 
   private def nearDedupIncrementLocked(batch: DataFrame, idCol: String, textCol: String,
       indexDir: String, threshold: Double, epoch: Long): DataFrame = {
@@ -885,9 +714,12 @@ object Dedup {
     val state = portableState(batch, idCol, textCol).persist()
     graft.ops.CacheRegistry.register(state)
     val bands = stateBands(state)
+    val bandRows = bands.withColumn("bk", bandKey)
     val keys = Seq("band", "v0", "v1", "v2", "v3")
-    val statePath = indexDir.stripSuffix("/") + "/state"
-    val bandsPath = indexDir.stripSuffix("/") + "/bands"
+    val stateFam = new StateFamily(spark, indexDir.stripSuffix("/") + "/state", state.schema,
+      NearState)
+    val bandsFam = new StateFamily(spark, indexDir.stripSuffix("/") + "/bands", bandRows.schema,
+      BandsLayout)
 
     // EPOCH isolation (the transaction-log idea reduced to a partition
     // column): the index is read through `epoch < thisEpoch`, a
@@ -899,12 +731,8 @@ object Dedup {
     // distinct'd, hash-set verify is idempotent); deleting the epoch
     // directory reclaims them. Single writer per epoch by contract.
     // "has an index" must mean "has DATA": an increment whose docs all
-    // had empty shingle sets appends zero rows, leaving a directory with
-    // only _SUCCESS — reading that as parquet throws at plan time
-    val idxFs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasIndex = graft.ops.Layout.hasParquetData(idxFs,
-      new org.apache.hadoop.fs.Path(statePath))
+    // had empty shingle sets appends zero rows
+    val hasIndex = stateFam.exists
 
     val candNew = bandSelfCands(bands)
     // PROBE-PRUNED history side: per-increment IO tracks the BATCH, not
@@ -923,11 +751,11 @@ object Dedup {
     // rows from state on the fly — correctness never depends on the
     // routing family being present.
     // one listing, shared by the read-path gate and the band-write
-    // deferral below (epochDirs returns empty when the dir is absent)
-    val fsStateEpochs = epochDirs(spark, statePath).filter(_ < epoch)
+    // deferral below
+    val fsStateEpochs = stateFam.epochs.filter(_ < epoch)
     val (cand, histHs, probeCache) =
       if (!hasIndex) (candNew.distinct(), None, None) else {
-      val fsBandEpochs = epochDirs(spark, bandsPath).filter(_ < epoch)
+      val fsBandEpochs = bandsFam.epochs.filter(_ < epoch)
       if (!probeGate(fsStateEpochs)) {
         // SHALLOW history: the probe's extra driver round trips (bucket
         // set, candidate-epoch set — each a job with a ~0.1-0.2 s floor)
@@ -936,9 +764,7 @@ object Dedup {
         // and its per-trigger cost stays flat while this path grows
         // with history). Take the plain column-pruned scan: sig columns
         // for the band join, (id, hs) for the verify.
-        val i = readEpochState(spark, statePath, state.schema)
-          .filter(col("epoch") < epoch)
-          .select(state.columns.map(col): _*)
+        val i = stateFam.settled(epoch)
         val crossCand = stateBands(i)
           .select((keys.map(col) :+ col("id").as("id1")): _*)
           .join(broadcast(bands.select((keys.map(col) :+ col("id").as("id2")): _*)), keys)
@@ -954,27 +780,15 @@ object Dedup {
       // which measures CHEAPER than scanning any band layout unpruned.
       val bandKeys = bands.select(bandKey.as("bk")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      val bandsUsable =
-        bandsLayout(idxFs, bandsPath).contains(BandsLayoutV1) &&
-          bandKeys.size <= MaxPushedInValues
+      val bandsUsable = !bandsFam.retired && bandKeys.size <= MaxPushedInValues
       val routedEpochs =
         if (bandsUsable) (fsStateEpochs intersect fsBandEpochs).toSeq else Seq.empty
       val legacyEpochs = (fsStateEpochs diff routedEpochs.toSet).toSeq
-      // schema pinned from the batch's own band frame (the writer's
-      // schema by construction): no footer-inference listing/read cost,
-      // and partition values land typed
-      val bandsReadSchema = org.apache.spark.sql.types.StructType(
-        bands.schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("bk",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("epoch",
-            org.apache.spark.sql.types.LongType)))
       val routed = if (routedEpochs.isEmpty) None else Some(
-        probeBands(spark, bandsPath, bandsReadSchema, routedEpochs, bandKeys)
+        probeBands(bandsFam, routedEpochs, bandKeys)
           .select((col("id") +: col("epoch") +: keys.map(col)): _*))
       val legacy = if (legacyEpochs.isEmpty) None else Some(
-        stateBandsKeepEpoch(readEpochState(spark, statePath, state.schema)
-          .filter(col("epoch").isin(legacyEpochs: _*))))
+        stateBandsKeepEpoch(stateFam.read.filter(col("epoch").isin(legacyEpochs: _*))))
       val histBands = (routed.toSeq ++ legacy.toSeq).reduce(_ unionByName _)
       val crossCand = histBands
         .select((keys.map(col) :+ col("id").as("id1") :+ col("epoch")): _*)
@@ -1005,8 +819,7 @@ object Dedup {
         if (hitIds.size <= MaxPushedInValues) col("id").isin(hitIds: _*)
         else lit(true) // saturated set: epoch pruning only (see cap doc)
       val hist = if (hitEpochs.isEmpty) None else Some(
-        readEpochState(spark, statePath, state.schema).filter(
-            col("epoch").isin(hitEpochs: _*) && idFilter)
+        stateFam.read.filter(col("epoch").isin(hitEpochs: _*) && idFilter)
           .select(col("id"), col("hs")))
       (candNew.unionByName(crossCand.drop("epoch")).distinct(), hist,
         Some(crossCand))
@@ -1052,21 +865,15 @@ object Dedup {
     // ProbeMinEpochs early, batch-sized epochs ride the fallback.
     // ... and never into a retired-layout directory: its epochs ride the
     // sig-derive fallback until compaction rebuilds the family as bk-v1
-    val bandsWritable = bandsLayout(idxFs, bandsPath).contains(BandsLayoutV1) ||
-      !graft.ops.Layout.hasParquetData(idxFs,
-        new org.apache.hadoop.fs.Path(bandsPath))
-    if (probeGate(fsStateEpochs + epoch) && bandsWritable) {
+    if (probeGate(fsStateEpochs + epoch) && !bandsFam.retired) {
       // band routing family FIRST, then state: a state epoch on disk
       // thereby implies its band files are complete (the probe's legacy
       // fallback covers the reverse crash window — band rows whose state
       // epoch never landed are dropped by the hs inner join).
       // bk-v1 layout: bk-sorted files, 128 KiB row groups, parquet bloom
-      // on bk — the skip machinery probeBands documents. Layout marker
-      // BEFORE the first band file: a probe must never see band data it
-      // cannot interpret.
-      writeBandsLayoutMarker(idxFs, bandsPath)
-      writeBandEpoch(bands.withColumn("bk", bandKey).withColumn("epoch", lit(epoch)),
-        graft.ops.Layout.sizedFileCount(4L * stateRows), "append", bandsPath)
+      // on bk — the skip machinery probeBands documents (the family's
+      // stamp lands before its first band file)
+      bandsFam.append(bandRows, epoch, graft.ops.Layout.sizedFileCount(4L * stateRows))
       // BACKFILL the deferral debt at the gate transition: state epochs
       // the shallow phase skipped (≤ ProbeMinEpochs of them) get their
       // band epochs derived from state NOW, once — without this, every
@@ -1076,21 +883,10 @@ object Dedup {
       // COMPLETE (a partially-appended epoch would be routed and
       // silently miss its unwritten candidates; the normal write avoids
       // that window by writing bands before the state epoch exists).
-      backfillBandEpochs(spark, statePath, bandsPath,
-        (fsStateEpochs.filter(_ >= 0)
-          -- epochDirs(spark, bandsPath)).toSeq.sorted.take(ProbeMinEpochs * 2))
+      backfillBandEpochs(stateFam, bandsFam,
+        (fsStateEpochs.filter(_ >= 0) -- bandsFam.epochs).toSeq.sorted.take(ProbeMinEpochs * 2))
     }
-    // id-SORTED with small pages: the hs fetch pushes `id IN` and rides
-    // the parquet column index — unsorted files would give every page a
-    // full-range id min/max and nothing would skip
-    state.withColumn("epoch", lit(epoch)).coalesce(outFiles)
-      // epoch leads the sort or partitionBy's writer re-sorts (see
-      // writeBandEpoch) — epoch is constant here, so this IS an id sort
-      .sortWithinPartitions(col("epoch"), col("id"))
-      .write.mode("append")
-      .option("parquet.block.size", StateBlockBytes)
-      .option("parquet.page.size", StatePageBytes)
-      .partitionBy("epoch").parquet(statePath)
+    stateFam.append(state, epoch, outFiles) // id-sorted, see NearState
 
     batch.select(col(idCol).as("id"))
       .join(broadcast(dropped.withColumn("__dropped", lit(true))), Seq("id"), "left")
@@ -1131,11 +927,14 @@ object Dedup {
   def nearDedupStreaming(spark: org.apache.spark.sql.SparkSession, stagedDir: String,
       schema: org.apache.spark.sql.types.StructType, idCol: String, textCol: String,
       indexDir: String, outDir: String, threshold: Double,
-      checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame =
-    dedupStreaming(spark, stagedDir, schema, idCol, outDir, checkpointDir,
-      shufflePartitions) { (batch, batchId) =>
-      nearDedupIncrement(batch, idCol, textCol, indexDir, threshold, epoch = batchId)
+      checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame = {
+    EpochStream.drain(spark, stagedDir, schema, checkpointDir, shufflePartitions) {
+      (batch, batchId) => EpochStream.writeSnapshot(
+        nearDedupIncrement(batch, idCol, textCol, indexDir, threshold, epoch = batchId),
+        outDir, batchId)
     }
+    keepFlags(spark, outDir, schema(idCol).dataType)
+  }
 
   /** STREAMING exact dedup — [[exactDedupIncrement]] drained one
     * micro-batch at a time, the exact complement of [[nearDedupStreaming]]
@@ -1149,57 +948,28 @@ object Dedup {
   def exactDedupStreaming(spark: org.apache.spark.sql.SparkSession, stagedDir: String,
       schema: org.apache.spark.sql.types.StructType, idCol: String, fpCol: Column,
       indexDir: String, outDir: String,
-      checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame =
-    dedupStreaming(spark, stagedDir, schema, idCol, outDir, checkpointDir,
-      shufflePartitions) { (batch, batchId) =>
-      exactDedupIncrement(batch, idCol, fpCol, indexDir, epoch = batchId)
+      checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame = {
+    EpochStream.drain(spark, stagedDir, schema, checkpointDir, shufflePartitions) {
+      (batch, batchId) => EpochStream.writeSnapshot(
+        exactDedupIncrement(batch, idCol, fpCol, indexDir, epoch = batchId), outDir, batchId)
     }
+    keepFlags(spark, outDir, LongType)
+  }
 
-  private def dedupStreaming(spark: org.apache.spark.sql.SparkSession, stagedDir: String,
-      schema: org.apache.spark.sql.types.StructType, idCol: String, outDir: String,
-      checkpointDir: Option[String], shufflePartitions: Int)(
-      increment: (DataFrame, Long) => DataFrame): DataFrame = {
-    // AQE is disabled inside streaming queries, so foreachBatch's
-    // aggregates would run at the session's full shuffle parallelism
-    // with no runtime coalesce — size partitions to the increment on a
-    // session CLONE (Events.withStateParts convention: shared context,
-    // own conf, no global mutation)
-    val s2 = spark.newSession()
-    // newSession() rebuilds SQLConf from the context's SparkConf, DROPPING
-    // the runtime-set semantics confs (ANSI off, ns-as-long, …) the
-    // engine's masked-arithmetic contract depends on — re-apply them
-    graft.GraftConf.tune(s2)
-    s2.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    val stream = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagedDir)
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        increment(batch, batchId)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-      }
-    val q = checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-    try q.processAllAvailable() finally q.stop()
-    // an empty source may never create outDir, and all-zero-row batches
-    // create it with only _SUCCESS — return the empty result rather
-    // than a read failure in either case
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    if (!graft.ops.Layout.hasParquetData(
-        outPath.getFileSystem(spark.sparkContext.hadoopConfiguration), outPath)) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          schema(idCol).copy(name = "id"),
-          org.apache.spark.sql.types.StructField("kept",
-            org.apache.spark.sql.types.BooleanType, nullable = true),
-          org.apache.spark.sql.types.StructField("batch_id",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-    } else spark.read.parquet(outDir)
-      // partition-column inference narrows batch_id to int; restore long
-      .withColumn("batch_id", col("batch_id").cast("long"))
+  /** The streaming dedup result (id, kept, batch_id), read back typed: an
+    * empty source never creates `outDir`, and all-zero-row batches leave
+    * it with only `_SUCCESS` — both read as the empty result.
+    */
+  private def keepFlags(spark: org.apache.spark.sql.SparkSession, outDir: String,
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val schema = StructType(Seq(StructField("id", idType),
+      StructField("kept", org.apache.spark.sql.types.BooleanType),
+      StructField("batch_id", LongType, nullable = false)))
+    val out = new org.apache.hadoop.fs.Path(outDir)
+    if (graft.ops.Layout.hasParquetData(
+        out.getFileSystem(spark.sparkContext.hadoopConfiguration), out))
+      spark.read.schema(schema).parquet(outDir)
+    else spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
   }
 
   /** Compact the near-dedup signature index (the Delta-OPTIMIZE verb of
@@ -1225,12 +995,11 @@ object Dedup {
     * an increment fail loudly instead of reading partitions mid-delete.
     */
   def nearDedupIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = withIndexLock(spark, indexDir, "compact") {
-    // all state families share the epoch-partition lifecycle; each
-    // folds settled epochs under its own duplicate key (near-dup rows
-    // are keyed by doc id, exact rows by the fingerprint itself, band
-    // routing rows are whole-row duplicates)
-    compactState(spark, indexDir.stripSuffix("/") + "/state", Seq("id"))
+      indexDir: String): Unit = StateFamily.withLease(spark, indexDir, "compact") {
+    // each family folds settled epochs under its own duplicate key (its
+    // sort key: near-dup rows by doc id, exact rows by the fingerprint)
+    StateFamily.stamped(spark, indexDir.stripSuffix("/") + "/state", NearState)
+      .foreach(_.compact(_.dropDuplicates("id")))
     // the band routing family is REBUILT from the compacted state, not
     // folded in place: folding would give the bands sentinel the same
     // DIRECTORY NAME as the state sentinel without the same CONTENT
@@ -1240,49 +1009,8 @@ object Dedup {
     // loses cross-epoch candidates. Deriving from state makes content
     // parity true by construction, for every epoch.
     rebuildBandsFromState(spark, indexDir)
-    compactState(spark, indexDir.stripSuffix("/") + "/exact_state", Seq("fp"),
-      extraOptions = fpBloomOptions("fp"))
-  }
-
-  private def compactState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, dedupCols: Seq[String],
-      extraOptions: Map[String, String] = Map.empty): Unit =
-    // sentinel laid out sorted on the dedup key with small groups: the
-    // increment's pushed `id IN` (near) / `fp IN` (exact/gram) must be
-    // able to group-skip the FOLDED epoch — it holds the whole settled
-    // corpus, exactly where an unsorted layout would force a full read
-    compactEpochPartitions(spark, statePath, sortCols = dedupCols,
-      options = Map(
-        "parquet.block.size" -> StateBlockBytes.toString,
-        "parquet.page.size" -> StatePageBytes.toString) ++ extraOptions)(
-      _.dropDuplicates(dedupCols))
-
-  /** bk-v1 band write: bk-range-clustered, bk-sorted files with small
-    * row groups and the bk bloom (single-file epochs skip the range
-    * shuffle — its sampling pass alone was a measurable per-increment
-    * tax at trigger-batch sizes; one task sorts in place and groups
-    * skip exactly the same).
-    */
-  private def writeBandEpoch(bandRows: DataFrame, nFiles: Int, mode: String,
-      path: String): Unit = {
-    val clustered =
-      if (nFiles <= 1) bandRows.coalesce(1)
-      else bandRows.repartitionByRange(nFiles, col("bk"))
-    // the sort LEADS with the partition column: partitionBy's writer
-    // requires ordering by it and would otherwise insert its own
-    // (unstable) sort, silently destroying the bk order (measured: an
-    // "id-sorted" sentinel came back with full-range stats per group)
-    clustered.sortWithinPartitions(col("epoch"), col("bk"))
-      .write.mode(mode)
-      .option("parquet.block.size", BandBlockBytes)
-      .option("parquet.bloom.filter.enabled#bk", "true")
-      // expected distinct keys per row GROUP (~3.2k band rows at 128 KiB)
-      .option("parquet.bloom.filter.expected.ndv#bk", "4000")
-      .option("parquet.bloom.filter.fpp#bk", BandBloomFpp)
-      // no dictionary on bk: the dictionary filter would read each
-      // group's dict page ahead of the bloom (see fpBloomOptions)
-      .option("parquet.enable.dictionary#bk", "false")
-      .partitionBy("epoch").parquet(path)
+    StateFamily.stamped(spark, indexDir.stripSuffix("/") + "/exact_state", FpState)
+      .foreach(_.compact(_.dropDuplicates("fp")))
   }
 
   /** Derive and land band epochs for EXISTING state epochs (the
@@ -1293,30 +1021,14 @@ object Dedup {
     * partially-visible epoch. Single writer under the index lease;
     * rename targets cannot exist (the epochs were selected as missing).
     */
-  private def backfillBandEpochs(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, bandsPath: String, epochs: Seq[Long]): Unit = {
-    if (epochs.isEmpty) return
-    val fs = new org.apache.hadoop.fs.Path(bandsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(bandsPath + ".__graft_backfill_stage")
-    fs.delete(stage, true) // sweep a prior crash's leftovers
+  private def backfillBandEpochs(state: StateFamily, bands: StateFamily,
+      epochs: Seq[Long]): Unit = if (epochs.nonEmpty) {
     // sig columns only — persisting full-width state would cache the
     // fat hs arrays a band derivation never reads
-    val st = spark.read.parquet(statePath).filter(col("epoch").isin(epochs: _*))
-      .select((col("id") +: col("epoch") +: (0 until 16).map(j => col(s"s$j"))): _*)
-      .persist()
-    try {
-      val n = graft.ops.Layout.sizedFileCount(st.count() * 4L)
-      writeBandEpoch(stateBandsKeepEpoch(st).withColumn("bk", bandKey), n,
-        "overwrite", stage.toString)
-    } finally st.unpersist(blocking = false)
-    for (e <- epochs) {
-      val src = new org.apache.hadoop.fs.Path(stage, s"epoch=$e")
-      if (fs.exists(src))
-        require(fs.rename(src, new org.apache.hadoop.fs.Path(bandsPath, s"epoch=$e")),
-          s"band backfill rename failed for epoch=$e")
-    }
-    fs.delete(stage, true)
+    val st = sigColumns(state.read.filter(col("epoch").isin(epochs: _*))).persist()
+    try bands.land(stateBandsKeepEpoch(st).withColumn("bk", bandKey),
+      graft.ops.Layout.sizedFileCount(st.count() * 4L), epochs)
+    finally st.unpersist(blocking = false)
   }
 
   /** Rebuild the band routing family wholesale from the (just-compacted)
@@ -1330,94 +1042,21 @@ object Dedup {
     */
   private[llm] def rebuildBandsFromState(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
-    val statePath = indexDir.stripSuffix("/") + "/state"
     val bandsPath = indexDir.stripSuffix("/") + "/bands"
-    val bp = new org.apache.hadoop.fs.Path(bandsPath)
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(bandsPath + ".__graft_rebuild_stage")
-    val old = new org.apache.hadoop.fs.Path(bandsPath + ".__graft_rebuild_old")
-    fs.delete(stage, true); fs.delete(old, true) // sweep prior crashes
-    val sp = new org.apache.hadoop.fs.Path(statePath)
-    if (!graft.ops.Layout.hasParquetData(fs, sp)) { fs.delete(bp, true); return }
-    // sig columns only (the hs arrays are dead weight for band rows)
-    val st = spark.read.parquet(statePath)
-      .select((col("id") +: col("epoch") +: (0 until 16).map(j => col(s"s$j"))): _*)
-    // persist is strictly intra-call (count + write) and must be RELEASED
-    // here, not registered: a registered cache over state files outlives
-    // the NEXT compaction's rewrite of those files, and CacheManager
-    // substitutes the stale relation into any later matching plan
-    // (FILE_NOT_EXIST on the deleted sentinel)
-    val bandRows = stateBandsKeepEpoch(st).withColumn("bk", bandKey).persist()
-    try writeBandEpoch(bandRows,
-      graft.ops.Layout.sizedFileCount(bandRows.count()), "overwrite",
-      stage.toString)
-    finally bandRows.unpersist(blocking = false)
-    // the rebuilt family's layout tag travels with it through the swap
-    writeBandsLayoutMarker(fs, stage.toString)
-    // land-then-retire: a crash leaves either the old bands (still
-    // content-correct for its own epochs… superseded names are swept
-    // above) or NO bands (the derive-on-the-fly fallback)
-    if (fs.exists(bp)) require(fs.rename(bp, old), "bands retire rename failed")
-    require(fs.rename(stage, bp), "bands land rename failed")
-    fs.delete(old, true)
-  }
-
-  /** The shared fold-settled-epochs-into-a-generation machinery: every
-    * epoch partition strictly below the current maximum is rewritten —
-    * through the caller's `foldSettled` (duplicate-key drop for dedup
-    * indexes, additive count re-aggregation for the drift monitor's
-    * triplet state) — into one negative sentinel generation visible to
-    * every `epoch < current` reader; the newest epoch stays live for
-    * at-least-once re-runs. Same staged-rename-then-delete crash ordering
-    * for every state family (see [[nearDedupIndexCompact]]).
-    */
-  private[llm] def compactEpochPartitions(spark: org.apache.spark.sql.SparkSession,
-      statePath: String,
-      sortCols: Seq[String] = Nil,
-      options: Map[String, String] = Map.empty)(
-      foldSettled: DataFrame => DataFrame): Unit = {
-    val sp = new org.apache.hadoop.fs.Path(statePath)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!graft.ops.Layout.hasParquetData(fs, sp)) return
-    // the epoch set IS the partition directory names — one listing, not
-    // a distinct job over the whole index (shared helper: the probe's
-    // shallow/deep routing and compaction must agree on what exists)
-    val epochs = epochDirs(spark, statePath).toIndexedSeq.sorted
-    if (epochs.length <= 1) return // nothing settled to fold
-    val all = spark.read.parquet(statePath)
-    val maxEpoch = epochs.last
-    val sentinel = math.min(-1L, epochs.head - 1L)
-    val settled = foldSettled(all.filter(col("epoch") < maxEpoch).drop("epoch"))
-      .withColumn("epoch", lit(sentinel))
-      .persist()
-    graft.ops.CacheRegistry.register(settled)
-    val outFiles = graft.ops.Layout.sizedFileCount(settled.count())
-    val stage = statePath + ".__graft_compact_stage"
-    // the bands family is NOT folded through here — it is rebuilt
-    // wholesale from the compacted state (rebuildBandsFromState), which
-    // re-range-sorts on bucket itself. `sortCols` range-clusters the
-    // sentinel (state families sort on their key so pushed key filters
-    // can page-skip the fold)
-    val laidOut =
-      if (sortCols.isEmpty) settled.coalesce(outFiles)
-      else settled.repartitionByRange(math.max(1, outFiles), sortCols.map(col): _*)
-        // epoch leads the sort or partitionBy's writer re-sorts (see
-        // writeBandEpoch) — the sentinel epoch is constant, so this IS
-        // a key sort
-        .sortWithinPartitions((col("epoch") +: sortCols.map(col)): _*)
-    laidOut.write.mode("overwrite").options(options)
-      .partitionBy("epoch").parquet(stage)
-    // land the new generation first, then retire the old partitions.
-    // Hadoop rename signals most failures by returning FALSE, not
-    // throwing — an unchecked rename followed by the deletes would be
-    // exactly the lose-everything window this ordering exists to close
-    require(fs.rename(new org.apache.hadoop.fs.Path(s"$stage/epoch=$sentinel"),
-        new org.apache.hadoop.fs.Path(s"$statePath/epoch=$sentinel")),
-      s"compaction rename failed; staged generation left at $stage")
-    epochs.init.foreach { e =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/epoch=$e"), true)
+    StateFamily.stamped(spark, indexDir.stripSuffix("/") + "/state", NearState) match {
+      case None => StateFamily.drop(spark, bandsPath)
+      case Some(state) =>
+        // persist is strictly intra-call (count + write) and must be
+        // RELEASED here, not registered: a registered cache over state
+        // files outlives the NEXT compaction's rewrite of those files, and
+        // CacheManager substitutes the stale relation into any later
+        // matching plan (FILE_NOT_EXIST on the deleted sentinel)
+        val rows = stateBandsKeepEpoch(sigColumns(state.read)).withColumn("bk", bandKey)
+          .persist()
+        try new StateFamily(spark, bandsPath, StructType(rows.schema.filterNot(_.name == "epoch")),
+            BandsLayout).replace(rows, graft.ops.Layout.sizedFileCount(rows.count()))
+        finally rows.unpersist(blocking = false)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
   }
 
   /** Exact n-gram Jaccard pairs via inverted-index self-join on SHINGLES

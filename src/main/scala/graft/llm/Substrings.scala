@@ -139,19 +139,12 @@ object Substrings {
     */
   def removeDuplicateSpansIncrement(batch: DataFrame, idCol: String,
       textCol: String, indexDir: String, epoch: Long, k: Int = 8): DataFrame =
-    Dedup.withIndexLock(batch.sparkSession, indexDir,
+    StateFamily.withLease(batch.sparkSession, indexDir,
         s"gram-span-increment epoch=$epoch") {
       Dedup.withPushedInThreshold(batch.sparkSession) {
       require(k >= 1, s"gram width must be positive: $k")
-      val spark = batch.sparkSession
-      val statePath = indexDir.stripSuffix("/") + "/gram_state"
       val grams = gramFingerprints(batch, idCol, textCol, k).persist()
       graft.ops.CacheRegistry.register(grams)
-      val hasIndex = {
-        val p = new org.apache.hadoop.fs.Path(statePath)
-        graft.ops.Layout.hasParquetData(
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-      }
       // ONE fp-keyed aggregate over the cached grams feeds BOTH the owner
       // table and the batch's distinct-fp set (pushdown probe, broadcast
       // semi, new-fp anti) — the separate .distinct() ran a second full
@@ -162,47 +155,21 @@ object Substrings {
         .persist()
       graft.ops.CacheRegistry.register(owners)
       val batchFps = owners.select(col("fp"))
-      // history grams hit by this batch: batch fps broadcast into the
-      // scan — and pushed as `fp IN` when the batch's gram set is small
-      // enough (trigger-sized batches), so fp-sorted files group-skip
-      // persisted across its two consumers (losing + the new-fp
-      // anti-join) — recomputing would re-run the probed scan; released
-      // after the state write
-      val seen = (if (!hasIndex) batchFps.limit(0) else {
-        val base = Dedup.readEpochState(spark, statePath, batchFps.schema)
-          .filter(col("epoch") < epoch)
-        val prefiltered = Dedup.pushableKeys(batchFps) match {
-          case Some(vals) => base.filter(col("fp").isin(vals: _*))
-          case None => base
+      val covered = new StateFamily(batch.sparkSession, indexDir.stripSuffix("/") + "/gram_state",
+          batchFps.schema, Dedup.FpState)
+        .probeAppend(batchFps, epoch) { seen =>
+          // an occurrence loses its text when its gram is history-owned,
+          // or batch-duplicated with a smaller-id owner
+          val losing = grams.join(
+              owners.select(col("fp"), col("owner"),
+                (col("owner") =!= col("__mx")).as("__batch_dup")), "fp")
+            .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
+            .filter(col("__hist").isNotNull ||
+              (col("__batch_dup") && col("id") =!= col("owner")))
+          Dedup.materializeScratch(indexDir, "gram_covered", epoch, losing
+            .select(col("id"), explode(sequence(col("pos"), col("pos") + (k - 1))).as("t"))
+            .distinct())
         }
-        prefiltered
-          .join(broadcast(batchFps), Seq("fp"), "left_semi")
-          .select(col("fp")).distinct()
-      }).persist()
-      // an occurrence loses its text when its gram is history-owned, or
-      // batch-duplicated with a smaller-id owner
-      val losing = grams.join(
-          owners.select(col("fp"), col("owner"),
-            (col("owner") =!= col("__mx")).as("__batch_dup")), "fp")
-        .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
-        .filter(col("__hist").isNotNull ||
-          (col("__batch_dup") && col("id") =!= col("owner")))
-      val coveredLazy = losing
-        .select(col("id"), explode(sequence(col("pos"), col("pos") + (k - 1))).as("t"))
-        .distinct()
-      val covered = Dedup.materializeScratch(indexDir, "gram_covered", epoch, coveredLazy)
-      val newFps = batchFps.join(seen, Seq("fp"), "left_anti").persist()
-      graft.ops.CacheRegistry.register(newFps)
-      val outFiles = graft.ops.Layout.sizedFileCount(newFps.count())
-      newFps.withColumn("epoch", lit(epoch)).coalesce(outFiles)
-        // fp-sorted + fp bloom (epoch leads or partitionBy's writer
-        // re-sorts) — novel-gram triggers skip groups via the bloom
-        .sortWithinPartitions(col("epoch"), col("fp"))
-        .write.mode("append")
-        .options(Dedup.fpBloomOptions("fp"))
-        .partitionBy("epoch").parquet(statePath)
-      // seen is fully consumed (covered scratch + newFps cache)
-      seen.unpersist(blocking = false)
       val toks = batch.select(col(idCol).as("id"),
         posexplode(TextAnalysis.wordTokens(col(textCol))).as(Seq("t", "tok")))
       // one exploded-token pass for totals AND kept rows (the batch

@@ -529,7 +529,7 @@ object TextAnalysis {
     * q170). Text is tokenized once in its arrival batch; every re-score
     * touches only Heaps-bounded count triplets, and `compactEvery` folds
     * settled epochs into one summed generation (additive ⇒
-    * decision-neutral) exactly like [[driftStateCompact]].
+    * decision-neutral) exactly like [[unigramDriftStreaming]]'s.
     *
     * Returns the snapshots read back from `outDir`:
     * (batch_id, id, n_tok, avg_logp, kept).
@@ -550,8 +550,9 @@ object TextAnalysis {
         .agg(sum(when(col("term").isNotNull, 1L).otherwise(0L)).as("c"))
         .persist()
       graft.ops.CacheRegistry.register(bt)
-      EpochStream.appendEpoch(bt, stateDir, batchId)
-      val cum = EpochStream.settled(bt, stateDir, batchId).unionByName(bt)
+      val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+      state.append(bt, batchId)
+      val cum = state.settled(batchId).unionByName(bt)
         .groupBy(col("id"), col("term")).agg(sum(col("c")).as("c"))
         .persist()
       graft.ops.CacheRegistry.register(cum)
@@ -559,8 +560,7 @@ object TextAnalysis {
         cum.filter(col("term").isNotNull), cum.select(col("id")).distinct())
       EpochStream.writeSnapshot(selectByQuantileFromScores(scored, q), outDir, batchId)
       if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        Dedup.compactEpochPartitions(bt.sparkSession, stateDir)(
-          _.groupBy(col("id"), col("term")).agg(sum(col("c")).as("c")))
+        state.compact(_.groupBy(col("id"), col("term")).agg(sum(col("c")).as("c")))
     }
 
   /** STREAMING quality-quantile selection against a generationally FROZEN
@@ -614,27 +614,31 @@ object TextAnalysis {
       graft.ops.CacheRegistry.register(tf)
       val tc = tf.filter(col("term").isNotNull)
         .groupBy(col("term")).agg(sum(col("c")).as("c"))
-      EpochStream.appendEpoch(tc, stateDir + "/terms", batchId)
+      val terms = new StateFamily(tc.sparkSession, stateDir + "/terms", tc.schema,
+        StateFamily.Stream)
+      terms.append(tc, batchId)
       val boundary = batchId % generationEvery == 0
       if (boundary) {
         // freeze generation g's model: batch 0 boots on its own counts,
         // later boundaries fold the settled (Heaps-bounded) term state
         val model =
           if (batchId == 0) tc.select(col("term"), col("c").as("ct"))
-          else EpochStream.settled(tc, stateDir + "/terms", batchId)
+          else terms.settled(batchId)
             .groupBy(col("term")).agg(sum(col("c")).as("ct"))
         model.withColumn("gen", lit(gen))
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("gen").parquet(stateDir + "/models")
       }
       val scored = frozenGenScoreFrame(tf, stateDir, gen)
+      val scores = new StateFamily(scored.sparkSession, stateDir + "/scores", scored.schema,
+        StateFamily.Stream)
       if (boundary) {
         // freeze generation g's cutoff over ARRIVAL scores: batch 0 over
         // its own (just computed against its own frozen model), later
         // generations over all settled scores — the amortized O(docs) read
         val cutSrc =
           if (batchId == 0) scored
-          else EpochStream.settled(scored, stateDir + "/scores", batchId)
+          else scores.settled(batchId)
         graft.ops.Percentiles.exactPercentiles(
             cutSrc.filter(col("avg_logp").isNotNull).withColumn("__g", lit(1)),
             "__g", "avg_logp", Seq(q), Seq("c"))
@@ -645,9 +649,7 @@ object TextAnalysis {
       }
       val verdicts = frozenGenVerdicts(scored, stateDir, gen).persist()
       graft.ops.CacheRegistry.register(verdicts)
-      EpochStream.appendEpoch(
-        verdicts.select(col("id"), col("n_tok"), col("avg_logp")),
-        stateDir + "/scores", batchId)
+      scores.append(verdicts.select(col("id"), col("n_tok"), col("avg_logp")), batchId)
       EpochStream.writeSnapshot(verdicts, outDir, batchId)
     }
   }
@@ -770,34 +772,20 @@ object TextAnalysis {
     * At scale only count triplets ever land in state — text is read once
     * in its arrival batch and never again — and `compactEvery` bounds the
     * STATE LIFECYCLE too: every N batches the settled epochs fold into
-    * one summed generation ([[driftStateCompact]]), so the per-trigger
+    * one summed generation ([[StateFamily.compact]]), so the per-trigger
     * state read is generations + live epochs, not one partition per
     * micro-batch ever streamed.
     *
     * Returns the drift snapshots read back from `outDir`:
     * (batch_id, source, n_tok, kl).
+    *
+    * The fold (GROUP BY source, term, SUM(c)) is decision-neutral by
+    * construction because counts are ADDITIVE: every cumulative blend
+    * computed over compacted state equals the raw-epoch sum cell-for-cell
+    * (LlmSpec proves snapshot equality across two generations). The newest
+    * epoch stays live — an at-least-once re-run replaces its own
+    * partition, and folding it would double-count that batch.
     */
-  /** Fold the drift monitor's SETTLED count-triplet epochs (everything
-    * strictly below the newest) into one summed sentinel generation — the
-    * lifecycle verb that keeps [[unigramDriftStreaming]]'s per-batch state
-    * read bounded by generations + live epochs instead of growing one
-    * partition per micro-batch forever (a year of hourly batches would
-    * otherwise rescan ~8,760 vocabulary-sized partitions every trigger).
-    * Counts are ADDITIVE, so the fold (GROUP BY source, term, SUM(c)) is
-    * decision-neutral by construction: every cumulative blend computed
-    * over compacted state equals the raw-epoch sum cell-for-cell (LlmSpec
-    * proves snapshot equality across two generations). The newest epoch
-    * stays live — an at-least-once re-run replaces its own partition, and
-    * folding it would double-count that batch after the re-run. Shares
-    * [[Dedup.compactEpochPartitions]]'s staged-rename-then-delete crash
-    * ordering: at every intermediate point the state is a superset whose
-    * re-aggregation gives the same sums.
-    */
-  def driftStateCompact(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Unit =
-    Dedup.compactEpochPartitions(spark, stateDir)(
-      _.groupBy(col("source"), col("term")).agg(sum(col("c")).as("c")))
-
   def unigramDriftStreaming(spark: org.apache.spark.sql.SparkSession, stagedDir: String,
       schema: org.apache.spark.sql.types.StructType, srcCol: String, textCol: String,
       stateDir: String, outDir: String,
@@ -811,8 +799,9 @@ object TextAnalysis {
         .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
         .persist()
       graft.ops.CacheRegistry.register(bt)
-      EpochStream.appendEpoch(bt, stateDir, batchId)
-      val cum = EpochStream.settled(bt, stateDir, batchId).unionByName(bt)
+      val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+      state.append(bt, batchId)
+      val cum = state.settled(batchId).unionByName(bt)
         .groupBy(col("source"), col("term")).agg(sum(col("c")).as("c"))
         .persist()
       graft.ops.CacheRegistry.register(cum)
@@ -822,7 +811,7 @@ object TextAnalysis {
       // at-least-once re-run of this batch), and the fold is additive,
       // so every later batch's cumulative read is value-identical
       if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        driftStateCompact(bt.sparkSession, stateDir)
+        state.compact(_.groupBy(col("source"), col("term")).agg(sum(col("c")).as("c")))
     }
 
   /** The Gopher document-quality rule bundle (Rae et al. 2021 §A1.1.2, the

@@ -153,30 +153,32 @@ object RowIndex {
     // plan-stats estimate was tried first and measured unsafe (q69's
     // 594k-row counts frame estimated 4.1 MB and took the single-task
     // path, +19%; estimates above aggregates can't size their output).
-    val in = df.withColumn(valCol, coalesce(value.cast("long"), lit(0L)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.register(in)
-    val rows = in.count()
     // Dimension-sized fast path (count unpinned only): on one sorted
     // partition the local running sum IS the global prefix sum — no
     // range exchange, no boundary sampling, no offsets job. The cap is
     // deliberately a row COUNT, not bytes: it bounds the single task's
     // sort exactly. Cluster deployments can raise/lower it via conf.
-    val fastCap = spark.conf.getOption("spark.graft.runningTotal.fastPathMaxRows")
-      .map(_.toLong).getOrElse(65536L)
+    val fastCap = graft.GraftConf.longConf(spark,
+      "spark.graft.runningTotal.fastPathMaxRows", 65536L)
+    val in = df.withColumn(valCol, coalesce(value.cast("long"), lit(0L)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = in.count()
     val (ranged, offsetSeq) =
       if (numPartitions == 0 && rows <= fastCap) {
-        // narrow lineage over the cached input — no second persist needed
+        // narrow lineage over the cached input — no second persist needed;
+        // registered only on this path, the one that leaves it cached (a
+        // registered slot the distributed path frees by hand below would
+        // still push a live cache out of the registry)
+        CacheRegistry.register(in)
         (in.coalesce(1).sortWithinPartitions(order: _*)
           .withColumn(pidCol, spark_partition_id()),
           Seq.empty[(Int, Long)])
       } else {
-        val out = rangedWithOffsets(in, order, numPartitions,
-          coalesce(sum(col(valCol)), lit(0L)))
-        // the offsets job just materialized the ranged cache; every later
+        // the offsets job materializes the ranged cache; every later
         // consumer reads it, so the input cache has served its purpose
-        in.unpersist(blocking = false)
-        out
+        // (freed on a throw too: no registry slot would reclaim it)
+        try rangedWithOffsets(in, order, numPartitions, coalesce(sum(col(valCol)), lit(0L)))
+        finally in.unpersist(blocking = false)
       }
     val bc = spark.sparkContext.broadcast(offsetSeq.toMap)
 

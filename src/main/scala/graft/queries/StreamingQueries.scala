@@ -244,7 +244,7 @@ object StreamingQueries {
       "q73_stream_dedup",
       """SELECT DISTINCT user_id, date_trunc('hour', ts) AS hr
         |FROM events ORDER BY user_id, hr""".stripMargin) { (s, d) =>
-      Events.dedupStreaming(s, d).orderBy(col("user_id"), col("hr"))
+      Events.watermarkDedupStreaming(s, d).orderBy(col("user_id"), col("hr"))
     },
 
     // Stream-stream join (watermarked both sides, event-time range

@@ -158,16 +158,8 @@ object Events {
     * setting out of the caller's session — no global mutation, no race with
     * concurrent queries.
     */
-  private def withStateParts[T](spark: SparkSession, n: Int)(build: SparkSession => T): T = {
-    val s2 = spark.newSession()
-    // newSession() rebuilds SQLConf from the context's SparkConf, dropping
-    // the runtime-set semantics confs (ANSI off, ns-as-long, …) — without
-    // re-tuning, streaming queries would silently run ANSI-ON under any
-    // harness that set those confs at runtime only
-    graft.GraftConf.tune(s2)
-    s2.conf.set("spark.sql.shuffle.partitions", n.toString)
-    build(s2)
-  }
+  private def withStateParts[T](spark: SparkSession, n: Int)(build: SparkSession => T): T =
+    build(graft.GraftConf.cloneSession(spark, n))
 
   /** Stream-stream join with event-time range condition — clicks joined
     * to the same user's purchases within the following hour. Both sides
@@ -241,7 +233,7 @@ object Events {
     * Key = (user_id, hour bucket); output is the distinct key set, which
     * is deterministic (which event survives per key is not).
     */
-  def dedupStreaming(spark: SparkSession, sfDir: String,
+  def watermarkDedupStreaming(spark: SparkSession, sfDir: String,
       stateParts: Int = 0): DataFrame =
     withStateParts(spark, resolveStateParts(sfDir, stateParts)) { s2 =>
     val name = s"graft_events_dedup_${counter.incrementAndGet()}"

@@ -92,7 +92,7 @@ object ProbeScale {
     }
     copyDir(dir, snap)
 
-    // stripBands: remove the bands LAYOUT MARKER -> the directory reads
+    // stripBands: remove the bands family STAMP -> the directory reads
     // as the retired layout, which the probe ignores and writers leave
     // alone (no self-healing backfill inside the timed pass) — the
     // derive-from-state fallback IS the old full-scan layout (same
@@ -104,7 +104,7 @@ object ProbeScale {
         copyDir(snap, dir)
         if (stripBands)
           java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(dir, "bands", "_GRAFT_BANDS_LAYOUT"))
+            java.nio.file.Paths.get(dir, "bands", graft.llm.StateFamily.StampFile))
         val t0 = System.nanoTime()
         // accurate variant: parquet vectored IO bypasses FS statistics
         // (footer-only counts) — see InputBytesMeter's scaladoc

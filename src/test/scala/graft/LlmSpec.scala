@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.llm.{Dedup, Multimodal, Similarity, StateFamily, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** North-star operator behavior: dedup families, similarity search,
@@ -165,10 +165,11 @@ class LlmSpec extends SparkSpec {
         corpus.filter(pmod(col("doc_id"), lit(6)) === e), "doc_id", "text", dir, 0.5,
         epoch = e).collect()
     val bandsPath = dir + "/bands"
-    // the layout tag landed before the data (readers must never see
-    // band files they cannot interpret)
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(bandsPath, "_GRAFT_BANDS_LAYOUT")))
+    // the family stamp (layout tag first) landed with the data (readers
+    // must never see band files they cannot interpret)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(bandsPath, StateFamily.StampFile)), "UTF-8")
+      .startsWith("bk-v1\n"))
     // the backfill landed every deferred epoch (no sig-derive debt left)
     import scala.jdk.CollectionConverters._
     val bandEpochs = java.nio.file.Files.list(java.nio.file.Paths.get(bandsPath))
@@ -186,7 +187,8 @@ class LlmSpec extends SparkSpec {
     val someKeys = spark.read.parquet(bandsPath)
       .filter(col("epoch").cast("long").isin(4L, 5L)).select(col("bk"))
       .limit(3).collect().map(_.getLong(0)).toSeq
-    val probe = Dedup.probeBands(spark, bandsPath, schema, Seq(4L, 5L), someKeys)
+    val bands = new StateFamily(spark, bandsPath, StructType(schema.init), Dedup.BandsLayout)
+    val probe = Dedup.probeBands(bands, Seq(4L, 5L), someKeys)
     val scan = probe.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
@@ -214,7 +216,7 @@ class LlmSpec extends SparkSpec {
     def readBytes(keys: Seq[Long]): Long =
       graft.ops.InputBytesMeter.measureWithAccurateParquetIO(spark) {
         spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-        Dedup.probeBands(spark, bandsPath, schema, Seq(4L, 5L), keys)
+        Dedup.probeBands(bands, Seq(4L, 5L), keys)
           .write.format("noop").mode("overwrite").save()
       }._2
     val hitBytes = readBytes(someKeys)
@@ -565,7 +567,7 @@ class LlmSpec extends SparkSpec {
       epoch = b).collect()
     inc(0)
     // a holder's lease (as left by a concurrent increment or compaction)
-    val lock = new org.apache.hadoop.fs.Path(dir + "/" + Dedup.IndexLockFile)
+    val lock = new org.apache.hadoop.fs.Path(dir + "/" + StateFamily.LockFile)
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(lock), "lease not released after a successful increment")
     fs.create(lock, false).close()
@@ -589,12 +591,12 @@ class LlmSpec extends SparkSpec {
   test("index lease: a stale holder's lease is stolen by exactly one of two racers") {
     val dir = java.nio.file.Files.createTempDirectory("graft_inc_steal_").toString
     // plant a lease from a "crashed" holder and age it past the TTL
-    val lock = new org.apache.hadoop.fs.Path(dir + "/" + Dedup.IndexLockFile)
+    val lock = new org.apache.hadoop.fs.Path(dir + "/" + StateFamily.LockFile)
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(lock.getParent)
     fs.create(lock, false).close()
     java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(dir, Dedup.IndexLockFile),
+      java.nio.file.Paths.get(dir, StateFamily.LockFile),
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000))
     // TTL must be small enough that the PLANTED 60s-old lease is stale,
     // but large enough that the WINNER's fresh lease cannot also age past
@@ -614,7 +616,7 @@ class LlmSpec extends SparkSpec {
         pool.submit(new java.util.concurrent.Callable[Either[Throwable, String]] {
           def call() = {
             barrier.await()
-            try Right(Dedup.withIndexLock(spark, dir, s"racer$i") {
+            try Right(StateFamily.withLease(spark, dir, s"racer$i") {
               latch.await(30, java.util.concurrent.TimeUnit.SECONDS); s"won$i"
             }) catch { case e: Throwable => Left(e) }
           }
@@ -641,7 +643,7 @@ class LlmSpec extends SparkSpec {
       }
       // the winner released; a fresh holder can acquire again
       assert(!fs.exists(lock), "lease not released after the stolen run")
-      assert(Dedup.withIndexLock(spark, dir, "after") { 42 } === 42)
+      assert(StateFamily.withLease(spark, dir, "after") { 42 } === 42)
     } finally spark.conf.unset("spark.graft.index.leaseTtlMs")
   }
 
@@ -742,7 +744,7 @@ class LlmSpec extends SparkSpec {
     Files.copy(parts.head, epochDir.resolve("part-torn-retry.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     Files.deleteIfExists(Paths.get(crashed, "state", "_SUCCESS"))
-    val lock = Paths.get(crashed, Dedup.IndexLockFile)
+    val lock = Paths.get(crashed, StateFamily.LockFile)
     Files.createFile(lock)
     java.nio.file.Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000))

@@ -152,6 +152,37 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
+
+  test("withRunningTotal: a malformed fast-path cap names its conf key") {
+    import graft.ops.RowIndex
+    val key = "spark.graft.runningTotal.fastPathMaxRows"
+    spark.conf.set(key, "64k")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        RowIndex.withRunningTotal(Seq((1L, 2L)).toDF("k", "v"), "rt", col("v"), Seq(col("k")))
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("64k"), e.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
+  test("withRunningTotal's distributed path leaves no dead registry slot to evict a live cache") {
+    import graft.ops.{CacheRegistry, RowIndex}
+    import org.apache.spark.storage.StorageLevel
+    CacheRegistry.releaseAll()
+    // 7 live operator caches + the distributed path's own ranged cache
+    // fill the 8 slots exactly; registering the input it unpersists by
+    // hand would push the oldest live cache out
+    val live = (1 to 7).map { i =>
+      val df = spark.range(i * 10L).toDF("x").persist()
+      df.count()
+      CacheRegistry.register(df)
+    }
+    val df = Seq.tabulate(200)(i => (i.toLong, i.toLong)).toDF("k", "v")
+    RowIndex.withRunningTotal(df, "rt", col("v"), Seq(col("k")), numPartitions = 4).count()
+    assert(live.forall(_.storageLevel != StorageLevel.NONE),
+      "a live registered cache was evicted by the unpersisted input's slot")
+    CacheRegistry.releaseAll()
+  }
   test("packSequences: contiguous bins, budget arithmetic, zero-token docs") {
     import graft.llm.Packing
     val df = Seq((0L, 300L), (1L, 300L), (2L, 0L), (3L, 500L), (4L, 1200L))

@@ -98,9 +98,16 @@ object Bench {
       System.gc(); System.gc()
       Thread.sleep(100)
     }
-    val passes = (1 to nPasses).map { _ =>
-      defs.map { q => barrier(); q.name -> runOnce(q.name, q.fn) }.toMap
-    }
+    // generated classes Janino compiled per pass: a warm pass that still
+    // compiles missed Spark's codegen cache (a session-private classloader,
+    // or eviction from the cache's fixed number of entries)
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (passes, passCompiles) = (1 to nPasses).map { _ =>
+      val c0 = compiles()
+      val times = defs.map { q => barrier(); q.name -> runOnce(q.name, q.fn) }.toMap
+      (times, compiles() - c0)
+    }.unzip
     def median(ts: Seq[Double]): Double = {
       val s = ts.sorted
       if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
@@ -140,9 +147,13 @@ object Bench {
     def namesJson(short: Boolean): String = failed
       .map(n => "\"" + (if (short && shortOk) n.takeWhile(_ != '_') else n) + "\"")
       .mkString("[", ",", "]")
+    // median compile count of the warm passes (-1 with a single pass)
+    val warmCompiles = passCompiles.drop(1).map(_.toDouble)
+    val codegenCompiles = if (warmCompiles.isEmpty) -1.0 else median(warmCompiles)
     val runJson = s""""n_failed":${failed.length},"cpus_applied":$cpus,""" +
       s""""master":"${spark.sparkContext.master}",""" +
-      s""""default_parallelism":${spark.sparkContext.defaultParallelism}"""
+      s""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
+      s""""codegen_compiles":$codegenCompiles"""
     val totalMedian = r4(medians.map(_._2).filter(_ >= 0).sum)
 
     // Micro-benchmarks matching the reference's own published workload

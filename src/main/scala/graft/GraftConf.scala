@@ -35,6 +35,16 @@ object GraftConf {
     // on this engine's hot paths.)
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    // Spark keys its codegen cache by (classloader, source). With artifact
+    // isolation on, every session — each cloneSession clone and the clone
+    // every stream start makes — runs its tasks under its own executor
+    // classloader, so each streaming operator call recompiled its
+    // generated classes (q158: 62-70 of ~90 per call). Graft adds no
+    // session artifacts, so its sessions share the default loader and the
+    // compiled classes. Spark reads the flag at a session's first SQL
+    // execution: cloneSession tunes a clone before it runs anything, and a
+    // stream's clone copies this conf.
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
   }
 
   /** A Long-valued session conf: `default` when unset; a malformed value
@@ -53,7 +63,8 @@ object GraftConf {
     * operator sizes its own shuffles without mutating the caller's
     * session. newSession() rebuilds SQLConf from the context's SparkConf,
     * DROPPING the runtime-set semantics confs (ANSI off, ns-as-long, …) —
-    * they are re-applied here.
+    * they are re-applied here, before the clone runs anything (the
+    * artifact-isolation flag in [[tune]] is read at the first execution).
     */
   def cloneSession(spark: SparkSession, shufflePartitions: Int): SparkSession = {
     val s2 = spark.newSession()

@@ -138,8 +138,11 @@ object Classify {
       compactEvery: Int = 0,
       snapshotEvery: Int = 1): DataFrame = {
     require(snapshotEvery >= 1, s"snapshot cadence must be >= 1: $snapshotEvery")
+    val modelSchema = new org.apache.spark.sql.types.StructType()
+      .add("label", schema(labelCol).dataType)
+      .add("bucket", "bigint").add("w_u", "bigint").add("prior_u", "bigint")
     EpochStream.run(spark, stagedDir, schema, checkpointDir,
-        shufflePartitions, outDir) { (batch, batchId) =>
+        shufflePartitions, outDir, modelSchema) { (batch, batchId) =>
       val tok = batch.select(col(labelCol).as("label"),
           explode(TextAnalysis.wordTokens(col(textCol))).as("term"))
         .select(col("label"), featureBucket(col("term"), buckets).as("bucket"))

@@ -928,12 +928,12 @@ object Dedup {
       schema: org.apache.spark.sql.types.StructType, idCol: String, textCol: String,
       indexDir: String, outDir: String, threshold: Double,
       checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame = {
-    EpochStream.drain(spark, stagedDir, schema, checkpointDir, shufflePartitions) {
+    EpochStream.run(spark, stagedDir, schema, checkpointDir, shufflePartitions, outDir,
+        keepFlagsSchema(schema(idCol).dataType)) {
       (batch, batchId) => EpochStream.writeSnapshot(
         nearDedupIncrement(batch, idCol, textCol, indexDir, threshold, epoch = batchId),
         outDir, batchId)
     }
-    keepFlags(spark, outDir, schema(idCol).dataType)
   }
 
   /** STREAMING exact dedup — [[exactDedupIncrement]] drained one
@@ -949,28 +949,17 @@ object Dedup {
       schema: org.apache.spark.sql.types.StructType, idCol: String, fpCol: Column,
       indexDir: String, outDir: String,
       checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame = {
-    EpochStream.drain(spark, stagedDir, schema, checkpointDir, shufflePartitions) {
+    EpochStream.run(spark, stagedDir, schema, checkpointDir, shufflePartitions, outDir,
+        keepFlagsSchema(LongType)) {
       (batch, batchId) => EpochStream.writeSnapshot(
         exactDedupIncrement(batch, idCol, fpCol, indexDir, epoch = batchId), outDir, batchId)
     }
-    keepFlags(spark, outDir, LongType)
   }
 
-  /** The streaming dedup result (id, kept, batch_id), read back typed: an
-    * empty source never creates `outDir`, and all-zero-row batches leave
-    * it with only `_SUCCESS` — both read as the empty result.
-    */
-  private def keepFlags(spark: org.apache.spark.sql.SparkSession, outDir: String,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val schema = StructType(Seq(StructField("id", idType),
-      StructField("kept", org.apache.spark.sql.types.BooleanType),
-      StructField("batch_id", LongType, nullable = false)))
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    if (graft.ops.Layout.hasParquetData(
-        out.getFileSystem(spark.sparkContext.hadoopConfiguration), out))
-      spark.read.schema(schema).parquet(outDir)
-    else spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-  }
+  /** The streaming dedup snapshot schema: (id, kept) per streamed doc. */
+  private def keepFlagsSchema(idType: org.apache.spark.sql.types.DataType): StructType =
+    StructType(Seq(StructField("id", idType),
+      StructField("kept", org.apache.spark.sql.types.BooleanType)))
 
   /** Compact the near-dedup signature index (the Delta-OPTIMIZE verb of
     * this table's lifecycle): rewrite every SETTLED epoch — everything

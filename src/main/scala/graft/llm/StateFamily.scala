@@ -410,8 +410,10 @@ private[llm] object EpochStream {
     * the staged source (`shufflePartitions <= 0` = auto — a fixed small
     * count makes every per-batch aggregate run the whole scaled increment
     * through that many partitions; measured superlinear at the 100×
-    * replay fixture). AQE is disabled inside streaming queries, so this
-    * sizing is the only one the batch aggregates get.
+    * replay fixture). The `body`'s queries run with AQE on, so the size
+    * is the shuffle partition count AQE starts from before it coalesces.
+    * (On Events' stateful queries the same clone setting also fixes the
+    * state-store count; this stream keeps no state.)
     */
   def drain(spark: SparkSession, stagedDir: String, schema: StructType,
       checkpointDir: Option[String], shufflePartitions: Int)(
@@ -426,14 +428,21 @@ private[llm] object EpochStream {
     try q.processAllAvailable() finally q.stop()
   }
 
-  /** [[drain]], then the parquet read-back of the snapshots `body` wrote
-    * to `outDir`, on the CALLER's session.
+  /** [[drain]], then the snapshots `body` wrote to `outDir` read back on
+    * the CALLER's session as `snapshotSchema` plus `batch_id BIGINT`.
+    * The typed read needs no footer-inference job, and a stream that
+    * wrote no row (no `outDir`, or only `_SUCCESS` in it) reads as the
+    * empty result instead of throwing.
     */
   def run(spark: SparkSession, stagedDir: String, schema: StructType,
-      checkpointDir: Option[String], shufflePartitions: Int, outDir: String)(
-      body: (DataFrame, Long) => Unit): DataFrame = {
+      checkpointDir: Option[String], shufflePartitions: Int, outDir: String,
+      snapshotSchema: StructType)(body: (DataFrame, Long) => Unit): DataFrame = {
     drain(spark, stagedDir, schema, checkpointDir, shufflePartitions)(body)
-    spark.read.parquet(outDir)
+    val typed = snapshotSchema.add(StructField("batch_id", LongType))
+    val out = new Path(outDir)
+    if (Layout.hasParquetData(out.getFileSystem(spark.sparkContext.hadoopConfiguration), out))
+      spark.read.schema(typed).parquet(outDir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), typed)
   }
 
   /** Per-batch snapshot write, idempotent under at-least-once re-runs

@@ -541,7 +541,7 @@ object TextAnalysis {
       shufflePartitions: Int = 0,
       compactEvery: Int = 0): org.apache.spark.sql.DataFrame =
     EpochStream.run(spark, stagedDir, schema, checkpointDir,
-        shufflePartitions, outDir) { (batch, batchId) =>
+        shufflePartitions, outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
       // explode_outer keeps zero-token docs as a NULL-term sentinel
       // (c = 0): they must appear in every snapshot with kept = false
       val bt = batch.select(col(idCol).as("id"),
@@ -608,7 +608,7 @@ object TextAnalysis {
     require(q > 0 && q < 1, s"quantile must be in (0,1): $q")
     require(generationEvery >= 1, s"generation width must be >= 1: $generationEvery")
     EpochStream.run(spark, stagedDir, schema, checkpointDir,
-        shufflePartitions, outDir) { (batch, batchId) =>
+        shufflePartitions, outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
       val gen = batchId / generationEvery
       val tf = batchTermCounts(batch, idCol, textCol).persist()
       graft.ops.CacheRegistry.register(tf)
@@ -653,6 +653,11 @@ object TextAnalysis {
       EpochStream.writeSnapshot(verdicts, outDir, batchId)
     }
   }
+
+  /** The quality-quantile snapshot schema: (id, n_tok, avg_logp, kept). */
+  private def verdictSchema(idType: org.apache.spark.sql.types.DataType) =
+    new org.apache.spark.sql.types.StructType().add("id", idType)
+      .add("n_tok", "bigint").add("avg_logp", "double").add("kept", "boolean")
 
   /** The batch's `(id, term, c)` count triplets with a NULL-term sentinel
     * (c = 0) per zero-token document, so those stay in the id universe.
@@ -792,8 +797,9 @@ object TextAnalysis {
       checkpointDir: Option[String] = None,
       shufflePartitions: Int = 0,
       compactEvery: Int = 0): org.apache.spark.sql.DataFrame =
-    EpochStream.run(spark, stagedDir, schema, checkpointDir,
-        shufflePartitions, outDir) { (batch, batchId) =>
+    EpochStream.run(spark, stagedDir, schema, checkpointDir, shufflePartitions, outDir,
+        new org.apache.spark.sql.types.StructType().add("source", schema(srcCol).dataType)
+          .add("n_tok", "bigint").add("kl", "double")) { (batch, batchId) =>
       val bt = batch.select(col(srcCol).as("source"),
           explode(wordTokens(col(textCol))).as("term"))
         .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))

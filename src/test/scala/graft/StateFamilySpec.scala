@@ -74,6 +74,18 @@ class StateFamilySpec extends SparkSpec {
     graft.ops.Layout.deleteRecursively(Paths.get(base))
   }
 
+  test("a streaming operator whose stream wrote no snapshot returns its typed empty result") {
+    val base = java.nio.file.Files.createTempDirectory("graft_family_nostream_")
+    val staged = java.nio.file.Files.createDirectories(base.resolve("staged")).toString
+    val schema = StructType(Seq(StructField("source", StringType), StructField("text", StringType)))
+    val out = TextAnalysis.unigramDriftStreaming(spark, staged, schema, "source", "text",
+      s"$base/state", s"$base/out")
+    assert(out.collect().isEmpty)
+    assert(out.schema.map(f => f.name -> f.dataType) === Seq("source" -> StringType,
+      "n_tok" -> LongType, "kl" -> DoubleType, "batch_id" -> LongType))
+    graft.ops.Layout.deleteRecursively(base)
+  }
+
   test("stamp: unstamped data throws, or opens retired under a retired-tolerant layout") {
     val path = tmp("unstamped")
     val df = Seq((1L, "x")).toDF("k", "v")

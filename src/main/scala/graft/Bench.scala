@@ -10,28 +10,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER / SPARK_GRAFT_EXEC_CP / SPARK_GRAFT_EXEC_MEM:
-    // same cross-JVM overrides as Verify (local-cluster smoke) — the
-    // single-JVM default is unchanged when unset.
-    val builder0 = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-bench")
-      // shuffle partitions default to the core count but scale with SF
-      // via SPARK_GRAFT_SHUFFLE_PARTITIONS: a partition COUNT pinned at
-      // 32 makes per-partition sort state grow linearly with data and
-      // spill (the q206 sf100 knee) — the knob a real cluster turns.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "1g"))
-      .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_EXEC_CP")
-      .fold(builder0)(cp => builder0.config("spark.executor.extraClassPath", cp))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val settings = GraftConf.sessionSettings(sys.env)
+    val spark = GraftConf.session("graft-bench", settings)
 
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -67,20 +47,13 @@ object Bench {
     // steal outliers, while the warm median shows the typical cost and is
     // robust to a single spike, so round-over-round drift analysis has
     // both a floor and a central tendency to compare.
-    val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
+    val nPasses = GraftConf.positiveInt(sys.env, "SPARK_GRAFT_BENCH_PASSES").getOrElse(5)
     // optional comma-separated name filter (scaling-curve subset runs at
     // sf1/sf10 time a budgeted query list instead of all 140); accepted
     // as the env var or as the first CLI arg — a filter passed where the
     // tool doesn't look must not silently time the whole suite
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .orElse(args.headOption)
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names.filterNot(n => SparkEntry.allDefs.exists(_.name == n))
-      require(unknown.isEmpty, s"unknown bench query names: ${unknown.mkString(", ")}")
-    }
-    val defs = SparkEntry.allDefs.filter(q => only.forall(_.contains(q.name)))
+    val defs = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY").orElse(args.headOption)
+      .toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))
     // ISOLATION mode (SPARK_GRAFT_BENCH_ISOLATE=gc, default none): before
     // each query, drop every cached relation (operator-internal persists
     // AND cross-query shared tables) and run a GC barrier, so a query's
@@ -150,7 +123,7 @@ object Bench {
     // median compile count of the warm passes (-1 with a single pass)
     val warmCompiles = passCompiles.drop(1).map(_.toDouble)
     val codegenCompiles = if (warmCompiles.isEmpty) -1.0 else median(warmCompiles)
-    val runJson = s""""n_failed":${failed.length},"cpus_applied":$cpus,""" +
+    val runJson = s""""n_failed":${failed.length},"cpus_applied":${settings.cpus},""" +
       s""""master":"${spark.sparkContext.master}",""" +
       s""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
       s""""codegen_compiles":$codegenCompiles"""

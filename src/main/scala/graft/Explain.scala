@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: prints the formatted physical plan for the
-  * named queries (args = query names, or "all").
+  * named queries (args = query names, or "all"; none means all).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val wanted = if (args.isEmpty || args.contains("all")) SparkEntry.allDefs.map(_.name)
-    else args.toSeq
-    SparkEntry.allDefs.filter(q => wanted.contains(q.name)).foreach { q =>
+    val spark = GraftConf.session("graft-explain")
+    val defs = if (args.contains("all")) SparkEntry.allDefs else SparkEntry.select(args.toSeq)
+    defs.foreach { q =>
       println(s"\n========== ${q.name} ==========")
       try q.fn(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }

@@ -7,6 +7,52 @@ import org.apache.spark.sql.SparkSession
   * sessions (the driver's Verify session).
   */
 object GraftConf {
+  /** What a graft main's session is built with; see [[sessionSettings]]. */
+  final case class SessionSettings(master: String, cpus: Int, shufflePartitions: Int,
+      executorMemory: String, executorClassPath: Option[String])
+
+  /** The only reader of the session env vars: SPARK_GRAFT_CPUS (default:
+    * the JVM's available processors), SPARK_GRAFT_MASTER (default
+    * `local[cpus]`; `local-cluster[n,c,mb]` runs real executor JVMs),
+    * SPARK_GRAFT_SHUFFLE_PARTITIONS (default cpus; the knob that scales
+    * with data, so per-partition sort state does not grow with SF),
+    * SPARK_GRAFT_EXEC_MEM (default 1g) and SPARK_GRAFT_EXEC_CP (executor
+    * classpath, when set; sbt's target dir is not on Spark's own).
+    */
+  def sessionSettings(env: Map[String, String]): SessionSettings = {
+    val cpus = positiveInt(env, "SPARK_GRAFT_CPUS")
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    SessionSettings(
+      master = env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+      cpus = cpus,
+      shufflePartitions = positiveInt(env, "SPARK_GRAFT_SHUFFLE_PARTITIONS").getOrElse(cpus),
+      executorMemory = env.getOrElse("SPARK_GRAFT_EXEC_MEM", "1g"),
+      executorClassPath = env.get("SPARK_GRAFT_EXEC_CP"))
+  }
+
+  /** A positive Int env var, None when unset; a malformed or non-positive
+    * value throws naming the variable.
+    */
+  def positiveInt(env: Map[String, String], key: String): Option[Int] =
+    env.get(key).map(v => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$key must be a positive int, got: '$v'")))
+
+  /** The session every graft main starts with: [[sessionSettings]] applied,
+    * UI off, log level WARN, then [[tune]].
+    */
+  def session(appName: String,
+      settings: SessionSettings = sessionSettings(sys.env)): SparkSession = {
+    val b = SparkSession.builder().master(settings.master).appName(appName)
+      .config("spark.sql.shuffle.partitions", settings.shufflePartitions.toString)
+      .config("spark.executor.memory", settings.executorMemory)
+      .config("spark.ui.enabled", "false")
+    val spark = settings.executorClassPath
+      .fold(b)(cp => b.config("spark.executor.extraClassPath", cp)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
+    spark
+  }
+
   def tune(spark: SparkSession): Unit = {
     // minarrow masked semantics: div/rem by zero → NULL, overflow wraps
     // (src/enums/operators.rs:27-29; std.rs:41 WrappingAdd bounds) — that is

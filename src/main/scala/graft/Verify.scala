@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,35 +6,16 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name filter for fast
-    // iteration (driver always runs the full set)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the
-    // cross-JVM smoke runs the SAME dump under local-cluster[n,c,mem]
-    // (real separate executor JVMs), proving broadcasts, codegen
-    // reference objects, custom SparkPlans and typed aggregators
-    // survive executor serialization, not just driver-local state.
-    // SPARK_GRAFT_EXEC_CP adds the compiled classes to the executor
-    // classpath (sbt's target dir isn't on Spark's own).
-    val builder0 = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "1g"))
-      .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_EXEC_CP")
-      .fold(builder0)(cp => builder0.config("spark.executor.extraClassPath", cp))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // iteration (no filter runs the full set); unknown names throw
+    val defs = SparkEntry.select(
+      args.drop(2).toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))
+    val spark = GraftConf.session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    defs.foreach { d =>
+      try d.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${d.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,8 +30,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = defs.flatMap(d => d.oracle.map(sql => s"${q(d.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

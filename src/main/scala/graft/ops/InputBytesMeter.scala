@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Single-measurement-at-a-time by contract: the listener sees every
   * task on the SparkContext, so concurrent unrelated jobs would pollute
-  * the count (fine in tools/specs, the only intended callers).
+  * the count (fine in specs, the only callers).
   */
 object InputBytesMeter {
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hot join keys.
   *
-  * WHEN TO PREFER WHICH (measured, tools/SkewCompare at sf10 — 60M fact
-  * rows, synthetic hot key): for a sort-merge equi-join, AQE's runtime
+  * WHEN TO PREFER WHICH (measured at sf10 — 60M fact rows, synthetic hot
+  * key; PLANS.md "Round-15: q143 skew record"): for a sort-merge equi-join, AQE's runtime
   * skew split beats explicit salting OUTRIGHT — at a 60%-hot key, AQE
   * skew-join 4.4 s vs salted 13.9 s vs naive 18.0 s; at 30%-hot, AQE
   * 9.8 s vs salted 12.6 s vs naive 10.3 s. Salting pays an

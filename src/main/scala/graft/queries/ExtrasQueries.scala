@@ -507,8 +507,9 @@ object ExtrasQueries {
       // overlap the three per-partition rewrite jobs (guide §2.6): at this
       // partition count one job's quantile/sample/write stages cannot keep
       // local[32] busy — the bounded pool backfills the idle tail. Content
-      // is identical to the serial form (tools/OptConcurrency xor-hash
-      // cross-check; the oracle re-proves it every run); scratch bound
+      // is identical to the serial form (xor-hash cross-check, PLANS.md
+      // "Round-15: concurrent optimizePartitioned measured": 3.84× at 4
+      // in flight; the oracle re-proves it every run); scratch bound
       // becomes 3 × partition, still O(k · partition).
       ZOrder.optimizePartitioned(s, dir, "l_returnflag",
         Seq("l_partkey", "l_suppkey"), filesPerPartition = 8,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerate the frozen BPE merge artifact
   * (src/main/resources/graft/bpe_merges.tsv) from a fixture directory —
   * training is deterministic, so re-running on the same fixture must
@@ -16,11 +14,7 @@ object GenBpe {
     val n = if (args.length > 1) args(1).toInt else 40
     val out = if (args.length > 2) args(2)
       else "src/main/resources/graft/bpe_merges.tsv"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftConf.session("graft-genbpe")
     val merges = graft.llm.Bpe.trainMerges(
       graft.Tables.documents(spark, src), "text", n)
     val body = merges.map { case (a, b) => s"$a\t$b" }.mkString("", "\n", "\n")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for scaling smokes: replicates a test-data SF
@@ -32,12 +32,7 @@ object GenScale {
     // range (sf10's ids span ~100·1e9, so sf10→sf100 uses 1e12) — the
     // default stride would collide replica keys with existing ones.
     val off = if (args.length > 3) args(3).toLong else OFF
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftConf.session("graft-genscale")
 
     def replicate(table: String, keyCols: Seq[String],
         mutate: (DataFrame, Int) => DataFrame = (df, _) => df): Unit = {
@@ -49,7 +44,7 @@ object GenScale {
         shifted
       }
       parts.reduce(_ unionByName _)
-        .repartition(32)
+        .repartition(32) // output layout (32 files a table), not parallelism
         .write.mode("overwrite").parquet(s"$out/$table.parquet")
       println(s"$table: ${spark.read.parquet(s"$out/$table.parquet").count()} rows")
     }

@@ -2,6 +2,7 @@ package graft
 
 import graft.llm.Similarity
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Negative tests for the gate's self-check guard columns (VERDICT r7 item
   * #3): the rows-only queries now emit their spec invariants as boolean
@@ -87,5 +88,28 @@ class GuardSpec extends SparkSpec {
     }.flatten.toSeq
     val dups = ids.groupBy(identity).collect { case (id, xs) if xs.size > 1 => id }
     assert(dups.isEmpty, s"duplicate OPERATORS.md component IDs: ${dups.toSeq.sorted}")
+  }
+
+  test("src/main builds sessions only in GraftConf (and SessionBridge's extension session)") {
+    val allowed = Set("GraftConf.scala", "ColumnBridge.scala")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sites = try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p.getFileName.toString))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("SparkSession.builder") => s"$p:${i + 1}"
+        }
+      }.toList
+    finally files.close()
+    assert(sites.isEmpty, s"SparkSession.builder outside GraftConf.session: ${sites.mkString(", ")}")
+  }
+
+  test("SparkEntry.select keeps registry order and rejects unknown names, listing them") {
+    val names = SparkEntry.allDefs.map(_.name)
+    assert(SparkEntry.select(Seq.empty).map(_.name) === names)
+    assert(SparkEntry.select(Seq(names(2), names(0))).map(_.name) === Seq(names(0), names(2)))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq(names.head, "q14_typo", "nope")))
+    assert(e.getMessage.contains("q14_typo, nope"), e.getMessage)
   }
 }

@@ -165,6 +165,42 @@ class ScaleSpec extends SparkSpec {
     } finally spark.conf.unset(key)
   }
 
+  test("session settings default to the machine's cores and 1g executors") {
+    val cores = Runtime.getRuntime.availableProcessors
+    assert(GraftConf.sessionSettings(Map.empty) ===
+      GraftConf.SessionSettings(s"local[$cores]", cores, cores, "1g", None))
+  }
+
+  test("each session env var overrides its setting") {
+    def settings(kv: (String, String)*) = GraftConf.sessionSettings(kv.toMap)
+    assert(settings("SPARK_GRAFT_CPUS" -> "3") ===
+      GraftConf.SessionSettings("local[3]", 3, 3, "1g", None))
+    assert(settings("SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "7").shufflePartitions === 7)
+    assert(settings("SPARK_GRAFT_EXEC_MEM" -> "6g").executorMemory === "6g")
+    assert(settings("SPARK_GRAFT_EXEC_CP" -> "/x/classes").executorClassPath === Some("/x/classes"))
+    assert(settings("SPARK_GRAFT_MASTER" -> "local-cluster[2,4,1024]").master ===
+      "local-cluster[2,4,1024]")
+  }
+
+  test("SPARK_GRAFT_MASTER beats SPARK_GRAFT_CPUS, which still sizes the shuffles") {
+    val s = GraftConf.sessionSettings(
+      Map("SPARK_GRAFT_MASTER" -> "local[2]", "SPARK_GRAFT_CPUS" -> "8"))
+    assert((s.master, s.cpus, s.shufflePartitions) === (("local[2]", 8, 8)))
+  }
+
+  test("a malformed or zero count env var throws naming the variable") {
+    for {
+      key <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      bad <- Seq("abc", "0")
+    } {
+      val e = intercept[IllegalArgumentException](GraftConf.sessionSettings(Map(key -> bad)))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](
+      GraftConf.positiveInt(Map("SPARK_GRAFT_BENCH_PASSES" -> "x"), "SPARK_GRAFT_BENCH_PASSES"))
+    assert(e.getMessage.contains("SPARK_GRAFT_BENCH_PASSES"), e.getMessage)
+  }
+
   test("withRunningTotal's distributed path leaves no dead registry slot to evict a live cache") {
     import graft.ops.{CacheRegistry, RowIndex}
     import org.apache.spark.storage.StorageLevel

@@ -54,31 +54,15 @@ object Bench {
     // tool doesn't look must not silently time the whole suite
     val defs = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY").orElse(args.headOption)
       .toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))
-    // ISOLATION mode (SPARK_GRAFT_BENCH_ISOLATE=gc, default none): before
-    // each query, drop every cached relation (operator-internal persists
-    // AND cross-query shared tables) and run a GC barrier, so a query's
-    // number reflects ITS OWN cost — not page-cache/heap pollution from
-    // the index-lifecycle neighbors (the q69 2.34-vs-1.01 s effect) and
-    // not a warm cache a predecessor happened to leave behind. The
-    // recorded JSON names the mode, so round-over-round comparisons never
-    // mix isolated and shared-session numbers.
-    val isolate = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "none")
-    require(isolate == "none" || isolate == "gc",
-      s"SPARK_GRAFT_BENCH_ISOLATE must be none|gc, got: $isolate")
-    def barrier(): Unit = if (isolate == "gc") {
-      graft.ops.CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      System.gc(); System.gc()
-      Thread.sleep(100)
-    }
     // generated classes Janino compiled per pass: a warm pass that still
     // compiles missed Spark's codegen cache (a session-private classloader,
     // or eviction from the cache's fixed number of entries)
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val evictions0 = graft.ops.CacheRegistry.evictions
     val (passes, passCompiles) = (1 to nPasses).map { _ =>
       val c0 = compiles()
-      val times = defs.map { q => barrier(); q.name -> runOnce(q.name, q.fn) }.toMap
+      val times = defs.map(q => q.name -> runOnce(q.name, q.fn)).toMap
       (times, compiles() - c0)
     }.unzip
     def median(ts: Seq[Double]): Double = {
@@ -93,6 +77,8 @@ object Bench {
       val warm = passes.drop(1).map(_(q.name)).filter(_ >= 0)
       q.name -> (if (warm.isEmpty) -1.0 else median(warm))
     }
+    // operator caches the registry unpersisted for capacity over all passes
+    val cacheEvictions = graft.ops.CacheRegistry.evictions - evictions0
     val calAfter = calibrate()
     // The driver captures only the TAIL of stdout (2000 chars): rounds 1,
     // 2, 4 and 5 all lost the head of the JSON line to that cap ("parsed":
@@ -126,7 +112,7 @@ object Bench {
     val runJson = s""""n_failed":${failed.length},"cpus_applied":${settings.cpus},""" +
       s""""master":"${spark.sparkContext.master}",""" +
       s""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""codegen_compiles":$codegenCompiles"""
+      s""""codegen_compiles":$codegenCompiles,"cache_evictions":$cacheEvictions"""
     val totalMedian = r4(medians.map(_._2).filter(_ >= 0).sum)
 
     // Micro-benchmarks matching the reference's own published workload
@@ -147,7 +133,7 @@ object Bench {
     // stdout: the driver contract line, sized to fit the 2000-char tail cap
     val stdoutLine =
       s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,""" +
-      s""""calibration_sec":$calJson,"passes":$nPasses,"isolation":"$isolate","sf":"$sfDir",""" +
+      s""""calibration_sec":$calJson,"passes":$nPasses,"sf":"$sfDir",""" +
       s""""queries":${mapJson(results, short = true)},""" +
       // run facts LAST: a reader that keeps only the line's tail (see the
       // 2000-char note above) still gets them when the head is clipped
@@ -159,7 +145,7 @@ object Bench {
     // goes to the committed file
     val fileLine =
       s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,""" +
-      s""""calibration_sec":$calJson,"passes":$nPasses,"isolation":"$isolate",""" +
+      s""""calibration_sec":$calJson,"passes":$nPasses,""" +
       s"""$runJson,"failed":${namesJson(short = false)},""" +
       s""""queries":${mapJson(results, short = false)},""" +
       s""""medians":${mapJson(medians, short = false)},""" +

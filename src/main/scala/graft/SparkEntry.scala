@@ -30,10 +30,4 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(q => q.name -> q.fn).toMap
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] =
-    allDefs.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -58,11 +58,9 @@ object Classify {
     // totals + the dense-grid join), and without the cache each
     // evaluation re-runs the tokenization pass over the corpus. The frame
     // is ≤ |labels| × buckets rows — trivially cacheable.
-    val counts = toks
+    val counts = graft.ops.CacheRegistry.persist(toks
       .select(col("label"), featureBucket(col("term"), buckets).as("bucket"))
-      .groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.ops.CacheRegistry.register(counts)
+      .groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("c")))
     val docs = df.groupBy(col(labelCol).as("label")).agg(count(lit(1)).as("nd"))
     nbModelFromCounts(counts, docs, buckets, alpha)
   }
@@ -150,22 +148,21 @@ object Classify {
       val docRows = batch.groupBy(col(labelCol).as("label"))
         .agg(count(lit(1)).as("c")).withColumn("bucket", lit(-1L))
         .select(col("label"), col("bucket"), col("c"))
-      val bt = tok.unionByName(docRows).persist()
-      graft.ops.CacheRegistry.register(bt)
-      val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
-      state.append(bt, batchId)
-      if ((batchId + 1) % snapshotEvery == 0) {
-        val cum = state.settled(batchId).unionByName(bt)
-          .groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c"))
-          .persist()
-        graft.ops.CacheRegistry.register(cum)
-        EpochStream.writeSnapshot(nbModelFromCounts(
-            cum.filter(col("bucket") >= 0),
-            cum.filter(col("bucket") === -1L).select(col("label"), col("c").as("nd")),
-            buckets, alpha), outDir, batchId)
+      graft.ops.CacheRegistry.during(tok.unionByName(docRows)) { bt =>
+        val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+        state.append(bt, batchId)
+        if ((batchId + 1) % snapshotEvery == 0) {
+          graft.ops.CacheRegistry.during(state.settled(batchId).unionByName(bt)
+              .groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c"))) { cum =>
+            EpochStream.writeSnapshot(nbModelFromCounts(
+                cum.filter(col("bucket") >= 0),
+                cum.filter(col("bucket") === -1L).select(col("label"), col("c").as("nd")),
+                buckets, alpha), outDir, batchId)
+          }
+        }
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          state.compact(_.groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c")))
       }
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        state.compact(_.groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c")))
     }
   }
 

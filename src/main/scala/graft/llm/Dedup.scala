@@ -73,11 +73,10 @@ object Dedup {
     // persisted: consumed twice (banding below + shingle re-attach for
     // verification) — without the cache the shingle/minhash kernels would
     // re-scan the full corpus a second time. CacheRegistry bounds the pin.
-    val withSig = graft.ops.CacheRegistry.register(df.select(
+    val withSig = graft.ops.CacheRegistry.persist(df.select(
       col(idCol).as("id"),
       shingles(col(textCol)).as("sh"),
-      minHashSignature(col(textCol), 3, bands * rowsPerBand).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      minHashSignature(col(textCol), 3, bands * rowsPerBand).as("sig")))
     val banded = withSig.select(
       col("id"), col("sh"),
       explode(array((0 until bands).map(b =>
@@ -219,8 +218,7 @@ object Dedup {
     */
   def minHashLshPairsPortable(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
-    val tok = portableTok(df, idCol, textCol).persist()
-    graft.ops.CacheRegistry.register(tok)
+    val tok = graft.ops.CacheRegistry.persist(portableTok(df, idCol, textCol))
     val cand = bandSelfCands(portableBands(tok)).distinct()
     val t1 = tok.select(col("id").as("id1"), col("toks").as("toks1"))
     val t2 = tok.select(col("id").as("id2"), col("toks").as("toks2"))
@@ -325,8 +323,7 @@ object Dedup {
     */
   private[graft] def portableHashedPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
-    val state = portableState(df, idCol, textCol).persist()
-    graft.ops.CacheRegistry.register(state)
+    val state = graft.ops.CacheRegistry.persist(portableState(df, idCol, textCol))
     val cand = bandSelfCands(stateBands(state)).distinct()
     // hint = false: both sides here are the WHOLE corpus — forcing a
     // broadcast would cap the global twin at driver memory
@@ -513,24 +510,24 @@ object Dedup {
       // the raised In threshold must cover the ACTIONS below (pushdown
       // conversion happens at physical planning, not plan construction)
       withPushedInThreshold(batch.sparkSession) {
-      val fps = batch.select(col(idCol).cast("long").as("id"), fpCol.cast("string").as("fp"))
-        .persist()
-      graft.ops.CacheRegistry.register(fps)
-      val batchFps = fps.select(col("fp")).filter(col("fp").isNotNull).distinct()
-      val dropped = new StateFamily(batch.sparkSession, indexDir.stripSuffix("/") + "/exact_state",
-          batchFps.schema, FpState)
-        .probeAppend(batchFps, epoch) { seen =>
-          val batchMin = fps.filter(col("fp").isNotNull)
-            .groupBy(col("fp")).agg(min(col("id")).as("keep_id"))
-          // materialized INSIDE the lease to epoch-scoped scratch parquet
-          // (bounded by the batch, but storage-backed — nothing data-sized
-          // crosses to the driver), and BEFORE the append — the result must
-          // not re-read index files a compaction could later rewrite
-          materializeScratch(indexDir, "exact_dropped", epoch, fps.join(batchMin, "fp")
-            .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
-            .filter(col("id") =!= col("keep_id") || col("__hist").isNotNull)
-            .select(col("id")))
-        }
+      val dropped = graft.ops.CacheRegistry.during(
+          batch.select(col(idCol).cast("long").as("id"), fpCol.cast("string").as("fp"))) { fps =>
+        val batchFps = fps.select(col("fp")).filter(col("fp").isNotNull).distinct()
+        new StateFamily(batch.sparkSession, indexDir.stripSuffix("/") + "/exact_state",
+            batchFps.schema, FpState)
+          .probeAppend(batchFps, epoch) { seen =>
+            val batchMin = fps.filter(col("fp").isNotNull)
+              .groupBy(col("fp")).agg(min(col("id")).as("keep_id"))
+            // materialized INSIDE the lease to epoch-scoped scratch parquet
+            // (bounded by the batch, but storage-backed — nothing data-sized
+            // crosses to the driver), and BEFORE the append — the result must
+            // not re-read index files a compaction could later rewrite
+            materializeScratch(indexDir, "exact_dropped", epoch, fps.join(batchMin, "fp")
+              .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
+              .filter(col("id") =!= col("keep_id") || col("__hist").isNotNull)
+              .select(col("id")))
+          }
+      }
       batch.select(col(idCol).cast("long").as("id"))
         .join(broadcast(dropped.withColumn("__dropped", lit(true))), Seq("id"), "left")
         .select(col("id"), col("__dropped").isNull.as("kept"))
@@ -711,8 +708,9 @@ object Dedup {
       indexDir: String, threshold: Double, epoch: Long): DataFrame = {
     val spark = batch.sparkSession
     withPushedInThreshold(spark) {
-    val state = portableState(batch, idCol, textCol).persist()
-    graft.ops.CacheRegistry.register(state)
+    // the batch's state rows are read by this call's verify, counts and
+    // appends; the returned frame reads only the batch and the scratch
+    graft.ops.CacheRegistry.during(portableState(batch, idCol, textCol)) { state =>
     val bands = stateBands(state)
     val bandRows = bands.withColumn("bk", bandKey)
     val keys = Seq("band", "v0", "v1", "v2", "v3")
@@ -753,8 +751,28 @@ object Dedup {
     // one listing, shared by the read-path gate and the band-write
     // deferral below
     val fsStateEpochs = stateFam.epochs.filter(_ < epoch)
-    val (cand, histHs, probeCache) =
-      if (!hasIndex) (candNew.distinct(), None, None) else {
+    // the batch docs `cand` drops, verified against `histHs` (the
+    // candidates' historical hash sets)
+    def droppedFrom(cand: DataFrame, histHs: Option[DataFrame]): DataFrame = {
+      // the earlier side (id1) may be historical; the later (id2) is
+      // always a batch doc
+      val earlier = histHs match {
+        case None => state.select(col("id"), col("hs"))
+        case Some(h) => state.select(col("id"), col("hs")).unionByName(h)
+      }
+      // materialized INSIDE the lease to epoch-scoped scratch parquet: the
+      // returned frame then reads only the batch and these files, never the
+      // index files — so a compaction after this call returns cannot yank
+      // partitions out of a caller's still-lazy result plan (a cache
+      // would not guarantee that: cache eviction recomputes from files;
+      // a collect() would but puts the batch-sized set in driver RAM).
+      materializeScratch(indexDir, "near_dropped", epoch,
+        verifyPairs(cand, earlier, state.select(col("id"), col("hs")), threshold,
+            hintBroadcast = true)
+          .select(col("id2").as("id")).distinct())
+    }
+    val dropped =
+      if (!hasIndex) droppedFrom(candNew.distinct(), None) else {
       val fsBandEpochs = bandsFam.epochs.filter(_ < epoch)
       if (!probeGate(fsStateEpochs)) {
         // SHALLOW history: the probe's extra driver round trips (bucket
@@ -769,8 +787,8 @@ object Dedup {
           .select((keys.map(col) :+ col("id").as("id1")): _*)
           .join(broadcast(bands.select((keys.map(col) :+ col("id").as("id2")): _*)), keys)
           .select(col("id1"), col("id2"))
-        (candNew.unionByName(crossCand).distinct(),
-          Some(i.select(col("id"), col("hs"))), None)
+        droppedFrom(candNew.unionByName(crossCand).distinct(),
+          Some(i.select(col("id"), col("hs"))))
       } else {
       // the batch's band-key hash set: a bounded driver pass (≤ 4 keys
       // per batch doc). Band epochs are ROUTED (probed via the bk bloom
@@ -790,62 +808,40 @@ object Dedup {
       val legacy = if (legacyEpochs.isEmpty) None else Some(
         stateBandsKeepEpoch(stateFam.read.filter(col("epoch").isin(legacyEpochs: _*))))
       val histBands = (routed.toSeq ++ legacy.toSeq).reduce(_ unionByName _)
-      val crossCand = histBands
+      // cached for this call, RELEASED after the scratch materialization
+      // (the rebuildBandsFromState pattern) — never registered: a
+      // registered cache over state/bands index files can outlive the
+      // next compaction's rewrite of those files, and CacheManager
+      // substitutes the stale relation into a later matching plan
+      // (FILE_NOT_EXIST on the deleted partitions)
+      graft.ops.CacheRegistry.during(histBands
         .select((keys.map(col) :+ col("id").as("id1") :+ col("epoch")): _*)
         .join(broadcast(bands.select((keys.map(col) :+ col("id").as("id2")): _*)), keys)
-        .select(col("id1"), col("id2"), col("epoch"))
-        .persist()
-      // intra-call persist, RELEASED after the scratch materialization
-      // below (the rebuildBandsFromState pattern) — NOT CacheRegistry-
-      // registered: a registered cache over state/bands index files can
-      // outlive the next compaction's rewrite of those files, and
-      // CacheManager substitutes the stale relation into a later
-      // matching plan (FILE_NOT_EXIST on the deleted partitions)
-      // hs fetch pruned on BOTH axes from one bounded collect over the
-      // cached candidate frame: epoch partition pruning (only epochs
-      // that produced candidates) AND a pushed `id IN (candidate ids)`
-      // — state files are written id-sorted with small pages, so the
-      // column-index skips every page holding no candidate. This is
-      // what keeps the verify side O(candidates) against a FOLDED
-      // sentinel epoch, where partition pruning alone would re-read the
-      // whole settled corpus's hash sets. The id set is bounded by the
-      // same increment ≪ index contract that lets candidates broadcast;
-      // past the pushdown cap the filter still applies post-scan.
-      val hits = crossCand.select(col("id1"), col("epoch")).distinct()
-        .collect()
-      val hitEpochs = hits.map(_.getLong(1)).distinct.toSeq
-      val hitIds = hits.map(_.getLong(0)).distinct.toSeq
-      val idFilter =
-        if (hitIds.size <= MaxPushedInValues) col("id").isin(hitIds: _*)
-        else lit(true) // saturated set: epoch pruning only (see cap doc)
-      val hist = if (hitEpochs.isEmpty) None else Some(
-        stateFam.read.filter(col("epoch").isin(hitEpochs: _*) && idFilter)
-          .select(col("id"), col("hs")))
-      (candNew.unionByName(crossCand.drop("epoch")).distinct(), hist,
-        Some(crossCand))
+        .select(col("id1"), col("id2"), col("epoch"))) { crossCand =>
+        // hs fetch pruned on BOTH axes from one bounded collect over the
+        // cached candidate frame: epoch partition pruning (only epochs
+        // that produced candidates) AND a pushed `id IN (candidate ids)`
+        // — state files are written id-sorted with small pages, so the
+        // column-index skips every page holding no candidate. This is
+        // what keeps the verify side O(candidates) against a FOLDED
+        // sentinel epoch, where partition pruning alone would re-read the
+        // whole settled corpus's hash sets. The id set is bounded by the
+        // same increment ≪ index contract that lets candidates broadcast;
+        // past the pushdown cap the filter still applies post-scan.
+        val hits = crossCand.select(col("id1"), col("epoch")).distinct()
+          .collect()
+        val hitEpochs = hits.map(_.getLong(1)).distinct.toSeq
+        val hitIds = hits.map(_.getLong(0)).distinct.toSeq
+        val idFilter =
+          if (hitIds.size <= MaxPushedInValues) col("id").isin(hitIds: _*)
+          else lit(true) // saturated set: epoch pruning only (see cap doc)
+        val hist = if (hitEpochs.isEmpty) None else Some(
+          stateFam.read.filter(col("epoch").isin(hitEpochs: _*) && idFilter)
+            .select(col("id"), col("hs")))
+        droppedFrom(candNew.unionByName(crossCand.drop("epoch")).distinct(), hist)
+      }
       }
     }
-
-    // the earlier side (id1) may be historical; the later (id2) is
-    // always a batch doc
-    val earlier = histHs match {
-      case None => state.select(col("id"), col("hs"))
-      case Some(h) => state.select(col("id"), col("hs")).unionByName(h)
-    }
-    // materialized INSIDE the lease to epoch-scoped scratch parquet: the
-    // returned frame then reads only the batch and these files, never the
-    // index files — so a compaction after this call returns cannot yank
-    // partitions out of a caller's still-lazy result plan (a persist()
-    // would not guarantee that: cache eviction recomputes from files;
-    // a collect() would but puts the batch-sized set in driver RAM).
-    val droppedLazy = verifyPairs(cand, earlier, state.select(col("id"), col("hs")), threshold,
-        hintBroadcast = true)
-      .select(col("id2").as("id")).distinct()
-    // the probe's candidate cache is fully consumed by this
-    // materialization — release it here, not at session teardown
-    val dropped =
-      try materializeScratch(indexDir, "near_dropped", epoch, droppedLazy)
-      finally probeCache.foreach(_.unpersist(blocking = false))
 
     // append THIS batch's state under its epoch partition (eager, before
     // the caller acts on the lazy result — safe under epoch isolation).
@@ -891,6 +887,7 @@ object Dedup {
     batch.select(col(idCol).as("id"))
       .join(broadcast(dropped.withColumn("__dropped", lit(true))), Seq("id"), "left")
       .select(col("id"), col("__dropped").isNull.as("kept"))
+    }
     }
   }
 
@@ -1014,10 +1011,10 @@ object Dedup {
       epochs: Seq[Long]): Unit = if (epochs.nonEmpty) {
     // sig columns only — persisting full-width state would cache the
     // fat hs arrays a band derivation never reads
-    val st = sigColumns(state.read.filter(col("epoch").isin(epochs: _*))).persist()
-    try bands.land(stateBandsKeepEpoch(st).withColumn("bk", bandKey),
-      graft.ops.Layout.sizedFileCount(st.count() * 4L), epochs)
-    finally st.unpersist(blocking = false)
+    graft.ops.CacheRegistry.during(sigColumns(state.read.filter(col("epoch").isin(epochs: _*)))) {
+      st => bands.land(stateBandsKeepEpoch(st).withColumn("bk", bandKey),
+        graft.ops.Layout.sizedFileCount(st.count() * 4L), epochs)
+    }
   }
 
   /** Rebuild the band routing family wholesale from the (just-compacted)
@@ -1035,16 +1032,16 @@ object Dedup {
     StateFamily.stamped(spark, indexDir.stripSuffix("/") + "/state", NearState) match {
       case None => StateFamily.drop(spark, bandsPath)
       case Some(state) =>
-        // persist is strictly intra-call (count + write) and must be
-        // RELEASED here, not registered: a registered cache over state
-        // files outlives the NEXT compaction's rewrite of those files, and
-        // CacheManager substitutes the stale relation into any later
-        // matching plan (FILE_NOT_EXIST on the deleted sentinel)
-        val rows = stateBandsKeepEpoch(sigColumns(state.read)).withColumn("bk", bandKey)
-          .persist()
-        try new StateFamily(spark, bandsPath, StructType(rows.schema.filterNot(_.name == "epoch")),
+        // the cache is strictly intra-call (count + write), never
+        // registered: a registered cache over state files outlives the
+        // NEXT compaction's rewrite of those files, and CacheManager
+        // substitutes the stale relation into any later matching plan
+        // (FILE_NOT_EXIST on the deleted sentinel)
+        graft.ops.CacheRegistry.during(
+            stateBandsKeepEpoch(sigColumns(state.read)).withColumn("bk", bandKey)) { rows =>
+          new StateFamily(spark, bandsPath, StructType(rows.schema.filterNot(_.name == "epoch")),
             BandsLayout).replace(rows, graft.ops.Layout.sizedFileCount(rows.count()))
-        finally rows.unpersist(blocking = false)
+        }
     }
   }
 
@@ -1063,9 +1060,8 @@ object Dedup {
       threshold: Double, n: Int = 3, maxDocFreq: Double = 1.0): DataFrame = {
     // the shingle kernel feeds three consumers (doc-freq guard, the
     // inverted index, and sizes) — materialize it once
-    val tok = df.select(col(idCol).as("id"), shingles(col(textCol), n).as("toks"))
-      .persist()
-    graft.ops.CacheRegistry.register(tok)
+    val tok = graft.ops.CacheRegistry.persist(
+      df.select(col(idCol).as("id"), shingles(col(textCol), n).as("toks")))
     ngramJaccardPairsFromToks(tok, threshold, maxDocFreq)
   }
 
@@ -1093,9 +1089,8 @@ object Dedup {
       val keep =
         if (maxDocFreq >= 1.0) freq.select(col("w"))
         else freq.filter(col("df") <= maxDocFreq * tok.count()).select(col("w"))
-      val dict = graft.ops.RowIndex.withRowIndex(keep, "__wid", Seq(col("w")))
-        .persist()
-      graft.ops.CacheRegistry.register(dict)
+      val dict = graft.ops.CacheRegistry.persist(
+        graft.ops.RowIndex.withRowIndex(keep, "__wid", Seq(col("w"))))
       inv0.join(dict, "w").select(col("id"), col("__wid").as("w"))
     }
     val sizes = tok.select(col("id"), size(col("toks")).as("n"))
@@ -1360,7 +1355,7 @@ object Dedup {
     }
     // the returned DataFrame is backed by the final cached label RDD —
     // callers can't unpersist it, so bound its lifetime in the registry
-    graft.ops.CacheRegistry.registerRdd(labels)
+    graft.ops.CacheRegistry.persist(labels)
     val out = spark.createDataFrame(
       labels.map { case (id, c) => org.apache.spark.sql.Row(id, c) },
       org.apache.spark.sql.types.StructType(Seq(

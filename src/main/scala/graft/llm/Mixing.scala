@@ -119,10 +119,9 @@ object Mixing {
     require(alpha > 0 && alpha <= 1, s"temperature alpha must be in (0,1]: $alpha")
     require(budgetTokens > 0, s"token budget must be positive: $budgetTokens")
     require(maxEpochs > 0, s"epoch cap must be positive: $maxEpochs")
-    val tot = df.groupBy(col(sourceCol).as("source"))
-      .agg(sum(col(tokenCol)).cast("long").as("n_tok"))
-      .persist() // |sources| rows; every round re-reads it
-    graft.ops.CacheRegistry.register(tot)
+    // |sources| rows; every round re-reads it
+    val tot = graft.ops.CacheRegistry.persist(df.groupBy(col(sourceCol).as("source"))
+      .agg(sum(col(tokenCol)).cast("long").as("n_tok")))
     // each round caps ≥1 source or is a fixpoint, so |sources| rounds are
     // EXACT for any input; iters ≤ 0 (the default) auto-sizes to that —
     // a fixed small round count would silently under-allocate when more
@@ -211,22 +210,19 @@ object Mixing {
     require(alpha > 0, s"smoothing alpha must be positive: $alpha")
     val toks = df.select(col(idCol).as("id"), targetPred.as("is_target"),
       explode(tokens(col(textCol))).as("term"))
-    val bc = toks
+    // both distributions and the scoring pass reuse the counts
+    val bc = graft.ops.CacheRegistry.persist(toks
       .select(col("id"), col("is_target"),
         (conv(substring(md5(col("term")), 1, 4), 16, 10).cast("long") % buckets).as("bucket"))
-      .groupBy(col("id"), col("is_target"), col("bucket")).agg(count(lit(1)).as("c"))
-      .persist() // both distributions and the scoring pass reuse the counts
-    graft.ops.CacheRegistry.register(bc)
+      .groupBy(col("id"), col("is_target"), col("bucket")).agg(count(lit(1)).as("c")))
     // ONE bucket-keyed aggregate carries both distributions (the old
     // tgt/cor/tTot/cTot quartet ran four separate passes over the cached
     // counts); the two grand totals re-aggregate the |buckets|-row frame,
     // not the counts. Conditional long sums are the same sums in the same
     // order per bucket — values identical.
-    val byBucket = bc.groupBy(col("bucket")).agg(
+    val byBucket = graft.ops.CacheRegistry.persist(bc.groupBy(col("bucket")).agg(
         sum(col("c")).as("cc"),
-        sum(when(col("is_target"), col("c"))).as("tc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.ops.CacheRegistry.register(byBucket)
+        sum(when(col("is_target"), col("c"))).as("tc")))
     val tots = byBucket.agg(sum(col("cc")).cast("double").as("ct"),
       sum(col("tc")).cast("double").as("tt"))
     val aB = alpha * buckets

@@ -226,16 +226,15 @@ object Similarity {
     */
   def ivfAppend(newVecs: DataFrame, centroids: Array[Array[Double]], indexDir: String,
       idCol: String = "id", vecCol: String = "vec"): Unit = {
-    val assigned = newVecs.select(col(idCol).as("id"), col(vecCol).as("vec"),
-        ivfCell(col(vecCol), centroids).as("cell"))
-      .persist()
-    graft.ops.CacheRegistry.register(assigned)
-    // size writer parallelism to the increment: a 32-way append of a
-    // small batch leaves up to 32 near-empty files PER CELL, and every
-    // later probe pays the per-file open cost
-    val outFiles = graft.ops.Layout.sizedFileCount(assigned.count())
-    assigned.coalesce(outFiles)
-      .write.mode("append").partitionBy("cell").parquet(indexDir)
+    graft.ops.CacheRegistry.during(newVecs.select(col(idCol).as("id"), col(vecCol).as("vec"),
+        ivfCell(col(vecCol), centroids).as("cell"))) { assigned =>
+      // size writer parallelism to the increment: a 32-way append of a
+      // small batch leaves up to 32 near-empty files PER CELL, and every
+      // later probe pays the per-file open cost
+      val outFiles = graft.ops.Layout.sizedFileCount(assigned.count())
+      assigned.coalesce(outFiles)
+        .write.mode("append").partitionBy("cell").parquet(indexDir)
+    }
   }
 
   // ----------------------------------------------------------------- PQ
@@ -522,11 +521,9 @@ object Similarity {
     */
   def semanticDedup(corpus: DataFrame, centroids: Array[Array[Double]],
       threshold: Double, idCol: String = "id", vecCol: String = "vec"): DataFrame = {
-    val assigned = corpus.select(col(idCol).as("id"),
+    val assigned = graft.ops.CacheRegistry.persist(corpus.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"),
-        ivfCell(col(vecCol), centroids).as("cell"))
-      .persist()
-    graft.ops.CacheRegistry.register(assigned)
+        ivfCell(col(vecCol), centroids).as("cell")))
     // Shuffle-shape note (measured, sf0.1): the within-cell pair count is
     // P = Σ|cell|² ≫ N, so the lshTopK pattern (id-only candidates, then
     // re-attach vectors by id) is WRONG here — it exchanges P pair rows

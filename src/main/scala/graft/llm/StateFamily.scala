@@ -137,19 +137,19 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
   def probeAppend[T](keys: DataFrame, epoch: Long)(consume: DataFrame => T): T = {
     require(layout.sortCols.nonEmpty, s"state family at $path: a probe needs a sort key")
     val k = layout.sortCols.head
-    // persisted across its two consumers (the caller's materialization and
+    // cached across its two consumers (the caller's materialization and
     // the fresh-key anti-join): recomputing would re-run the probed scan
-    val seen = (if (!exists) keys.limit(0) else {
+    CacheRegistry.during(if (!exists) keys.limit(0) else {
       val hist = settled(epoch)
       Dedup.pushableKeys(keys).fold(hist)(vs => hist.filter(col(k).isin(vs: _*)))
         .join(broadcast(keys), Seq(k), "left_semi").distinct()
-    }).persist()
-    val out = consume(seen)
-    val fresh = keys.join(seen, Seq(k), "left_anti").persist()
-    CacheRegistry.register(fresh)
-    append(fresh, epoch, Layout.sizedFileCount(fresh.count()))
-    seen.unpersist(blocking = false)
-    out
+    }) { seen =>
+      val out = consume(seen)
+      CacheRegistry.during(keys.join(seen, Seq(k), "left_anti")) { fresh =>
+        append(fresh, epoch, Layout.sizedFileCount(fresh.count()))
+      }
+      out
+    }
   }
 
   /** Fold every SETTLED epoch — all but the newest — through `fold` into
@@ -169,10 +169,12 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     val folded = fold(read.filter(col("epoch") < es.last).drop("epoch"))
     require(folded.schema.catalogString == dataSchema.catalogString,
       s"state family at $path: fold changed the schema to ${folded.schema.catalogString}")
-    val gen = folded.withColumn("epoch", lit(sentinel)).persist()
-    CacheRegistry.register(gen)
     val stage = path + ".__graft_compact_stage"
-    write(gen, Layout.sizedFileCount(gen.count()), stage, "overwrite", cluster = true)
+    // cached for this call's count and write only: a registered cache
+    // would outlive the folded epochs this call deletes
+    CacheRegistry.during(folded.withColumn("epoch", lit(sentinel))) { gen =>
+      write(gen, Layout.sizedFileCount(gen.count()), stage, "overwrite", cluster = true)
+    }
     // Hadoop rename signals most failures by returning FALSE — an unchecked
     // rename followed by the deletes is exactly the window this closes
     require(fs.rename(new Path(stage, s"epoch=$sentinel"), new Path(dir, s"epoch=$sentinel")),

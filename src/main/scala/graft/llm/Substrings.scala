@@ -76,8 +76,7 @@ object Substrings {
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8): DataFrame = {
     require(k >= 1, s"gram width must be positive: $k")
-    val grams = gramFingerprints(df, idCol, textCol, k).persist()
-    graft.ops.CacheRegistry.register(grams)
+    val grams = graft.ops.CacheRegistry.persist(gramFingerprints(df, idCol, textCol, k))
     // duplicated fp (>= 2 docs) with its canonical owner = min doc_id
     val owners = grams.groupBy(col("fp"))
       .agg(min(col("id")).as("owner"), max(col("id")).as("__mx"))
@@ -143,33 +142,35 @@ object Substrings {
         s"gram-span-increment epoch=$epoch") {
       Dedup.withPushedInThreshold(batch.sparkSession) {
       require(k >= 1, s"gram width must be positive: $k")
-      val grams = gramFingerprints(batch, idCol, textCol, k).persist()
-      graft.ops.CacheRegistry.register(grams)
-      // ONE fp-keyed aggregate over the cached grams feeds BOTH the owner
-      // table and the batch's distinct-fp set (pushdown probe, broadcast
-      // semi, new-fp anti) — the separate .distinct() ran a second full
-      // fp shuffle of the gram cache per increment. |distinct fps| rows,
-      // persisted, released with the other intra-call caches.
-      val owners = grams.groupBy(col("fp"))
-        .agg(min(col("id")).as("owner"), max(col("id")).as("__mx"))
-        .persist()
-      graft.ops.CacheRegistry.register(owners)
-      val batchFps = owners.select(col("fp"))
-      val covered = new StateFamily(batch.sparkSession, indexDir.stripSuffix("/") + "/gram_state",
-          batchFps.schema, Dedup.FpState)
-        .probeAppend(batchFps, epoch) { seen =>
-          // an occurrence loses its text when its gram is history-owned,
-          // or batch-duplicated with a smaller-id owner
-          val losing = grams.join(
-              owners.select(col("fp"), col("owner"),
-                (col("owner") =!= col("__mx")).as("__batch_dup")), "fp")
-            .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
-            .filter(col("__hist").isNotNull ||
-              (col("__batch_dup") && col("id") =!= col("owner")))
-          Dedup.materializeScratch(indexDir, "gram_covered", epoch, losing
-            .select(col("id"), explode(sequence(col("pos"), col("pos") + (k - 1))).as("t"))
-            .distinct())
+      // the grams and their owner table are read only by this call's
+      // probe and scratch materialization; the returned frame reads the
+      // materialized covered positions
+      val covered = graft.ops.CacheRegistry.during(
+          gramFingerprints(batch, idCol, textCol, k)) { grams =>
+        // ONE fp-keyed aggregate over the cached grams feeds BOTH the owner
+        // table and the batch's distinct-fp set (pushdown probe, broadcast
+        // semi, new-fp anti) — the separate .distinct() ran a second full
+        // fp shuffle of the gram cache per increment. |distinct fps| rows.
+        graft.ops.CacheRegistry.during(grams.groupBy(col("fp"))
+            .agg(min(col("id")).as("owner"), max(col("id")).as("__mx"))) { owners =>
+          val batchFps = owners.select(col("fp"))
+          new StateFamily(batch.sparkSession, indexDir.stripSuffix("/") + "/gram_state",
+              batchFps.schema, Dedup.FpState)
+            .probeAppend(batchFps, epoch) { seen =>
+              // an occurrence loses its text when its gram is history-owned,
+              // or batch-duplicated with a smaller-id owner
+              val losing = grams.join(
+                  owners.select(col("fp"), col("owner"),
+                    (col("owner") =!= col("__mx")).as("__batch_dup")), "fp")
+                .join(seen.withColumn("__hist", lit(true)), Seq("fp"), "left")
+                .filter(col("__hist").isNotNull ||
+                  (col("__batch_dup") && col("id") =!= col("owner")))
+              Dedup.materializeScratch(indexDir, "gram_covered", epoch, losing
+                .select(col("id"), explode(sequence(col("pos"), col("pos") + (k - 1))).as("t"))
+                .distinct())
+            }
         }
+      }
       val toks = batch.select(col(idCol).as("id"),
         posexplode(TextAnalysis.wordTokens(col(textCol))).as(Seq("t", "tok")))
       // one exploded-token pass for totals AND kept rows (the batch
@@ -194,8 +195,7 @@ object Substrings {
     require(k >= 1, s"gram width must be positive: $k")
     // one tokenize+hash pass feeds both the dup-fp aggregate and the
     // probe side (q105 persist pattern)
-    val grams = gramFingerprints(df, idCol, textCol, k).persist()
-    graft.ops.CacheRegistry.register(grams)
+    val grams = graft.ops.CacheRegistry.persist(gramFingerprints(df, idCol, textCol, k))
     val dupFps = grams.groupBy(col("fp"))
       .agg(min(col("id")).as("__mn"), max(col("id")).as("__mx"))
       .filter(col("__mn") =!= col("__mx"))

@@ -339,12 +339,10 @@ object TextAnalysis {
     val docFreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= lit(maxDocFreq * n))
     // weights persisted: the self-join consumes this lineage twice
-    val w = tf.join(docLen, "id").join(docFreq, "term")
+    val w = graft.ops.CacheRegistry.persist(tf.join(docLen, "id").join(docFreq, "term")
       .select(col("id"), col("term"),
         round((col("c").cast("double") / col("len")) * log(lit(n.toDouble) / col("df")), 9)
-          .as("w"))
-      .persist()
-    graft.ops.CacheRegistry.register(w)
+          .as("w")))
     val norms = w.groupBy(col("id")).agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     val a = w.select(col("id").as("id1"), col("term"), col("w").as("w1"))
     val b = w.select(col("id").as("id2"), col("term"), col("w").as("w2"))
@@ -379,9 +377,9 @@ object TextAnalysis {
       textCol: String,
       tokens: Column => Column = wordTokens): org.apache.spark.sql.DataFrame = {
     val terms = df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("term"))
-    val tf = terms.groupBy(col("id"), col("term")).agg(count(lit(1)).as("c"))
-      .persist() // model totals re-aggregate the counts; never re-tokenize
-    graft.ops.CacheRegistry.register(tf)
+    // model totals re-aggregate the counts; never re-tokenize
+    val tf = graft.ops.CacheRegistry.persist(
+      terms.groupBy(col("id"), col("term")).agg(count(lit(1)).as("c")))
     unigramLogProbFromCounts(tf, df.select(col(idCol).as("id")))
   }
 
@@ -450,10 +448,9 @@ object TextAnalysis {
         slice(col("ws"), lit(2), size(col("ws")) - 1),
         (a, b) => struct(a.as("prev"), b.as("cur")))).as("bg"))
       .select(col("id"), col("bg.prev").as("prev"), col("bg.cur").as("cur"))
-    val bf = pairRows.groupBy(col("id"), col("prev"), col("cur"))
-      .agg(count(lit(1)).as("c"))
-      .persist() // the bigram model and context totals re-aggregate these
-    graft.ops.CacheRegistry.register(bf)
+    // the bigram model and context totals re-aggregate these
+    val bf = graft.ops.CacheRegistry.persist(pairRows.groupBy(col("id"), col("prev"), col("cur"))
+      .agg(count(lit(1)).as("c")))
     val bgModel = bf.groupBy(col("prev"), col("cur")).agg(sum(col("c")).as("cb"))
     val ctxTot = bf.groupBy(col("prev")).agg(sum(col("c")).as("cp"))
     // NOTE (round-16 optimization attempt, REVERTED with measurements):
@@ -544,23 +541,21 @@ object TextAnalysis {
         shufflePartitions, outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
       // explode_outer keeps zero-token docs as a NULL-term sentinel
       // (c = 0): they must appear in every snapshot with kept = false
-      val bt = batch.select(col(idCol).as("id"),
+      graft.ops.CacheRegistry.during(batch.select(col(idCol).as("id"),
           explode_outer(wordTokens(col(textCol))).as("term"))
         .groupBy(col("id"), col("term"))
-        .agg(sum(when(col("term").isNotNull, 1L).otherwise(0L)).as("c"))
-        .persist()
-      graft.ops.CacheRegistry.register(bt)
-      val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
-      state.append(bt, batchId)
-      val cum = state.settled(batchId).unionByName(bt)
-        .groupBy(col("id"), col("term")).agg(sum(col("c")).as("c"))
-        .persist()
-      graft.ops.CacheRegistry.register(cum)
-      val scored = unigramLogProbFromCounts(
-        cum.filter(col("term").isNotNull), cum.select(col("id")).distinct())
-      EpochStream.writeSnapshot(selectByQuantileFromScores(scored, q), outDir, batchId)
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        state.compact(_.groupBy(col("id"), col("term")).agg(sum(col("c")).as("c")))
+        .agg(sum(when(col("term").isNotNull, 1L).otherwise(0L)).as("c"))) { bt =>
+        val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+        state.append(bt, batchId)
+        graft.ops.CacheRegistry.during(state.settled(batchId).unionByName(bt)
+            .groupBy(col("id"), col("term")).agg(sum(col("c")).as("c"))) { cum =>
+          val scored = unigramLogProbFromCounts(
+            cum.filter(col("term").isNotNull), cum.select(col("id")).distinct())
+          EpochStream.writeSnapshot(selectByQuantileFromScores(scored, q), outDir, batchId)
+        }
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          state.compact(_.groupBy(col("id"), col("term")).agg(sum(col("c")).as("c")))
+      }
     }
 
   /** STREAMING quality-quantile selection against a generationally FROZEN
@@ -610,47 +605,47 @@ object TextAnalysis {
     EpochStream.run(spark, stagedDir, schema, checkpointDir,
         shufflePartitions, outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
       val gen = batchId / generationEvery
-      val tf = batchTermCounts(batch, idCol, textCol).persist()
-      graft.ops.CacheRegistry.register(tf)
-      val tc = tf.filter(col("term").isNotNull)
-        .groupBy(col("term")).agg(sum(col("c")).as("c"))
-      val terms = new StateFamily(tc.sparkSession, stateDir + "/terms", tc.schema,
-        StateFamily.Stream)
-      terms.append(tc, batchId)
-      val boundary = batchId % generationEvery == 0
-      if (boundary) {
-        // freeze generation g's model: batch 0 boots on its own counts,
-        // later boundaries fold the settled (Heaps-bounded) term state
-        val model =
-          if (batchId == 0) tc.select(col("term"), col("c").as("ct"))
-          else terms.settled(batchId)
-            .groupBy(col("term")).agg(sum(col("c")).as("ct"))
-        model.withColumn("gen", lit(gen))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen").parquet(stateDir + "/models")
+      graft.ops.CacheRegistry.during(batchTermCounts(batch, idCol, textCol)) { tf =>
+        val tc = tf.filter(col("term").isNotNull)
+          .groupBy(col("term")).agg(sum(col("c")).as("c"))
+        val terms = new StateFamily(tc.sparkSession, stateDir + "/terms", tc.schema,
+          StateFamily.Stream)
+        terms.append(tc, batchId)
+        val boundary = batchId % generationEvery == 0
+        if (boundary) {
+          // freeze generation g's model: batch 0 boots on its own counts,
+          // later boundaries fold the settled (Heaps-bounded) term state
+          val model =
+            if (batchId == 0) tc.select(col("term"), col("c").as("ct"))
+            else terms.settled(batchId)
+              .groupBy(col("term")).agg(sum(col("c")).as("ct"))
+          model.withColumn("gen", lit(gen))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("gen").parquet(stateDir + "/models")
+        }
+        val scored = frozenGenScoreFrame(tf, stateDir, gen)
+        val scores = new StateFamily(scored.sparkSession, stateDir + "/scores", scored.schema,
+          StateFamily.Stream)
+        if (boundary) {
+          // freeze generation g's cutoff over ARRIVAL scores: batch 0 over
+          // its own (just computed against its own frozen model), later
+          // generations over all settled scores — the amortized O(docs) read
+          val cutSrc =
+            if (batchId == 0) scored
+            else scores.settled(batchId)
+          graft.ops.Percentiles.exactPercentiles(
+              cutSrc.filter(col("avg_logp").isNotNull).withColumn("__g", lit(1)),
+              "__g", "avg_logp", Seq(q), Seq("c"))
+            .agg(max(col("c")).as("cutoff"))
+            .withColumn("gen", lit(gen))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("gen").parquet(stateDir + "/cuts")
+        }
+        graft.ops.CacheRegistry.during(frozenGenVerdicts(scored, stateDir, gen)) { verdicts =>
+          scores.append(verdicts.select(col("id"), col("n_tok"), col("avg_logp")), batchId)
+          EpochStream.writeSnapshot(verdicts, outDir, batchId)
+        }
       }
-      val scored = frozenGenScoreFrame(tf, stateDir, gen)
-      val scores = new StateFamily(scored.sparkSession, stateDir + "/scores", scored.schema,
-        StateFamily.Stream)
-      if (boundary) {
-        // freeze generation g's cutoff over ARRIVAL scores: batch 0 over
-        // its own (just computed against its own frozen model), later
-        // generations over all settled scores — the amortized O(docs) read
-        val cutSrc =
-          if (batchId == 0) scored
-          else scores.settled(batchId)
-        graft.ops.Percentiles.exactPercentiles(
-            cutSrc.filter(col("avg_logp").isNotNull).withColumn("__g", lit(1)),
-            "__g", "avg_logp", Seq(q), Seq("c"))
-          .agg(max(col("c")).as("cutoff"))
-          .withColumn("gen", lit(gen))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen").parquet(stateDir + "/cuts")
-      }
-      val verdicts = frozenGenVerdicts(scored, stateDir, gen).persist()
-      graft.ops.CacheRegistry.register(verdicts)
-      scores.append(verdicts.select(col("id"), col("n_tok"), col("avg_logp")), batchId)
-      EpochStream.writeSnapshot(verdicts, outDir, batchId)
     }
   }
 
@@ -735,10 +730,10 @@ object TextAnalysis {
   def sourceTokenKL(df: org.apache.spark.sql.DataFrame, srcCol: String,
       textCol: String,
       tokens: Column => Column = wordTokens): org.apache.spark.sql.DataFrame = {
-    val st = df.select(col(srcCol).as("source"), explode(tokens(col(textCol))).as("term"))
-      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
-      .persist() // the marginal and the totals both re-aggregate these counts
-    graft.ops.CacheRegistry.register(st)
+    // the marginal and the totals both re-aggregate these counts
+    val st = graft.ops.CacheRegistry.persist(
+      df.select(col(srcCol).as("source"), explode(tokens(col(textCol))).as("term"))
+      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c")))
     sourceTokenKLFromCounts(st)
   }
 
@@ -800,24 +795,22 @@ object TextAnalysis {
     EpochStream.run(spark, stagedDir, schema, checkpointDir, shufflePartitions, outDir,
         new org.apache.spark.sql.types.StructType().add("source", schema(srcCol).dataType)
           .add("n_tok", "bigint").add("kl", "double")) { (batch, batchId) =>
-      val bt = batch.select(col(srcCol).as("source"),
+      graft.ops.CacheRegistry.during(batch.select(col(srcCol).as("source"),
           explode(wordTokens(col(textCol))).as("term"))
-        .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
-        .persist()
-      graft.ops.CacheRegistry.register(bt)
-      val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
-      state.append(bt, batchId)
-      val cum = state.settled(batchId).unionByName(bt)
-        .groupBy(col("source"), col("term")).agg(sum(col("c")).as("c"))
-        .persist()
-      graft.ops.CacheRegistry.register(cum)
-      EpochStream.writeSnapshot(sourceTokenKLFromCounts(cum), outDir, batchId)
-      // periodic state compaction AFTER the snapshot write: folds only
-      // epochs strictly below this one (the live epoch must survive an
-      // at-least-once re-run of this batch), and the fold is additive,
-      // so every later batch's cumulative read is value-identical
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        state.compact(_.groupBy(col("source"), col("term")).agg(sum(col("c")).as("c")))
+        .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))) { bt =>
+        val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+        state.append(bt, batchId)
+        graft.ops.CacheRegistry.during(state.settled(batchId).unionByName(bt)
+            .groupBy(col("source"), col("term")).agg(sum(col("c")).as("c"))) { cum =>
+          EpochStream.writeSnapshot(sourceTokenKLFromCounts(cum), outDir, batchId)
+        }
+        // periodic state compaction AFTER the snapshot write: folds only
+        // epochs strictly below this one (the live epoch must survive an
+        // at-least-once re-run of this batch), and the fold is additive,
+        // so every later batch's cumulative read is value-identical
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          state.compact(_.groupBy(col("source"), col("term")).agg(sum(col("c")).as("c")))
+      }
     }
 
   /** The Gopher document-quality rule bundle (Rae et al. 2021 §A1.1.2, the

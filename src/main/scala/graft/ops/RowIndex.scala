@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed row-index primitive — the scale-safe positional building block
   * behind every op that needs the reference's "row i" semantics
@@ -62,13 +61,11 @@ object RowIndex {
     // small input collapses to a few tasks while a 100 TB one still fans out
     // to the full shuffle width — an explicit n would disable that coalesce.
     // Adjacent-merge preserves the global range order the id mint relies on.
-    val ranged = postSort((
+    val ranged = CacheRegistry.persist(postSort((
         if (numPartitions > 0) df.repartitionByRange(numPartitions, order: _*)
         else df.repartitionByRange(order: _*))
       .sortWithinPartitions(order: _*))
-      .withColumn(pidCol, spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.register(ranged)
+      .withColumn(pidCol, spark_partition_id()))
     val perPart = ranged.groupBy(col(pidCol)).agg(perPartition.as("q"))
       .collect()
       .map(r => (r.getInt(0), r.getLong(1)))
@@ -160,25 +157,20 @@ object RowIndex {
     // sort exactly. Cluster deployments can raise/lower it via conf.
     val fastCap = graft.GraftConf.longConf(spark,
       "spark.graft.runningTotal.fastPathMaxRows", 65536L)
-    val in = df.withColumn(valCol, coalesce(value.cast("long"), lit(0L)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val in = CacheRegistry.persist(df.withColumn(valCol, coalesce(value.cast("long"), lit(0L))))
     val rows = in.count()
     val (ranged, offsetSeq) =
       if (numPartitions == 0 && rows <= fastCap) {
-        // narrow lineage over the cached input — no second persist needed;
-        // registered only on this path, the one that leaves it cached (a
-        // registered slot the distributed path frees by hand below would
-        // still push a live cache out of the registry)
-        CacheRegistry.register(in)
+        // narrow lineage over the cached input — no second persist needed
         (in.coalesce(1).sortWithinPartitions(order: _*)
           .withColumn(pidCol, spark_partition_id()),
           Seq.empty[(Int, Long)])
       } else {
         // the offsets job materializes the ranged cache; every later
-        // consumer reads it, so the input cache has served its purpose
-        // (freed on a throw too: no registry slot would reclaim it)
-        try rangedWithOffsets(in, order, numPartitions, coalesce(sum(col(valCol)), lit(0L)))
-        finally in.unpersist(blocking = false)
+        // consumer reads it, so the input cache has served its purpose:
+        // the call takes it over and frees it, on a throw too
+        CacheRegistry.during(in)(
+          rangedWithOffsets(_, order, numPartitions, coalesce(sum(col(valCol)), lit(0L))))
       }
     val bc = spark.sparkContext.broadcast(offsetSeq.toMap)
 

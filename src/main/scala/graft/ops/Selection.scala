@@ -50,11 +50,11 @@ final case class GraftTable(df: DataFrame) {
 
   /** TableV::to_table analog (table_view.rs:376): materialize the lazy
     * view. In Spark that is cache + force — subsequent ops read the
-    * materialized columnar form instead of recomputing the plan.
+    * materialized columnar form instead of recomputing the plan. The
+    * cache takes a [[CacheRegistry]] slot like any operator cache.
     */
   def materialize(): GraftTable = {
-    df.persist()
-    df.count()
+    CacheRegistry.persist(df).count()
     this
   }
 }

@@ -146,10 +146,10 @@ object ZOrder {
       val inputPaths = fs.listStatus(live).map(_.getPath)
         .filter(p => isDataFile(p.getName))
       val inputNames = inputPaths.map(_.getName).toSet
-      val part = spark.read.parquet(inputPaths.map(_.toString): _*).persist()
-      try clusterByQuantile(part, dims, filesPerPartition, bits, relErr = 0.01)
-        .write.mode("overwrite").parquet(stage.toString)
-      finally part.unpersist(blocking = false)
+      CacheRegistry.during(spark.read.parquet(inputPaths.map(_.toString): _*)) { part =>
+        clusterByQuantile(part, dims, filesPerPartition, bits, relErr = 0.01)
+          .write.mode("overwrite").parquet(stage.toString)
+      }
       // the inputs manifest travels with the stage into the live dir, so
       // BOTH the swap below and crash recovery can tell a rewritten-away
       // input from a file some concurrent writer appended mid-rewrite —

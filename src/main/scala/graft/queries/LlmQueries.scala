@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.llm.{Chunking, Dedup, Multimodal, Similarity, Splits, Substrings, TextAnalysis}
+import graft.ops.CacheRegistry
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -587,8 +588,8 @@ object LlmQueries {
       // pushable predicate), so the projected text is cached rather than
       // scanned three times; in production batches arrive as separate
       // directories (see nearDedupStreaming) and no re-scan exists
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text")).persist()
-      graft.ops.CacheRegistry.register(docs)
+      val docs = CacheRegistry.persist(
+        Tables.documents(s, d).select(col("doc_id"), col("text")))
       // a UNIQUE index dir per invocation (lazy-read safety); previous
       // invocation's dir is reclaimed now that its result is settled
       val dir = java.nio.file.Files.createTempDirectory("graft_neardedup_idx_").toString
@@ -624,8 +625,8 @@ object LlmQueries {
         |  NOT EXISTS (SELECT 1 FROM f f2 WHERE f2.fp = f.fp
         |    AND (f2.ep < f.ep OR (f2.ep = f.ep AND f2.doc_id < f.doc_id))) AS kept
         |FROM f ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text")).persist()
-      graft.ops.CacheRegistry.register(docs)
+      val docs = CacheRegistry.persist(
+        Tables.documents(s, d).select(col("doc_id"), col("text")))
       val dir = java.nio.file.Files.createTempDirectory("graft_exactdedup_idx_").toString
       rotateRunDirs("q141", Seq(dir))
       val fp = md5(concat_ws(" ", slice(
@@ -663,8 +664,8 @@ object LlmQueries {
         |  NOT EXISTS (SELECT 1 FROM f f2 WHERE f2.fp = f.fp
         |    AND (f2.ep < f.ep OR (f2.ep = f.ep AND f2.doc_id < f.doc_id))) AS kept
         |FROM f ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text")).persist()
-      graft.ops.CacheRegistry.register(docs)
+      val docs = CacheRegistry.persist(
+        Tables.documents(s, d).select(col("doc_id"), col("text")))
       val dir = java.nio.file.Files.createTempDirectory("graft_compactneutral_").toString
       rotateRunDirs("q148", Seq(dir))
       val fp = md5(concat_ws(" ", slice(
@@ -1604,9 +1605,9 @@ object LlmQueries {
         |FROM kept GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       // persist the doc-bounded count frame: sampleToMixture's rate
       // aggregate + keep pass otherwise re-tokenize the corpus 3×
-      val toks = Tables.documents(s, d).select(col("doc_id"), col("source"),
-        size(TextAnalysis.wordTokens(col("text"))).cast("long").as("n_tokens")).persist()
-      graft.ops.CacheRegistry.register(toks)
+      val toks = CacheRegistry.persist(Tables.documents(s, d).select(
+        col("doc_id"), col("source"),
+        size(TextAnalysis.wordTokens(col("text"))).cast("long").as("n_tokens")))
       graft.llm.Mixing.sampleToMixture(toks, "doc_id", "n_tokens", "source",
           Map("src0" -> 0.3, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 0.2), 3000L)
         .groupBy(col("source"))
@@ -1646,9 +1647,9 @@ object LlmQueries {
         |ORDER BY r.source""".stripMargin) { (s, d) =>
       // one tokenize pass (same factoring as q161): persist the doc-bounded
       // count frame, derive rates once, reuse them for the keep rule
-      val toks = Tables.documents(s, d).select(col("doc_id"), col("source"),
-        size(TextAnalysis.wordTokens(col("text"))).cast("long").as("n_tokens")).persist()
-      graft.ops.CacheRegistry.register(toks)
+      val toks = CacheRegistry.persist(Tables.documents(s, d).select(
+        col("doc_id"), col("source"),
+        size(TextAnalysis.wordTokens(col("text"))).cast("long").as("n_tokens")))
       val rates = graft.llm.Mixing.temperatureRates(toks, "n_tokens", "source", 0.5, 6000L)
       val kept = graft.llm.Mixing.sampleAtRates(toks, "doc_id",
           rates.select(col("source"), col("rate")), "source")
@@ -1918,13 +1919,11 @@ object LlmQueries {
       // under ~16e9 tokens (chunk_id < 1e9 at stride 16) — far past real
       // corpora. Persist: keep and the probe side both consume the
       // tokenize+chunk+md5 pipeline, which would otherwise run twice.
-      val chunks = Chunking.chunkByTokens(
+      val chunks = CacheRegistry.persist(Chunking.chunkByTokens(
         Tables.documents(s, d).filter(col("doc_id") < 200),
         "doc_id", "text", size = 24, stride = 16)
         .withColumn("fp", md5(col("chunk_text").cast("binary")))
-        .withColumn("key", col("doc_id") * 1000000000L + col("chunk_id"))
-        .persist()
-      graft.ops.CacheRegistry.register(chunks)
+        .withColumn("key", col("doc_id") * 1000000000L + col("chunk_id")))
       val keep = chunks.groupBy(col("fp")).agg(min(col("key")).as("keep_key"))
       chunks.join(keep, "fp")
         .groupBy(col("doc_id"))
@@ -2263,9 +2262,9 @@ object LlmQueries {
       // narrow — persist it and derive rates ONCE (the unfactored
       // temperatureRates + sampleToTemperature pair re-priced the corpus
       // through the BPE kernel 5× — measured in the formatted plan, r16)
-      val toks = Tables.documents(s, d).select(col("doc_id"), col("source"),
-        graft.llm.Bpe.countTokens(col("text")).as("n_tokens")).persist()
-      graft.ops.CacheRegistry.register(toks)
+      val toks = CacheRegistry.persist(Tables.documents(s, d).select(
+        col("doc_id"), col("source"),
+        graft.llm.Bpe.countTokens(col("text")).as("n_tokens")))
       val rates = graft.llm.Mixing.temperatureRates(toks, "n_tokens", "source", 0.5, 15000L)
       val kept = graft.llm.Mixing.sampleAtRates(toks, "doc_id",
           rates.select(col("source"), col("rate")), "source")
@@ -2645,13 +2644,11 @@ object LlmQueries {
       // stats + capPerGroup's three input references after the anti-join).
       // The persist is O(rows × ~30 B), spills to disk, and is released by
       // the CacheRegistry — the decide-on-small-rows shape of guide §8.
-      val withDom = Tables.documents(s, d)
+      val withDom = CacheRegistry.persist(Tables.documents(s, d)
         .select(col("doc_id"), col("text"), url.as("url"))
         .withColumn("domain", Urls.registrableDomain(Urls.hostOf(col("url"))))
         .select(col("doc_id"), col("domain"),
-          TextAnalysis.tokenCountWs(col("text")).as("n_tok"))
-        .persist()
-      graft.ops.CacheRegistry.register(withDom)
+          TextAnalysis.tokenCountWs(col("text")).as("n_tok")))
       val stats = withDom.groupBy(col("domain"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
       val blocklist = {
@@ -4471,8 +4468,7 @@ object LlmQueries {
       val page = concat(
         regexp_replace(col("text"), "((?:[A-Za-z0-9]+ ){5})", "$1\n"),
         lit("\nvisit "), col("source"), lit(" homepage now"))
-      val aug = Tables.documents(s, d).select(col("doc_id"), page.as("page")).persist()
-      graft.ops.CacheRegistry.register(aug)
+      val aug = CacheRegistry.persist(Tables.documents(s, d).select(col("doc_id"), page.as("page")))
       val dir = java.nio.file.Files.createTempDirectory("graft_linededup_idx_").toString
       rotateRunDirs("q179", Seq(dir))
       val results = (0 until 2).map { b =>
@@ -5013,10 +5009,8 @@ object LlmQueries {
       import graft.llm.Substrings
       val planted = " the quick brown fox jumps over the lazy dog again" +
         " and again or visit the portal pages for more updates today"
-      val aug = Tables.documents(s, d)
-        .select(col("doc_id"), concat(col("text"), lit(planted)).as("tx"))
-        .persist()
-      graft.ops.CacheRegistry.register(aug)
+      val aug = CacheRegistry.persist(Tables.documents(s, d)
+        .select(col("doc_id"), concat(col("text"), lit(planted)).as("tx")))
       val dir = java.nio.file.Files.createTempDirectory("graft_q189_").toString
       rotateRunDirs("q189", Seq(dir))
       val results = (0 until 3).map { b =>

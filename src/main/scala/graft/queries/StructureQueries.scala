@@ -297,7 +297,6 @@ object StructureQueries {
           Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus")))
         .r(100, 600, col("o_orderkey"))
         .materialize()
-      graft.ops.CacheRegistry.register(sliced.toDF)
       sliced.toDF
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))

@@ -50,18 +50,16 @@ object TextSources {
   def readJsonLinesQuarantine(spark: SparkSession, path: String,
       schema: StructType): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.col
-    val withCorrupt = spark.read
+    // Spark requires caching/materialization before filtering on the
+    // corrupt column alone (the parser must see the full row); the
+    // registry bounds the cache's lifetime — the caller can't
+    val withCorrupt = graft.ops.CacheRegistry.persist(spark.read
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
       .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(schema.add("_corrupt_record", "string"))
-      .json(path)
-      // Spark requires caching/materialization before filtering on the
-      // corrupt column alone (the parser must see the full row); the
-      // registry bounds the cache's lifetime — the caller can't
-      .cache()
-    graft.ops.CacheRegistry.register(withCorrupt)
+      .json(path))
     val good = withCorrupt.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
     val bad = withCorrupt.filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw"))

@@ -104,6 +104,33 @@ class GuardSpec extends SparkSpec {
     assert(sites.isEmpty, s"SparkSession.builder outside GraftConf.session: ${sites.mkString(", ")}")
   }
 
+  test("src/main persists operator frames only through CacheRegistry (two pinned holders)") {
+    // the holders that keep their own lifetime, with their exact counts:
+    //  - LlmQueries.sharedFrame (1): session-pinned tables shared by q31,
+    //    q32 and q150, q163, dropped when their session goes away;
+    //  - Dedup.connectedComponents (4): the RDD fixed point's rounds,
+    //    each freed by the loop that made it
+    val allowed = Map("LlmQueries.scala" -> 1, "Dedup.scala" -> 4)
+    val persistSite = """(?<!CacheRegistry)\.persist\(|\.cache\(\)""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val lines = try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "CacheRegistry.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.map { case (l, i) => (p, i, l) }
+      }.toList
+    finally files.close()
+    val sites = lines.collect {
+      case (p, i, l) if persistSite.findFirstIn(l).isDefined => (p.getFileName.toString, s"$p:${i + 1}")
+    }
+    val counts = sites.groupBy(_._1).map { case (f, xs) => f -> xs.size }
+    assert(counts === allowed,
+      s"persist/cache outside CacheRegistry: ${sites.filterNot(s => allowed.contains(s._1)).map(_._2).mkString(", ")}")
+    val registers = lines.collect {
+      case (p, i, l) if l.contains("CacheRegistry.register") => s"$p:${i + 1}"
+    }
+    assert(registers.isEmpty, s"CacheRegistry.register outside the registry: ${registers.mkString(", ")}")
+  }
+
   test("SparkEntry.select keeps registry order and rejects unknown names, listing them") {
     val names = SparkEntry.allDefs.map(_.name)
     assert(SparkEntry.select(Seq.empty).map(_.name) === names)

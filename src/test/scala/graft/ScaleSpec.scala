@@ -219,6 +219,72 @@ class ScaleSpec extends SparkSpec {
       "a live registered cache was evicted by the unpersisted input's slot")
     CacheRegistry.releaseAll()
   }
+
+  test("pageRankExact's per-iteration ranks push no live registry cache out") {
+    import graft.ops.CacheRegistry
+    import org.apache.spark.storage.StorageLevel
+    CacheRegistry.releaseAll()
+    // 7 live operator caches + the returned ranks fill the 8 slots: each
+    // iteration's ranks must give their slot up to the next, or 5
+    // iterations evict 4 live caches. (iters >= 8 exhausts a 4 GB heap
+    // before the check: each step's cached plan reads the previous ranks
+    // twice, so the plan strings Spark builds grow 2^iters.)
+    val live = (1 to 7).map { i =>
+      val df = spark.range(i * 10L).toDF("x").persist()
+      df.count()
+      CacheRegistry.register(df)
+    }
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
+    val pr = graft.llm.Graphs.pageRankExact(edges, "src", "dst", nodes, "id", iters = 5)
+    assert(pr.count() === 5)
+    assert(live.forall(_.storageLevel != StorageLevel.NONE),
+      "a live registered cache was evicted by pageRankExact's iterations")
+    CacheRegistry.releaseAll()
+  }
+
+  test("CacheRegistry counts capacity evictions only: 9 live registrations evict 1") {
+    import graft.ops.CacheRegistry
+    import org.apache.spark.storage.StorageLevel
+    CacheRegistry.releaseAll()
+    val e0 = CacheRegistry.evictions
+    val frames = (1 to 9).map(i => CacheRegistry.persist(spark.range(i * 10L + 1).toDF("x")))
+    assert(CacheRegistry.evictions - e0 === 1)
+    assert(frames.head.storageLevel === StorageLevel.NONE)
+    assert(frames.tail.forall(_.storageLevel != StorageLevel.NONE))
+    // a slot whose frame its owner already unpersisted is dropped first,
+    // not counted, and pushes no live cache out
+    frames(1).unpersist(blocking = true)
+    CacheRegistry.persist(spark.range(1000L).toDF("x"))
+    assert(CacheRegistry.evictions - e0 === 1)
+    assert(frames.drop(2).forall(_.storageLevel != StorageLevel.NONE))
+    CacheRegistry.releaseAll()
+    assert(CacheRegistry.evictions - e0 === 1)
+    assert(frames.forall(_.storageLevel === StorageLevel.NONE))
+  }
+
+  test("CacheRegistry.during frees its frame after the body, on a throw too, and takes over a slot") {
+    import graft.ops.CacheRegistry
+    import org.apache.spark.storage.StorageLevel
+    CacheRegistry.releaseAll()
+    val df = spark.range(77L).toDF("x")
+    assert(CacheRegistry.during(df) { d =>
+      assert(d.storageLevel != StorageLevel.NONE)
+      d.count()
+    } === 77L)
+    assert(df.storageLevel === StorageLevel.NONE)
+    intercept[IllegalStateException](CacheRegistry.during(df)(_ => throw new IllegalStateException))
+    assert(df.storageLevel === StorageLevel.NONE)
+    // a registered frame handed to during leaves the deque: 8 more live
+    // registrations then evict nothing
+    val owned = CacheRegistry.persist(spark.range(78L).toDF("x"))
+    val e0 = CacheRegistry.evictions
+    CacheRegistry.during(owned)(_.count())
+    assert(owned.storageLevel === StorageLevel.NONE)
+    (1 to 8).foreach(i => CacheRegistry.persist(spark.range(100L + i).toDF("x")))
+    assert(CacheRegistry.evictions === e0)
+    CacheRegistry.releaseAll()
+  }
   test("packSequences: contiguous bins, budget arithmetic, zero-token docs") {
     import graft.llm.Packing
     val df = Seq((0L, 300L), (1L, 300L), (2L, 0L), (3L, 500L), (4L, 1200L))

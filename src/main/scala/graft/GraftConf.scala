@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Session configuration the engine's semantics depend on. Applied lazily at
@@ -39,6 +41,18 @@ object GraftConf {
 
   /** The session every graft main starts with: [[sessionSettings]] applied,
     * UI off, log level WARN, then [[tune]].
+    *
+    * Spark's codegen cache is sized for local mode here, the only place a
+    * static conf can go. It is keyed by (class loader, source), and in
+    * local mode every whole-stage class is cached twice: under the
+    * driver's loader (the validation compile) and under the executor's.
+    * The five corpus queries' 65 distinct sources take 104 entries, more
+    * than Spark's 100, so every warm pass recompiled some. `graft.Bench`
+    * at sf0.01 on local[4]: those five, 4 passes, compiled a median 47
+    * classes per warm pass at 100 entries and 0 at 1000; all 215 queries,
+    * 2 passes, 4,521 and 3,102 in the warm pass. A constant, not an
+    * option. The perfbench harness builds its own session, so this does
+    * not move the benchmark.
     */
   def session(appName: String,
       settings: SessionSettings = sessionSettings(sys.env)): SparkSession = {
@@ -46,6 +60,7 @@ object GraftConf {
       .config("spark.sql.shuffle.partitions", settings.shufflePartitions.toString)
       .config("spark.executor.memory", settings.executorMemory)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
     val spark = settings.executorClassPath
       .fold(b)(cp => b.config("spark.executor.extraClassPath", cp)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -91,7 +106,28 @@ object GraftConf {
     // execution: cloneSession tunes a clone before it runs anything, and a
     // stream's clone copies this conf.
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    // The `file` scheme through GraftLocalFs: Hadoop's local file system
+    // minus its chmod/readlink process spawns. A JFR count over a whole
+    // perfbench incremental run (seed 1, 7 q158 calls): 1,098 spawns
+    // (699 chmod, 392 readlink), ~156 per call; 4 after, all JVM start
+    // and shutdown. Spark copies session confs into every Hadoop conf it
+    // makes (readers, writers, checkpoint managers, `hadoopConf` below). The
+    // FileSystem cache is keyed by scheme, not class, so it is bypassed:
+    // a stock instance cached before this ran would otherwise be served.
+    spark.conf.set("fs.file.impl", classOf[GraftLocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
   }
+
+  /** The session's Hadoop conf: the context's `hadoopConfiguration` plus
+    * every session conf, [[tune]]'s file-system keys among them. Graft's
+    * own stamps, leases, listings and renames resolve their file system
+    * here, so they use the same one as Spark's readers and writers.
+    */
+  def hadoopConf(spark: SparkSession): Configuration = spark.sessionState.newHadoopConf()
+
+  /** The file system of `path` under [[hadoopConf]]. */
+  def fileSystem(spark: SparkSession, path: Path): FileSystem = path.getFileSystem(hadoopConf(spark))
 
   /** A Long-valued session conf: `default` when unset; a malformed value
     * throws naming its key instead of a bare NumberFormatException.

@@ -463,9 +463,8 @@ object Dedup {
     val ttlMs = graft.GraftConf.longConf(lazyDf.sparkSession,
       "spark.graft.index.scratchTtlMs", 7L * 24 * 3600 * 1000)
     try {
-      val conf = lazyDf.sparkSession.sparkContext.hadoopConfiguration
       val dir = new org.apache.hadoop.fs.Path(epochDir)
-      val fs = dir.getFileSystem(conf)
+      val fs = graft.GraftConf.fileSystem(lazyDf.sparkSession, dir)
       val cutoff = System.currentTimeMillis() - ttlMs
       fs.listStatus(dir).foreach { st =>
         val name = st.getPath.getName

@@ -55,7 +55,7 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     s"state family at $path: the data schema must not carry the epoch partition column")
 
   private val dir = new Path(path)
-  private val fs: FileSystem = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs: FileSystem = graft.GraftConf.fileSystem(spark, dir)
   private var stamped = readStamp(fs, dir) match {
     case None => false
     case Some((tag, schema)) =>
@@ -111,7 +111,7 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     * lands before the first data file, so no reader ever sees data it
     * cannot check.
     */
-  def append(df: DataFrame, epoch: Long, nFiles: Int = 0): Unit = {
+  def append(df: DataFrame, epoch: Long, nFiles: Int = 0): Unit = labelled("append") {
     require(df.schema.catalogString == dataSchema.catalogString,
       s"state family at $path: appended schema ${df.schema.catalogString} " +
         s"is not the family's ${dataSchema.catalogString}")
@@ -134,7 +134,8 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     * row groups — the compacted sentinel above all — instead of reading
     * O(history) keys.
     */
-  def probeAppend[T](keys: DataFrame, epoch: Long)(consume: DataFrame => T): T = {
+  def probeAppend[T](keys: DataFrame, epoch: Long)(
+      consume: DataFrame => T): T = labelled("probeAppend") {
     require(layout.sortCols.nonEmpty, s"state family at $path: a probe needs a sort key")
     val k = layout.sortCols.head
     // cached across its two consumers (the caller's materialization and
@@ -165,22 +166,24 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
   def compact(fold: DataFrame => DataFrame): Unit = {
     val es = epochs.toIndexedSeq.sorted
     if (es.length <= 1) return // nothing settled to fold
-    val sentinel = math.min(-1L, es.head - 1L)
-    val folded = fold(read.filter(col("epoch") < es.last).drop("epoch"))
-    require(folded.schema.catalogString == dataSchema.catalogString,
-      s"state family at $path: fold changed the schema to ${folded.schema.catalogString}")
-    val stage = path + ".__graft_compact_stage"
-    // cached for this call's count and write only: a registered cache
-    // would outlive the folded epochs this call deletes
-    CacheRegistry.during(folded.withColumn("epoch", lit(sentinel))) { gen =>
-      write(gen, Layout.sizedFileCount(gen.count()), stage, "overwrite", cluster = true)
+    labelled("compact") {
+      val sentinel = math.min(-1L, es.head - 1L)
+      val folded = fold(read.filter(col("epoch") < es.last).drop("epoch"))
+      require(folded.schema.catalogString == dataSchema.catalogString,
+        s"state family at $path: fold changed the schema to ${folded.schema.catalogString}")
+      val stage = path + ".__graft_compact_stage"
+      // cached for this call's count and write only: a registered cache
+      // would outlive the folded epochs this call deletes
+      CacheRegistry.during(folded.withColumn("epoch", lit(sentinel))) { gen =>
+        write(gen, Layout.sizedFileCount(gen.count()), stage, "overwrite", cluster = true)
+      }
+      // Hadoop rename signals most failures by returning FALSE — an unchecked
+      // rename followed by the deletes is exactly the window this closes
+      require(fs.rename(new Path(stage, s"epoch=$sentinel"), new Path(dir, s"epoch=$sentinel")),
+        s"compaction rename failed; staged generation left at $stage")
+      es.init.foreach(e => fs.delete(new Path(dir, s"epoch=$e"), true))
+      fs.delete(new Path(stage), true)
     }
-    // Hadoop rename signals most failures by returning FALSE — an unchecked
-    // rename followed by the deletes is exactly the window this closes
-    require(fs.rename(new Path(stage, s"epoch=$sentinel"), new Path(dir, s"epoch=$sentinel")),
-      s"compaction rename failed; staged generation left at $stage")
-    es.init.foreach(e => fs.delete(new Path(dir, s"epoch=$e"), true))
-    fs.delete(new Path(stage), true)
   }
 
   /** Land whole epochs that do not exist yet (`rows` carry their own
@@ -188,7 +191,7 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     * directory only becomes visible complete and a crash leaves each
     * epoch either fully landed or absent.
     */
-  def land(rows: DataFrame, nFiles: Int, landed: Seq[Long]): Unit = {
+  def land(rows: DataFrame, nFiles: Int, landed: Seq[Long]): Unit = labelled("land") {
     val stage = new Path(path + ".__graft_backfill_stage")
     fs.delete(stage, true) // sweep a prior crash's leftovers
     write(rows, nFiles, stage.toString, "overwrite", cluster = true)
@@ -205,7 +208,7 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     * old family or none — never a partial one (and the next replace
     * sweeps the leftovers).
     */
-  def replace(rows: DataFrame, nFiles: Int): Unit = {
+  def replace(rows: DataFrame, nFiles: Int): Unit = labelled("replace") {
     val stage = new Path(path + RebuildStage)
     val old = new Path(path + RebuildOld)
     fs.delete(stage, true); fs.delete(old, true) // sweep prior crashes
@@ -215,6 +218,10 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     require(fs.rename(stage, dir), s"land rename failed for $path")
     fs.delete(old, true)
   }
+
+  /** `body` with its Spark jobs described as `verb` on this family. */
+  private def labelled[T](verb: String)(body: => T): T =
+    withJobDescription(spark, s"StateFamily.$verb $path")(body)
 
   private def writeStamp(under: Path): Unit = {
     fs.mkdirs(under)
@@ -262,7 +269,7 @@ private[graft] object StateFamily {
     */
   def stamped(spark: SparkSession, path: String, layout: FamilyLayout): Option[StateFamily] = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, dir)
     if (!Layout.hasParquetData(fs, dir)) None
     else readStamp(fs, dir) match {
       case Some((_, schema)) => Some(new StateFamily(spark, path, schema, layout))
@@ -273,8 +280,23 @@ private[graft] object StateFamily {
 
   /** Delete the family at `path`, with any leftovers of a crashed replace. */
   def drop(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, new Path(path))
     Seq("", RebuildStage, RebuildOld).foreach(s => fs.delete(new Path(path + s), true))
+  }
+
+  /** The local property Spark describes a job with. */
+  val JobDescription = "spark.job.description"
+
+  /** Run `body` with [[JobDescription]] set to `label`, so its jobs (in
+    * the UI, the event log, a listener's job start) name the operator
+    * step instead of a call site; the caller's description is restored
+    * after.
+    */
+  def withJobDescription[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
   }
 
   private def readStamp(fs: FileSystem, dir: Path): Option[(String, StructType)] = {
@@ -331,7 +353,7 @@ private[graft] object StateFamily {
     */
   def withLease[T](spark: SparkSession, dir: String, op: String)(body: => T): T = {
     val lock = new Path(dir.stripSuffix("/") + "/" + LockFile)
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, lock)
     fs.mkdirs(lock.getParent)
     val ttlMs = graft.GraftConf.longConf(spark, "spark.graft.index.leaseTtlMs", LeaseTtlMsDefault)
     def locked() = new IllegalStateException(
@@ -415,7 +437,8 @@ private[llm] object EpochStream {
     * replay fixture). The `body`'s queries run with AQE on, so the size
     * is the shuffle partition count AQE starts from before it coalesces.
     * (On Events' stateful queries the same clone setting also fixes the
-    * state-store count; this stream keeps no state.)
+    * state-store count; this stream keeps no state.) Every batch's jobs
+    * are described `EpochStream.drain <stagedDir> batch <id>`.
     */
   def drain(spark: SparkSession, stagedDir: String, schema: StructType,
       checkpointDir: Option[String], shufflePartitions: Int)(
@@ -425,7 +448,9 @@ private[llm] object EpochStream {
     val stream = s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagedDir)
-    val writer = stream.writeStream.foreachBatch(body)
+    val labelled: (DataFrame, Long) => Unit = (df, id) =>
+      StateFamily.withJobDescription(s2, s"EpochStream.drain $stagedDir batch $id")(body(df, id))
+    val writer = stream.writeStream.foreachBatch(labelled)
     val q = checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c)).start()
     try q.processAllAvailable() finally q.stop()
   }
@@ -442,7 +467,7 @@ private[llm] object EpochStream {
     drain(spark, stagedDir, schema, checkpointDir, shufflePartitions)(body)
     val typed = snapshotSchema.add(StructField("batch_id", LongType))
     val out = new Path(outDir)
-    if (Layout.hasParquetData(out.getFileSystem(spark.sparkContext.hadoopConfiguration), out))
+    if (Layout.hasParquetData(graft.GraftConf.fileSystem(spark, out), out))
       spark.read.schema(typed).parquet(outDir)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), typed)
   }

@@ -109,7 +109,7 @@ object ZOrder {
     require(filesPerPartition >= 1, s"filesPerPartition: $filesPerPartition")
     require(maxConcurrent >= 1, s"maxConcurrent: $maxConcurrent")
     val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, root)
     recoverOptimize(spark, tablePath)
     val parts = fs.listStatus(root).toIndexedSeq.map(_.getPath)
       .filter(_.getName.startsWith(partCol + "="))
@@ -197,7 +197,7 @@ object ZOrder {
   def recoverOptimize(spark: org.apache.spark.sql.SparkSession,
       tablePath: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, root)
     val retiredRoot = retiredDir(tablePath)
     val stageRoot = stageDir(tablePath)
     if (fs.exists(retiredRoot)) fs.listStatus(retiredRoot).foreach { r =>

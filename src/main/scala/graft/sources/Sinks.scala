@@ -83,8 +83,7 @@ object Sinks {
     val dataFiles = listDataFiles(spark, path)
     require(dataFiles.nonEmpty, s"no parquet data files under $path")
     val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
+      new org.apache.spark.util.SerializableConfiguration(graft.GraftConf.hadoopConf(spark)))
     val colsB = spark.sparkContext.broadcast(cols)
     val nTasks = math.max(1, math.min(dataFiles.size, 32))
     val rows = spark.sparkContext.parallelize(dataFiles.map(_._1), nTasks).map { name =>
@@ -161,7 +160,7 @@ object Sinks {
   private def listDataFiles(spark: SparkSession,
       path: String): Seq[(String, Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, p)
     fs.listStatus(p).toIndexedSeq
       .filter(st => st.isFile && {
         val n = st.getPath.getName
@@ -188,14 +187,14 @@ object Sinks {
 
   private def writeText(spark: SparkSession, file: String, text: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, p)
     val out = fs.create(p, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   private def readText(spark: SparkSession, file: String): String = {
     val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, p)
     val in = fs.open(p)
     try {
       val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
@@ -213,7 +212,7 @@ object Sinks {
   def storedManifest(spark: SparkSession, path: String): Option[DataFrame] = {
     val maniPath = s"${path.stripSuffix("/")}/$ManifestDir"
     val p = new org.apache.hadoop.fs.Path(maniPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, p)
     if (!fs.exists(p)) None
     else {
       val want = readText(spark, s"$maniPath/$FingerprintFile")
@@ -271,8 +270,7 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, new org.apache.hadoop.fs.Path(stage))
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
   }
 
@@ -350,8 +348,7 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftConf.fileSystem(spark, new org.apache.hadoop.fs.Path(stage))
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     // fully-emptied partitions: absent from the stage, so the overwrite
     // left their old files — remove the partition directories explicitly.

@@ -75,7 +75,7 @@ object Warc {
   def writeWarcGz(df: DataFrame, urlCol: String, htmlCol: String, dir: String,
       forgeTrailer: Boolean = false): Unit = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
+      graft.GraftConf.hadoopConf(df.sparkSession))
     df.select(col(urlCol).cast("string"), col(htmlCol).cast("string")).rdd
       .mapPartitionsWithIndex { (pid, it) =>
         val path = new Path(dir, f"part-$pid%05d.warc.gz")

@@ -90,18 +90,33 @@ class GuardSpec extends SparkSpec {
     assert(dups.isEmpty, s"duplicate OPERATORS.md component IDs: ${dups.toSeq.sorted}")
   }
 
-  test("src/main builds sessions only in GraftConf (and SessionBridge's extension session)") {
-    val allowed = Set("GraftConf.scala", "ColumnBridge.scala")
+  /** `file:line` of every src/main Scala line holding `needle`, outside
+    * the files named in `allowed`.
+    */
+  private def mainSites(needle: String, allowed: Set[String]): List[String] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val sites = try files.iterator.asScala
+    try files.iterator.asScala
       .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p.getFileName.toString))
       .flatMap { p =>
         java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (l, i) if l.contains("SparkSession.builder") => s"$p:${i + 1}"
+          case (l, i) if l.contains(needle) => s"$p:${i + 1}"
         }
       }.toList
     finally files.close()
+  }
+
+  test("src/main builds sessions only in GraftConf (and SessionBridge's extension session)") {
+    val sites = mainSites("SparkSession.builder", Set("GraftConf.scala", "ColumnBridge.scala"))
     assert(sites.isEmpty, s"SparkSession.builder outside GraftConf.session: ${sites.mkString(", ")}")
+  }
+
+  test("src/main resolves Hadoop file systems only through the session's conf (GraftConf.hadoopConf)") {
+    // the context's conf lacks the session confs, GraftConf.tune's file
+    // system among them: a lookup there gets another file system than
+    // the one Spark's own readers and writers use
+    val sites = mainSites("sparkContext.hadoopConfiguration", Set("GraftConf.scala"))
+    assert(sites.isEmpty,
+      s"Hadoop conf lookups outside GraftConf.hadoopConf: ${sites.mkString(", ")}")
   }
 
   test("src/main persists operator frames only through CacheRegistry (two pinned holders)") {

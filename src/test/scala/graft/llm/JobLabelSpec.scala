@@ -1,0 +1,72 @@
+package graft.llm
+
+import java.nio.file.Files
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.MetricsBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
+
+/** The epoch-state verbs and the stream drain describe their Spark jobs
+  * with the verb and the directory they work on, and give the caller's
+  * description back afterwards.
+  */
+class JobLabelSpec extends graft.SparkSpec {
+
+  private val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val listener = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      descriptions.add(Option(e.properties)
+        .flatMap(p => Option(p.getProperty(StateFamily.JobDescription))).getOrElse("<none>"))
+  }
+
+  /** The descriptions of the jobs `body` started; the caller's description
+    * must read the same after it.
+    */
+  private def labels(body: => Unit): Set[String] = {
+    val sc = spark.sparkContext
+    val before = sc.getLocalProperty(StateFamily.JobDescription)
+    MetricsBridge.waitListenerBusEmpty(sc)
+    descriptions.clear()
+    body
+    MetricsBridge.waitListenerBusEmpty(sc)
+    assert(sc.getLocalProperty(StateFamily.JobDescription) === before)
+    descriptions.asScala.toSet
+  }
+
+  test("StateFamily verbs and EpochStream.drain label their jobs and restore the caller's label") {
+    val schema = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
+    val base = Files.createTempDirectory("graft_job_labels")
+    val path = s"$base/fam"
+    def rows(epoch: Long) = spark.range(3).select((col("id") + epoch).as("k"), lit(epoch).as("v"))
+    val fam = new StateFamily(spark, path, schema, FamilyLayout("labels-v1", Seq("k")))
+    def verb(v: String) = s"StateFamily.$v $path"
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      assert(labels(fam.append(rows(0), 0L, nFiles = 1)) === Set(verb("append")))
+      fam.append(rows(1), 1L, nFiles = 1)
+      assert(labels(fam.compact(identity)) === Set(verb("compact")))
+      // the probe's own count, then its append of the fresh keys
+      assert(labels(fam.probeAppend(rows(5), 2L)(_.count())) ===
+        Set(verb("probeAppend"), verb("append")))
+      assert(labels(fam.land(rows(7).withColumn("epoch", lit(7L)), 1, Seq(7L))) ===
+        Set(verb("land")))
+      assert(labels(fam.replace(rows(9).withColumn("epoch", lit(9L)), 1)) === Set(verb("replace")))
+      val staged = s"$base/staged"
+      (0L to 1L).foreach(e => rows(e).coalesce(1).write.mode("append").parquet(staged))
+      val drained = labels(EpochStream.drain(spark, staged, schema, None, 2) { (b, _) => b.count() })
+      assert(drained === Set(s"EpochStream.drain $staged batch 0", s"EpochStream.drain $staged batch 1"))
+      sc.setJobDescription(null)
+      // no caller label: none is left behind
+      assert(labels(fam.append(rows(10), 10L, nFiles = 1)) === Set(verb("append")))
+      assert(sc.getLocalProperty(StateFamily.JobDescription) === null)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    graft.ops.Layout.deleteRecursively(base)
+  }
+}

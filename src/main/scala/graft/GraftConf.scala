@@ -129,6 +129,21 @@ object GraftConf {
   /** The file system of `path` under [[hadoopConf]]. */
   def fileSystem(spark: SparkSession, path: Path): FileSystem = path.getFileSystem(hadoopConf(spark))
 
+  /** The local property Spark describes a job with. */
+  val JobDescription = "spark.job.description"
+
+  /** Run `body` with [[JobDescription]] set to `label`, so its jobs (in
+    * the UI, the event log, a listener's job start) name the operator
+    * step instead of a call site; the caller's description is restored
+    * after.
+    */
+  def withJobDescription[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
+
   /** A Long-valued session conf: `default` when unset; a malformed value
     * throws naming its key instead of a bare NumberFormatException.
     */

@@ -1,6 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -513,6 +514,27 @@ object TextKernels {
     x ^ (x >>> 31)
   }
 
+  /** Runtime for [[TopCount]]. */
+  def topCount(a: ArrayData): Long = {
+    val counts = new java.util.HashMap[UTF8String, Array[Long]]()
+    var nulls = 0L
+    var top = 0L
+    var i = 0
+    while (i < a.numElements()) {
+      val c =
+        if (a.isNullAt(i)) { nulls += 1; nulls }
+        else {
+          val k = a.getUTF8String(i)
+          val cell = counts.get(k)
+          if (cell == null) { counts.put(k, Array(1L)); 1L }
+          else { cell(0) += 1; cell(0) }
+        }
+      if (c > top) top = c
+      i += 1
+    }
+    top
+  }
+
   /** Same fold order as aggregate(zip_with(a,b,*), 0, +): sequential. */
   def cosineSim(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
@@ -566,6 +588,27 @@ case class CosineSim(left: Expression, right: Expression)
     defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.TextKernels.cosineSim($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(l, r)
+}
+
+/** The largest element multiplicity of an array<string> — the count of
+  * its most frequent element (0 for an empty array), with the explode +
+  * groupBy(row, element) + max semantics: elements compare by their
+  * UTF-8 bytes and the nulls of one array count as one element. One
+  * hash-map pass per row instead of a shuffle of every element.
+  */
+case class TopCount(child: Expression)
+    extends UnaryExpression with Serializable {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"top_count needs array<string>, got ${t.catalogString}")
+  }
+  override def dataType: DataType = LongType
+  override def prettyName: String = "top_count"
+  override protected def nullSafeEval(v: Any): Any =
+    TextKernels.topCount(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"graft.expressions.TextKernels.topCount($v)")
+  override protected def withNewChildInternal(c: Expression): TopCount = copy(child = c)
 }
 
 /** Multiplicity-preserving stopword hit count over the `[a-z]+` token

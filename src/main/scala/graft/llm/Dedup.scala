@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.expressions.{MinHashSig, ShingleTokens, SimHash64}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -117,7 +118,17 @@ object Dedup {
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame =
     simHashPairsFromSigs(
-      df.select(col(idCol).as("id"), simHash(col(textCol)).as("sig")), maxHamming)
+      df.filter(col(textCol).isNotNull)
+        .select(col(idCol).as("id"), simHash(nonNullText(textCol)).as("sig")), maxHamming)
+
+  /** `textCol` as a non-nullable string for a signature kernel over text
+    * already filtered to non-null. The kernel's output is then
+    * non-nullable, so the pairing join's inferred `isnotnull(sig)`
+    * holds by type; over a nullable input Catalyst pushes it below the
+    * projection as `isnotnull(kernel(text))`, a second kernel run per row.
+    */
+  private def nonNullText(textCol: String): Column =
+    coalesce(col(textCol).cast("string"), lit(""))
 
   /** Pigeonhole pairing over a prebuilt (id, sig: long) frame — shared by
     * the production kernel signature ([[simHash]]), the portable md5
@@ -125,6 +136,11 @@ object Dedup {
     * ([[Multimodal.dHashPairs]]). `keepSigs` threads sig1/sig2 into the
     * output (sig is functionally determined by id, so the distinct is
     * unchanged) — callers that pin signature values avoid a re-join.
+    *
+    * Both join sides read the banded rows through ONE
+    * `repartition(band, chunk)` exchange, which the adaptive planner
+    * reuses: joined directly, each side plans its own exchange over
+    * `sigs` and runs the signature kernel upstream again.
     */
   def simHashPairsFromSigs(sigs: DataFrame, maxHamming: Int,
       keepSigs: Boolean = false): DataFrame = {
@@ -140,17 +156,17 @@ object Dedup {
           shiftrightunsigned(col("sig"), starts(b)).bitwiseAND(lit(mask)).as("chunk"))
       }: _*)).as("bb"))
       .select(col("id"), col("sig"), col("bb.band"), col("bb.chunk"))
+      .repartition(col("band"), col("chunk"))
     val l = banded.select(col("band"), col("chunk"), col("id").as("id1"), col("sig").as("sig1"))
     val r = banded.select(col("band"), col("chunk"), col("id").as("id2"), col("sig").as("sig2"))
     val hammingCol =
       bit_count(col("sig1").bitwiseXOR(col("sig2"))).cast("long").as("hamming")
+    // a merge join reads the one exchange on both sides; a broadcast of
+    // one side would add a job to collect it
+    val joined = l.join(r.hint("merge"), Seq("band", "chunk")).filter(col("id1") < col("id2"))
     val picked =
-      if (keepSigs)
-        l.join(r, Seq("band", "chunk")).filter(col("id1") < col("id2"))
-          .select(col("id1"), col("id2"), hammingCol, col("sig1"), col("sig2"))
-      else
-        l.join(r, Seq("band", "chunk")).filter(col("id1") < col("id2"))
-          .select(col("id1"), col("id2"), hammingCol)
+      if (keepSigs) joined.select(col("id1"), col("id2"), hammingCol, col("sig1"), col("sig2"))
+      else joined.select(col("id1"), col("id2"), hammingCol)
     picked.distinct().filter(col("hamming") <= maxHamming)
   }
 
@@ -182,11 +198,12 @@ object Dedup {
     // exactly the hot path they are worst at (measured at sf0.1: 65 s as
     // nested HOFs, 9 s with the loop inverted, 0.3 s as this kernel —
     // same signatures each time)
-    val sig = toCol(graft.expressions.SimHashMd5(toExpr(col(textCol).cast("string"))))
+    val sig = toCol(graft.expressions.SimHashMd5(toExpr(nonNullText(textCol))))
     // the zero-token exclusion must use the KERNEL's separator class
     // [ \t\n\f\r] (= the oracle's RE2 \s), not Java \s — Java \s also
     // eats \x0B, so a vertical-tab-only doc would be excluded here while
-    // the oracle signs it, a latent cell-exactness divergence
+    // the oracle signs it, a latent cell-exactness divergence. A null
+    // text has a null __nchr and is dropped, so the kernel reads it as ""
     df.select(col(idCol).as("id"), sig.as("sig"),
         length(regexp_replace(col(textCol).cast("string"), "[ \t\n\f\r]", "")).as("__nchr"))
       .filter(col("__nchr") > 0)
@@ -213,13 +230,13 @@ object Dedup {
     *
     * Scale shape: one md5 per (doc, shingle) in a codegen projection (no
     * HOF folds), 16 mins in ONE map-side-combined aggregate (no row
-    * blowup), banding joins 4 rows/doc of 5 ints, and only candidate
-    * pairs re-attach shingle arrays for the verify.
+    * blowup), banding groups 4 rows/doc by their slots in one exchange,
+    * and only candidate pairs re-attach shingle arrays for the verify.
     */
   def minHashLshPairsPortable(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     val tok = graft.ops.CacheRegistry.persist(portableTok(df, idCol, textCol))
-    val cand = bandSelfCands(portableBands(tok)).distinct()
+    val cand = bandSelfCands(portableSigs(tok))
     val t1 = tok.select(col("id").as("id1"), col("toks").as("toks1"))
     val t2 = tok.select(col("id").as("id2"), col("toks").as("toks2"))
     cand.join(t1, "id1").join(t2, "id2")
@@ -230,13 +247,14 @@ object Dedup {
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** Distinct 3-shingle arrays (id, toks), empty-shingle docs excluded —
-    * the portable signature basis shared by [[minHashLshPairsPortable]]
-    * and [[nearDedupIncrement]].
+  /** Distinct 3-shingle arrays (id, toks) — the portable signature basis
+    * of [[minHashLshPairsPortable]]. Empty-shingle docs stay in the frame
+    * but explode to no signature rows, so they are never candidates. No
+    * `size(toks) > 0` filter: Catalyst pushes it below the projection,
+    * where it runs the shingle kernel a second time per row.
     */
   private def portableTok(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("id"), shingles(col(textCol), 3).as("toks"))
-      .filter(size(col("toks")) > 0)
 
   // The portable hashing/banding constants live in EXACTLY ONE place
   // each — every Spark consumer (q134's string path, q135's hash-set
@@ -255,24 +273,39 @@ object Dedup {
     min((col("h") * (2L * j + 3L) + 104729L * (j + 1)) % 2147483647L).as(s"s$j")
   }
 
-  /** (id, id1<id2) candidate pairs sharing all four slots of ≥1 band. */
-  private def bandSelfCands(bands: DataFrame): DataFrame = {
-    val keys = Seq("band", "v0", "v1", "v2", "v3")
-    bands.select((keys.map(col) :+ col("id").as("id1")): _*)
-      .join(bands.select((keys.map(col) :+ col("id").as("id2")): _*), keys)
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"))
+  /** (id1 < id2) candidate pairs sharing all four slots of ≥1 band of
+    * their portable signatures (`sigs`: id, s0..s15), each pair once
+    * when ids are unique.
+    * One exchange: each (band, slots) group is sorted by id, and every
+    * row pairs with the earlier ids of its group, keeping a pair only in
+    * the first band the two share. Every caller's `sigs` reads a cached
+    * frame, and Spark does not reuse an exchange above a cached relation:
+    * a band self-join would run the signature aggregate once per side,
+    * and its pairs would need a distinct.
+    */
+  private def bandSelfCands(sigs: DataFrame): DataFrame = {
+    val bands = array((0 until 4).map(t => array((0 until 4).map(r => col(s"s${t * 4 + r}")): _*)): _*)
+    val earlier = Window.partitionBy(col("band"), col("slots")).orderBy(col("id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    def firstBands(bs: Column): Column = slice(bs, lit(1), col("band"))
+    sigs.select(col("id"), bands.as("bs"), posexplode(bands).as(Seq("band", "slots")))
+      .select(col("id").as("id2"), col("bs").as("bs2"), col("band"),
+        collect_list(struct(col("id"), col("bs"))).over(earlier).as("prev"))
+      .select(col("id2"), col("bs2"), col("band"), explode(col("prev")).as("p"))
+      .filter(col("p.id") < col("id2") && !exists(
+        zip_with(firstBands(col("p.bs")), firstBands(col("bs2")), _ === _), identity))
+      .select(col("p.id").as("id1"), col("id2"))
   }
 
-  /** Engine-portable 4×4 banded MinHash rows (id, band, v0..v3) from the
+  /** Engine-portable MinHash signatures (id, s0..s15) from the
     * string-shingle frame. Every value is a deterministic integer
     * function of the text — the property that makes candidate SETS (and
     * therefore incremental keep decisions) SQL-replayable.
     */
-  private def portableBands(tok: DataFrame): DataFrame = {
+  private def portableSigs(tok: DataFrame): DataFrame = {
     val inv = tok.select(col("id"), explode(col("toks")).as("w"))
       .withColumn("h", md5Hi32(col("w")))
-    stateBands(inv.groupBy(col("id")).agg(sigMinExprs.head, sigMinExprs.tail: _*))
+    inv.groupBy(col("id")).agg(sigMinExprs.head, sigMinExprs.tail: _*)
   }
 
   /** Per-doc index state (id, hs, s0..s15): the distinct md5-hi32 shingle
@@ -324,7 +357,7 @@ object Dedup {
   private[graft] def portableHashedPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     val state = graft.ops.CacheRegistry.persist(portableState(df, idCol, textCol))
-    val cand = bandSelfCands(stateBands(state)).distinct()
+    val cand = bandSelfCands(state)
     // hint = false: both sides here are the WHOLE corpus — forcing a
     // broadcast would cap the global twin at driver memory
     verifyPairs(cand, state.select(col("id"), col("hs")),
@@ -410,8 +443,11 @@ object Dedup {
     */
   def nearDedupIncrement(batch: DataFrame, idCol: String, textCol: String,
       indexDir: String, threshold: Double, epoch: Long): DataFrame =
-    StateFamily.withLease(batch.sparkSession, indexDir, s"increment epoch=$epoch") {
-      nearDedupIncrementLocked(batch, idCol, textCol, indexDir, threshold, epoch)
+    graft.GraftConf.withJobDescription(batch.sparkSession,
+        s"Dedup.nearDedupIncrement $indexDir epoch=$epoch") {
+      StateFamily.withLease(batch.sparkSession, indexDir, s"increment epoch=$epoch") {
+        nearDedupIncrementLocked(batch, idCol, textCol, indexDir, threshold, epoch)
+      }
     }
 
   /** Durably materialize a batch-derived lazy frame under the index's
@@ -731,7 +767,7 @@ object Dedup {
     // had empty shingle sets appends zero rows
     val hasIndex = stateFam.exists
 
-    val candNew = bandSelfCands(bands)
+    val candNew = bandSelfCands(state)
     // PROBE-PRUNED history side: per-increment IO tracks the BATCH, not
     // the index. The at-rest `bands` family is epoch-partitioned (same
     // file sizing as its base family — no small-files tax), each epoch's
@@ -771,7 +807,7 @@ object Dedup {
           .select(col("id2").as("id")).distinct())
     }
     val dropped =
-      if (!hasIndex) droppedFrom(candNew.distinct(), None) else {
+      if (!hasIndex) droppedFrom(candNew, None) else {
       val fsBandEpochs = bandsFam.epochs.filter(_ < epoch)
       if (!probeGate(fsStateEpochs)) {
         // SHALLOW history: the probe's extra driver round trips (bucket

@@ -55,11 +55,14 @@ object Mixing {
     * Unlike [[mixtureRates]] the weights derive FROM the corpus, so no
     * hand-tuned map is needed as sources appear/disappear upstream.
     *
-    * Shape: one per-source aggregate (|sources| rows), one 1-row total
-    * joined back as a provably-scalar cross (Catalyst maxRows = 1 —
-    * PlanSweep-clean); the corpus is never touched here. The rate is
-    * round(·, 6)-quantized so the oracle's libm pow and the JVM's agree
-    * on the downstream bucket threshold.
+    * Shape: the per-source aggregate (|sources| rows) is collected ONCE
+    * in the build phase, under a job description naming this operator;
+    * the weights and rates are finished over a local relation of those
+    * rows, so the returned frame reads no corpus. A lazy rates frame is
+    * re-aggregated by each of its consumers: Spark does not reuse an
+    * exchange above a cached relation, and callers pass one. The rate
+    * is round(·, 6)-quantized so the oracle's libm pow and the JVM's
+    * agree on the downstream bucket threshold.
     */
   def temperatureRates(df: DataFrame, tokenCol: String, sourceCol: String,
       alpha: Double, targetTokens: Long): DataFrame = {
@@ -67,12 +70,18 @@ object Mixing {
     require(targetTokens > 0, s"token budget must be positive: $targetTokens")
     val tot = df.groupBy(col(sourceCol))
       .agg(sum(col(tokenCol)).cast("long").as("source_tokens"))
-    val wsum = tot.agg(sum(pow(col("source_tokens"), lit(alpha))).as("wsum"))
-    tot.crossJoin(broadcast(wsum))
-      .withColumn("weight", pow(col("source_tokens"), lit(alpha)) / col("wsum"))
+      .withColumn("__w", pow(col("source_tokens"), lit(alpha)))
+    val spark = df.sparkSession
+    val rows = graft.GraftConf.withJobDescription(spark,
+      s"Mixing.temperatureRates by $sourceCol")(tot.collect())
+    // the sum aggregate's rule: nulls skipped, no values -> NULL
+    val ws = rows.filterNot(_.isNullAt(2)).map(_.getDouble(2))
+    val wsum = if (ws.isEmpty) lit(null).cast("double") else lit(ws.sum)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), tot.schema)
+      .withColumn("weight", col("__w") / wsum)
       .withColumn("rate", least(lit(1.0),
         round(col("weight") * lit(targetTokens.toDouble) / col("source_tokens"), 6)))
-      .drop("wsum")
+      .drop("__w")
   }
 
   /** Kept rows under the temperature mixture (same stable-bucket keep rule

@@ -221,7 +221,7 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
 
   /** `body` with its Spark jobs described as `verb` on this family. */
   private def labelled[T](verb: String)(body: => T): T =
-    withJobDescription(spark, s"StateFamily.$verb $path")(body)
+    graft.GraftConf.withJobDescription(spark, s"StateFamily.$verb $path")(body)
 
   private def writeStamp(under: Path): Unit = {
     fs.mkdirs(under)
@@ -282,21 +282,6 @@ private[graft] object StateFamily {
   def drop(spark: SparkSession, path: String): Unit = {
     val fs = graft.GraftConf.fileSystem(spark, new Path(path))
     Seq("", RebuildStage, RebuildOld).foreach(s => fs.delete(new Path(path + s), true))
-  }
-
-  /** The local property Spark describes a job with. */
-  val JobDescription = "spark.job.description"
-
-  /** Run `body` with [[JobDescription]] set to `label`, so its jobs (in
-    * the UI, the event log, a listener's job start) name the operator
-    * step instead of a call site; the caller's description is restored
-    * after.
-    */
-  def withJobDescription[T](spark: SparkSession, label: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty(JobDescription)
-    sc.setJobDescription(label)
-    try body finally sc.setJobDescription(prev)
   }
 
   private def readStamp(fs: FileSystem, dir: Path): Option[(String, StructType)] = {
@@ -449,7 +434,7 @@ private[llm] object EpochStream {
       .option("maxFilesPerTrigger", 1)
       .parquet(stagedDir)
     val labelled: (DataFrame, Long) => Unit = (df, id) =>
-      StateFamily.withJobDescription(s2, s"EpochStream.drain $stagedDir batch $id")(body(df, id))
+      graft.GraftConf.withJobDescription(s2, s"EpochStream.drain $stagedDir batch $id")(body(df, id))
     val writer = stream.writeStream.foreachBatch(labelled)
     val q = checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c)).start()
     try q.processAllAvailable() finally q.stop()

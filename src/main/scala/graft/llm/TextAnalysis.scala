@@ -53,6 +53,13 @@ object TextAnalysis {
     when(size(toks) === 0, lit(0.0))
       .otherwise(size(array_distinct(toks)).cast("double") / size(toks).cast("double"))
 
+  /** Count of the most frequent element of a token array (0 when empty) —
+    * the numerator of the top-token share. One TopCount kernel pass per
+    * row, in the projection that holds `toks`; an explode + groupBy
+    * formulation shuffles every token and needs the tokens twice.
+    */
+  def topTokenCount(toks: Column): Column = toCol(graft.expressions.TopCount(toExpr(toks)))
+
   /** 1 − distinct/total over word bigrams; 0 for docs under two tokens. */
   def dupBigramFraction(toks: Column): Column = {
     val bigrams = transform(sequence(lit(0), size(toks) - 2),

@@ -1120,8 +1120,8 @@ object LlmQueries {
 
     // Repetition quality filters (public Gopher/MassiveText rule family):
     // distinct-unigram ratio, duplicate-bigram fraction, and the dominant
-    // token's frequency share. The top-token stat is the only shuffle
-    // ((doc, token) counts — short keys, map-side combined).
+    // token's frequency share. One tokenization and one projection: the
+    // top-token count is a per-row kernel over the same token array.
     QueryDef.sql(
       "q82_repetition_stats",
       """WITH t AS (
@@ -1143,19 +1143,16 @@ object LlmQueries {
         |  CASE WHEN b.n_tok = 0 THEN 0.0 ELSE CAST(COALESCE(top.top_c, 0) AS DOUBLE) / b.n_tok END AS top_tok_frac
         |FROM base b LEFT JOIN top USING (doc_id)
         |ORDER BY b.doc_id""".stripMargin) { (s, d) =>
-      val t = Tables.documents(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), TextAnalysis.wordTokens(col("text")).as("ws"))
-      val base = t.select(col("doc_id"),
-        size(col("ws")).cast("long").as("n_tok"),
-        TextAnalysis.distinctUnigramRatio(col("ws")).as("uniq_ratio"),
-        TextAnalysis.dupBigramFraction(col("ws")).as("dup_bigram_frac"))
-      val top = t.select(col("doc_id"), explode(col("ws")).as("w"))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id")).agg(max(col("c")).as("top_c"))
-      base.join(top, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          size(col("ws")).cast("long").as("n_tok"),
+          TextAnalysis.distinctUnigramRatio(col("ws")).as("uniq_ratio"),
+          TextAnalysis.dupBigramFraction(col("ws")).as("dup_bigram_frac"),
+          TextAnalysis.topTokenCount(col("ws")).as("top_c"))
         .select(col("doc_id"), col("n_tok"), col("uniq_ratio"), col("dup_bigram_frac"),
           when(col("n_tok") === 0, lit(0.0))
-            .otherwise(coalesce(col("top_c"), lit(0L)).cast("double") / col("n_tok").cast("double"))
+            .otherwise(col("top_c").cast("double") / col("n_tok").cast("double"))
             .as("top_tok_frac"))
         .orderBy(col("doc_id"))
     },

@@ -65,6 +65,21 @@ object KernelLaws extends Properties("graft.kernels") {
       got == ref
     }
 
+  // few distinct tokens so ties and repeats are common; non-ASCII tokens
+  // that differ only past their first byte; null elements
+  private val tokenArrays: Gen[Seq[Option[String]]] =
+    Gen.listOf(Gen.frequency(
+      6 -> Gen.oneOf("a", "b", "ab", "é", "e\u0301", "的", "的的").map(Option(_)),
+      1 -> Gen.const(Option.empty[String])))
+
+  property("topCount = max count of an explode + groupBy(element) over the array") =
+    forAll(tokenArrays) { toks =>
+      val arr = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        toks.map(_.map(u).orNull).toArray[Any])
+      val ref = toks.groupBy(identity).values.map(_.size.toLong).maxOption.getOrElse(0L)
+      TextKernels.topCount(arr) == ref
+    }
+
   property("shingles(1) = distinct lowercase [a-z]+ tokens in order") =
     forAll(asciiText) { s =>
       val got = {

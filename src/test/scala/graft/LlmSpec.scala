@@ -2876,6 +2876,44 @@ class LlmSpec extends SparkSpec {
     assert(kept.count() > 0 && kept.count() < df.count())
   }
 
+  /** The lazy formulation `temperatureRates` replaced: per-source totals,
+    * a 1-row wsum aggregate crossed back, weights and rates as columns.
+    */
+  private def lazyTemperatureRates(df: org.apache.spark.sql.DataFrame, tokenCol: String,
+      sourceCol: String, alpha: Double, targetTokens: Long): org.apache.spark.sql.DataFrame = {
+    val tot = df.groupBy(col(sourceCol))
+      .agg(sum(col(tokenCol)).cast("long").as("source_tokens"))
+    val wsum = tot.agg(sum(pow(col("source_tokens"), lit(alpha))).as("wsum"))
+    tot.crossJoin(broadcast(wsum))
+      .withColumn("weight", pow(col("source_tokens"), lit(alpha)) / col("wsum"))
+      .withColumn("rate", least(lit(1.0),
+        round(col("weight") * lit(targetTokens.toDouble) / col("source_tokens"), 6)))
+      .drop("wsum")
+  }
+
+  test("temperatureRates: same rates and rounded weights as the lazy formulation, 64 sources") {
+    import graft.llm.Mixing
+    // 64 sources with skewed token mass (~60 .. ~3M tokens), null-token
+    // rows, and one source whose every count is null
+    val rows = (0 until 4000).map { i =>
+      val k = (i * 37) % 64
+      (i.toLong, s"s$k", if (i % 97 == 0) None else Some(1L + k * k * (i % 13).toLong))
+    } :+ ((4000L, "nulls_only", Option.empty[Long]))
+    val base = rows.toDF("id", "source", "n_tok")
+    for (parts <- Seq(1, 3, 8); alpha <- Seq(0.3, 0.5, 1.0); budget <- Seq(5000L, 200000L)) {
+      val df = base.repartition(parts)
+      def rounded(f: org.apache.spark.sql.DataFrame) =
+        f.select(col("source"), col("source_tokens"), round(col("weight"), 6).as("w6"),
+            col("rate"))
+          .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+      val got = Mixing.temperatureRates(df, "n_tok", "source", alpha, budget)
+      assert(got.columns.toSeq === Seq("source", "source_tokens", "weight", "rate"))
+      val want = rounded(lazyTemperatureRates(df, "n_tok", "source", alpha, budget))
+      assert(want.size === 65)
+      assert(rounded(got) === want, s"parts=$parts alpha=$alpha budget=$budget")
+    }
+  }
+
   test("bigramLogProb: hand-computed model, short docs surface as (0, NULL)") {
     import spark.implicits._
     // corpus: "a b a b" (bigrams ab, ba, ab), "b a" (ba), "x" (none), "" (none)

@@ -5,12 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.MetricsBridge
+import graft.GraftConf
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
-/** The epoch-state verbs and the stream drain describe their Spark jobs
-  * with the verb and the directory they work on, and give the caller's
-  * description back afterwards.
+/** The epoch-state verbs, the stream drain and the operators with
+  * build-phase jobs describe their Spark jobs with the verb and what it
+  * works on, and give the caller's description back afterwards.
   */
 class JobLabelSpec extends graft.SparkSpec {
 
@@ -18,7 +19,7 @@ class JobLabelSpec extends graft.SparkSpec {
   private val listener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
       descriptions.add(Option(e.properties)
-        .flatMap(p => Option(p.getProperty(StateFamily.JobDescription))).getOrElse("<none>"))
+        .flatMap(p => Option(p.getProperty(GraftConf.JobDescription))).getOrElse("<none>"))
   }
 
   /** The descriptions of the jobs `body` started; the caller's description
@@ -26,12 +27,12 @@ class JobLabelSpec extends graft.SparkSpec {
     */
   private def labels(body: => Unit): Set[String] = {
     val sc = spark.sparkContext
-    val before = sc.getLocalProperty(StateFamily.JobDescription)
+    val before = sc.getLocalProperty(GraftConf.JobDescription)
     MetricsBridge.waitListenerBusEmpty(sc)
     descriptions.clear()
     body
     MetricsBridge.waitListenerBusEmpty(sc)
-    assert(sc.getLocalProperty(StateFamily.JobDescription) === before)
+    assert(sc.getLocalProperty(GraftConf.JobDescription) === before)
     descriptions.asScala.toSet
   }
 
@@ -62,11 +63,35 @@ class JobLabelSpec extends graft.SparkSpec {
       sc.setJobDescription(null)
       // no caller label: none is left behind
       assert(labels(fam.append(rows(10), 10L, nFiles = 1)) === Set(verb("append")))
-      assert(sc.getLocalProperty(StateFamily.JobDescription) === null)
+      assert(sc.getLocalProperty(GraftConf.JobDescription) === null)
     } finally {
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
     graft.ops.Layout.deleteRecursively(base)
+  }
+
+  test("temperatureRates and nearDedupIncrement label their build-phase jobs") {
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    val dir = Files.createTempDirectory("graft_job_labels_near")
+    try {
+      val tokens = spark.range(40).select(col("id"),
+        (col("id") % 3).cast("string").as("source"), lit(5L).as("n"))
+      assert(labels(Mixing.temperatureRates(tokens, "n", "source", 0.5, 50L)) ===
+        Set("Mixing.temperatureRates by source"))
+      val docs = spark.range(6).select(col("id"),
+        concat(lit("the quick brown fox jumps over "), (col("id") % 2).cast("string")).as("text"))
+      val near = labels(Dedup.nearDedupIncrement(docs, "id", "text", dir.toString, 0.5, 0L))
+      val own = s"Dedup.nearDedupIncrement $dir epoch=0"
+      assert(near.contains(own), near)
+      // the verbs it calls label their own jobs; none runs under the caller's
+      assert(near.forall(l => l == own || l.startsWith("StateFamily.")), near)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    graft.ops.Layout.deleteRecursively(dir)
   }
 }

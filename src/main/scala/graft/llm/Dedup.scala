@@ -2,7 +2,6 @@ package graft.llm
 
 import graft.expressions.{MinHashSig, ShingleTokens, SimHash64}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -137,10 +136,12 @@ object Dedup {
     * output (sig is functionally determined by id, so the distinct is
     * unchanged) — callers that pin signature values avoid a re-join.
     *
-    * Both join sides read the banded rows through ONE
-    * `repartition(band, chunk)` exchange, which the adaptive planner
-    * reuses: joined directly, each side plans its own exchange over
-    * `sigs` and runs the signature kernel upstream again.
+    * The join is a self-join of the banded frame, renamed only above
+    * it, so both sides plan the same (band, chunk) exchange and the
+    * adaptive planner reuses it: renamed below the join, the two
+    * exchanges differ, and each side runs the signature kernel upstream
+    * again. The exchange is the join's own, so a skewed (band, chunk)
+    * key can still be split.
     */
   def simHashPairsFromSigs(sigs: DataFrame, maxHamming: Int,
       keepSigs: Boolean = false): DataFrame = {
@@ -156,14 +157,14 @@ object Dedup {
           shiftrightunsigned(col("sig"), starts(b)).bitwiseAND(lit(mask)).as("chunk"))
       }: _*)).as("bb"))
       .select(col("id"), col("sig"), col("bb.band"), col("bb.chunk"))
-      .repartition(col("band"), col("chunk"))
-    val l = banded.select(col("band"), col("chunk"), col("id").as("id1"), col("sig").as("sig1"))
-    val r = banded.select(col("band"), col("chunk"), col("id").as("id2"), col("sig").as("sig2"))
     val hammingCol =
       bit_count(col("sig1").bitwiseXOR(col("sig2"))).cast("long").as("hamming")
     // a merge join reads the one exchange on both sides; a broadcast of
     // one side would add a job to collect it
-    val joined = l.join(r.hint("merge"), Seq("band", "chunk")).filter(col("id1") < col("id2"))
+    val joined = banded.as("l").join(banded.as("r").hint("merge"), Seq("band", "chunk"))
+      .select(col("l.id").as("id1"), col("r.id").as("id2"),
+        col("l.sig").as("sig1"), col("r.sig").as("sig2"))
+      .filter(col("id1") < col("id2"))
     val picked =
       if (keepSigs) joined.select(col("id1"), col("id2"), hammingCol, col("sig1"), col("sig2"))
       else joined.select(col("id1"), col("id2"), hammingCol)
@@ -230,13 +231,13 @@ object Dedup {
     *
     * Scale shape: one md5 per (doc, shingle) in a codegen projection (no
     * HOF folds), 16 mins in ONE map-side-combined aggregate (no row
-    * blowup), banding groups 4 rows/doc by their slots in one exchange,
-    * and only candidate pairs re-attach shingle arrays for the verify.
+    * blowup), banding joins 4 rows/doc of 5 ints, and only candidate
+    * pairs re-attach shingle arrays for the verify.
     */
   def minHashLshPairsPortable(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     val tok = graft.ops.CacheRegistry.persist(portableTok(df, idCol, textCol))
-    val cand = bandSelfCands(portableSigs(tok))
+    val cand = bandSelfCands(portableBands(tok)).distinct()
     val t1 = tok.select(col("id").as("id1"), col("toks").as("toks1"))
     val t2 = tok.select(col("id").as("id2"), col("toks").as("toks2"))
     cand.join(t1, "id1").join(t2, "id2")
@@ -273,39 +274,30 @@ object Dedup {
     min((col("h") * (2L * j + 3L) + 104729L * (j + 1)) % 2147483647L).as(s"s$j")
   }
 
-  /** (id1 < id2) candidate pairs sharing all four slots of ≥1 band of
-    * their portable signatures (`sigs`: id, s0..s15), each pair once
-    * when ids are unique.
-    * One exchange: each (band, slots) group is sorted by id, and every
-    * row pairs with the earlier ids of its group, keeping a pair only in
-    * the first band the two share. Every caller's `sigs` reads a cached
-    * frame, and Spark does not reuse an exchange above a cached relation:
-    * a band self-join would run the signature aggregate once per side,
-    * and its pairs would need a distinct.
+  /** (id, id1<id2) candidate pairs sharing all four slots of ≥1 band.
+    * Over bands aggregated above a cached frame (q134) each side runs
+    * the aggregate, as the planner reuses no exchange above a cached
+    * relation; pairing inside band groups over one window exchange
+    * removed that but ran a duplicate-heavy group in one task, several
+    * times slower (ROADMAP carried items).
     */
-  private def bandSelfCands(sigs: DataFrame): DataFrame = {
-    val bands = array((0 until 4).map(t => array((0 until 4).map(r => col(s"s${t * 4 + r}")): _*)): _*)
-    val earlier = Window.partitionBy(col("band"), col("slots")).orderBy(col("id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    def firstBands(bs: Column): Column = slice(bs, lit(1), col("band"))
-    sigs.select(col("id"), bands.as("bs"), posexplode(bands).as(Seq("band", "slots")))
-      .select(col("id").as("id2"), col("bs").as("bs2"), col("band"),
-        collect_list(struct(col("id"), col("bs"))).over(earlier).as("prev"))
-      .select(col("id2"), col("bs2"), col("band"), explode(col("prev")).as("p"))
-      .filter(col("p.id") < col("id2") && !exists(
-        zip_with(firstBands(col("p.bs")), firstBands(col("bs2")), _ === _), identity))
-      .select(col("p.id").as("id1"), col("id2"))
+  private def bandSelfCands(bands: DataFrame): DataFrame = {
+    val keys = Seq("band", "v0", "v1", "v2", "v3")
+    bands.select((keys.map(col) :+ col("id").as("id1")): _*)
+      .join(bands.select((keys.map(col) :+ col("id").as("id2")): _*), keys)
+      .filter(col("id1") < col("id2"))
+      .select(col("id1"), col("id2"))
   }
 
-  /** Engine-portable MinHash signatures (id, s0..s15) from the
+  /** Engine-portable 4×4 banded MinHash rows (id, band, v0..v3) from the
     * string-shingle frame. Every value is a deterministic integer
     * function of the text — the property that makes candidate SETS (and
     * therefore incremental keep decisions) SQL-replayable.
     */
-  private def portableSigs(tok: DataFrame): DataFrame = {
+  private def portableBands(tok: DataFrame): DataFrame = {
     val inv = tok.select(col("id"), explode(col("toks")).as("w"))
       .withColumn("h", md5Hi32(col("w")))
-    inv.groupBy(col("id")).agg(sigMinExprs.head, sigMinExprs.tail: _*)
+    stateBands(inv.groupBy(col("id")).agg(sigMinExprs.head, sigMinExprs.tail: _*))
   }
 
   /** Per-doc index state (id, hs, s0..s15): the distinct md5-hi32 shingle
@@ -357,7 +349,7 @@ object Dedup {
   private[graft] def portableHashedPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     val state = graft.ops.CacheRegistry.persist(portableState(df, idCol, textCol))
-    val cand = bandSelfCands(state)
+    val cand = bandSelfCands(stateBands(state)).distinct()
     // hint = false: both sides here are the WHOLE corpus — forcing a
     // broadcast would cap the global twin at driver memory
     verifyPairs(cand, state.select(col("id"), col("hs")),
@@ -767,7 +759,7 @@ object Dedup {
     // had empty shingle sets appends zero rows
     val hasIndex = stateFam.exists
 
-    val candNew = bandSelfCands(state)
+    val candNew = bandSelfCands(bands)
     // PROBE-PRUNED history side: per-increment IO tracks the BATCH, not
     // the index. The at-rest `bands` family is epoch-partitioned (same
     // file sizing as its base family — no small-files tax), each epoch's
@@ -807,7 +799,7 @@ object Dedup {
           .select(col("id2").as("id")).distinct())
     }
     val dropped =
-      if (!hasIndex) droppedFrom(candNew, None) else {
+      if (!hasIndex) droppedFrom(candNew.distinct(), None) else {
       val fsBandEpochs = bandsFam.epochs.filter(_ < epoch)
       if (!probeGate(fsStateEpochs)) {
         // SHALLOW history: the probe's extra driver round trips (bucket

@@ -1152,7 +1152,7 @@ object LlmQueries {
           TextAnalysis.topTokenCount(col("ws")).as("top_c"))
         .select(col("doc_id"), col("n_tok"), col("uniq_ratio"), col("dup_bigram_frac"),
           when(col("n_tok") === 0, lit(0.0))
-            .otherwise(col("top_c").cast("double") / col("n_tok").cast("double"))
+            .otherwise(coalesce(col("top_c"), lit(0L)).cast("double") / col("n_tok").cast("double"))
             .as("top_tok_frac"))
         .orderBy(col("doc_id"))
     },

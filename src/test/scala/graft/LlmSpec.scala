@@ -1994,6 +1994,36 @@ class LlmSpec extends SparkSpec {
     assert(out(2).getDouble(1) === 0.0 && out(2).getDouble(2) === 0.0)
   }
 
+  test("q82 equals its explode + groupBy formulation, empty and null texts included") {
+    val src = Tables.documents(spark, "/root/testdata/sf0.001")
+    val first = src.orderBy(col("doc_id")).limit(1)
+    val docs = src
+      .unionByName(first.withColumn("doc_id", col("doc_id") - 1).withColumn("text", lit("")))
+      .unionByName(first.withColumn("doc_id", col("doc_id") - 2)
+        .withColumn("text", lit(null).cast("string")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_q82_").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    val q = graft.SparkEntry.allDefs.find(_.name == "q82_repetition_stats").get
+    val got = q.fn(spark, dir).collect().toSeq
+    val t = Tables.documents(spark, dir)
+      .select(col("doc_id"), TextAnalysis.wordTokens(col("text")).as("ws"))
+    val top = t.select(col("doc_id"), explode(col("ws")).as("w"))
+      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id")).agg(max(col("c")).as("top_c"))
+    val want = t.select(col("doc_id"), size(col("ws")).cast("long").as("n_tok"),
+        TextAnalysis.distinctUnigramRatio(col("ws")).as("uniq_ratio"),
+        TextAnalysis.dupBigramFraction(col("ws")).as("dup_bigram_frac"))
+      .join(top, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_tok"), col("uniq_ratio"), col("dup_bigram_frac"),
+        when(col("n_tok") === 0, lit(0.0))
+          .otherwise(coalesce(col("top_c"), lit(0L)).cast("double") / col("n_tok").cast("double"))
+          .as("top_tok_frac"))
+      .orderBy(col("doc_id")).collect().toSeq
+    assert(got === want)
+    // the null text's share is a number, not NULL
+    assert(got.head.getDouble(4) === 0.0)
+  }
+
   test("hashSample: boundary fractions, determinism, null labels keep default") {
     import graft.llm.Splits
     val ids = Tables.documents(spark, "/root/testdata/sf0.001").select(col("doc_id"))

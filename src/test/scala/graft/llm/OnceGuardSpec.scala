@@ -5,9 +5,11 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{DataSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
+  QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.graft.MetricsBridge
 
 /** Compute once: each corpus operator evaluates its text kernels and its
@@ -21,9 +23,13 @@ import org.apache.spark.sql.graft.MetricsBridge
   *    relations it reads, every graft kernel appears in at most one stage
   *    that is not a reused exchange, and at most once in that stage (a
   *    kernel copied into a pushed-down filter runs twice per row);
-  *  - no two shuffle stages of that plan compute the same thing.
+  *  - no two shuffle stages of that plan compute the same thing, but for
+  *    the known repeats below, which are asserted exactly.
+  *
+  * A second test checks that the exchange simHash pairing shares between
+  * its join sides is the join's own, which adaptive skew handling splits.
   */
-class OnceGuardSpec extends graft.SparkSpec {
+class OnceGuardSpec extends graft.SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -33,8 +39,18 @@ class OnceGuardSpec extends graft.SparkSpec {
   private val jobBudget = Map(
     "q34_simhash_pairs" -> 5,
     "q82_repetition_stats" -> 3,
-    "q134_minhash_lsh_portable" -> 7,
+    "q134_minhash_lsh_portable" -> 8,
     "q161_bpe_temperature_mixture" -> 8)
+
+  /** Shuffle stages a query is known to compute more than once (sizes of
+    * the groups of equal stages), each owned by an open ROADMAP item.
+    * q134's band self-join reads the signature aggregate over its cached
+    * shingle frame on both sides, and the planner reuses no exchange
+    * above a cached relation, so the aggregate runs twice (ROADMAP
+    * "q134 computes its band aggregate once per join side"). Asserted
+    * exactly: the spec fails once the repeat is gone, until the entry is.
+    */
+  private val knownRepeats = Map("q134_minhash_lsh_portable" -> Seq(2))
 
   private val jobs = new java.util.concurrent.atomic.AtomicInteger()
   private val listener = new SparkListener {
@@ -126,8 +142,9 @@ class OnceGuardSpec extends graft.SparkSpec {
         s"$name: kernels evaluated more than once in one stage: ${twicePerStage.mkString(", ")}"),
       Option.when(stagesPerKernel.nonEmpty)(
         s"$name: kernels evaluated in several stages: ${stagesPerKernel.mkString(", ")}"),
-      Option.when(repeated.nonEmpty)(
-        s"$name: shuffle stages computed more than once: ${repeated.mkString(", ")}"),
+      Option.when(repeated.sorted != knownRepeats.getOrElse(name, Nil))(
+        s"$name: shuffle stages computed more than once: ${repeated.mkString(", ")}" +
+          s" (known: ${knownRepeats.getOrElse(name, Nil).mkString(", ")})"),
       Option.when(n > jobBudget(name))(s"$name: $n jobs in a warm run, budget ${jobBudget(name)}")
     ).flatten
   }
@@ -138,5 +155,31 @@ class OnceGuardSpec extends graft.SparkSpec {
       try jobBudget.keys.toSeq.sorted.flatMap(check)
       finally spark.sparkContext.removeSparkListener(listener)
     assert(broken.isEmpty, broken.mkString("\n"))
+  }
+
+  test("simHash pairing reads one reused join exchange that can still split a skewed key") {
+    val s = graft.GraftConf.cloneSession(spark, 32)
+    import s.implicits._
+    // every even id is the same text: its four (band, chunk) keys each
+    // hold 300 rows, in the blocks of every map task
+    val docs = (0 until 600).map { i =>
+      (i.toLong, if (i % 2 == 0) "the quick brown fox jumps over the lazy dog"
+                 else s"document $i about topic ${i * 7919} and ${i % 13}")
+    }.toDF("id", "text")
+    def pairs(): (Set[org.apache.spark.sql.Row], SparkPlan) = {
+      val df = Dedup.simHashPairs(docs, "id", "text", 3)
+      (df.collect().toSet, df.queryExecution.executedPlan)
+    }
+    val (plain, plainPlan) = pairs()
+    assert(plain.size >= 300 * 299 / 2)
+    assert(collect(plainPlan) { case r: ReusedExchangeExec => r }.nonEmpty,
+      "both join sides should read one exchange")
+    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1")
+    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    val (split, splitPlan) = pairs()
+    assert(collect(splitPlan) { case j: SortMergeJoinExec if j.isSkewJoin => j }.nonEmpty,
+      "the skewed (band, chunk) keys should be split")
+    assert(split === plain)
   }
 }

@@ -132,7 +132,6 @@ object Classify {
       schema: org.apache.spark.sql.types.StructType, labelCol: String, textCol: String,
       buckets: Int, alpha: Double, stateDir: String, outDir: String,
       checkpointDir: Option[String] = None,
-      shufflePartitions: Int = 0,
       compactEvery: Int = 0,
       snapshotEvery: Int = 1): DataFrame = {
     require(snapshotEvery >= 1, s"snapshot cadence must be >= 1: $snapshotEvery")
@@ -140,7 +139,7 @@ object Classify {
       .add("label", schema(labelCol).dataType)
       .add("bucket", "bigint").add("w_u", "bigint").add("prior_u", "bigint")
     EpochStream.run(spark, stagedDir, schema, checkpointDir,
-        shufflePartitions, outDir, modelSchema) { (batch, batchId) =>
+        outDir, modelSchema) { (batch, batchId) =>
       val tok = batch.select(col(labelCol).as("label"),
           explode(TextAnalysis.wordTokens(col(textCol))).as("term"))
         .select(col("label"), featureBucket(col("term"), buckets).as("bucket"))
@@ -148,21 +147,14 @@ object Classify {
       val docRows = batch.groupBy(col(labelCol).as("label"))
         .agg(count(lit(1)).as("c")).withColumn("bucket", lit(-1L))
         .select(col("label"), col("bucket"), col("c"))
-      graft.ops.CacheRegistry.during(tok.unionByName(docRows)) { bt =>
-        val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
-        state.append(bt, batchId)
-        if ((batchId + 1) % snapshotEvery == 0) {
-          graft.ops.CacheRegistry.during(state.settled(batchId).unionByName(bt)
-              .groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c"))) { cum =>
-            EpochStream.writeSnapshot(nbModelFromCounts(
-                cum.filter(col("bucket") >= 0),
-                cum.filter(col("bucket") === -1L).select(col("label"), col("c").as("nd")),
-                buckets, alpha), outDir, batchId)
-          }
+      val bt = tok.unionByName(docRows)
+      new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+        .accumulate(bt, batchId, compactEvery, emit = (batchId + 1) % snapshotEvery == 0) { cum =>
+          EpochStream.writeSnapshot(nbModelFromCounts(
+              cum.filter(col("bucket") >= 0),
+              cum.filter(col("bucket") === -1L).select(col("label"), col("c").as("nd")),
+              buckets, alpha), outDir, batchId)
         }
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          state.compact(_.groupBy(col("label"), col("bucket")).agg(sum(col("c")).as("c")))
-      }
     }
   }
 

@@ -636,17 +636,12 @@ object Dedup {
     * × 128 KiB + per-group footer/bloom overhead — flat in history
     * volume, linear only in batch size, and the granularity SURVIVES
     * compaction's rebuild (the sentinel epoch is just more groups).
-    *
-    * Directories holding band data WITHOUT the family stamp are the
-    * retired bucket layout: readers IGNORE them (the sig-derive fallback
-    * reads fewer bytes than that layout ever saved) and writers stop
-    * appending; the next compaction rebuilds them as bk-v1.
     */
   private[graft] val BandsLayout = FamilyLayout("bk-v1", Seq("bk"),
     // bloom ndv = expected distinct keys per row GROUP (~3.2k band rows
     // at 128 KiB)
     Map("parquet.block.size" -> BandBlockBytes.toString) ++ keyBloomOptions("bk", 4000),
-    unstampedRetired = true, clusterAppends = true)
+    clusterAppends = true)
 
   /** Cap on the value-set size the probe pushes as a parquet In filter.
     * Spark expands a pushed In into a chained OR of EQs (the form that
@@ -819,13 +814,12 @@ object Dedup {
       } else {
       // the batch's band-key hash set: a bounded driver pass (≤ 4 keys
       // per batch doc). Band epochs are ROUTED (probed via the bk bloom
-      // layout) only when the directory is bk-v1 AND the key set is
-      // within the pushdown cap — a retired-layout directory or an
+      // layout) only when the key set is within the pushdown cap — an
       // over-cap batch rides the sig-derive fallback for every epoch,
       // which measures CHEAPER than scanning any band layout unpruned.
       val bandKeys = bands.select(bandKey.as("bk")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      val bandsUsable = !bandsFam.retired && bandKeys.size <= MaxPushedInValues
+      val bandsUsable = bandKeys.size <= MaxPushedInValues
       val routedEpochs =
         if (bandsUsable) (fsStateEpochs intersect fsBandEpochs).toSeq else Seq.empty
       val legacyEpochs = (fsStateEpochs diff routedEpochs.toSet).toSeq
@@ -886,9 +880,7 @@ object Dedup {
     // absent from bands derive band rows on the fly) until the next
     // compaction's rebuildBandsFromState backfills every epoch — at most
     // ProbeMinEpochs early, batch-sized epochs ride the fallback.
-    // ... and never into a retired-layout directory: its epochs ride the
-    // sig-derive fallback until compaction rebuilds the family as bk-v1
-    if (probeGate(fsStateEpochs + epoch) && !bandsFam.retired) {
+    if (probeGate(fsStateEpochs + epoch)) {
       // band routing family FIRST, then state: a state epoch on disk
       // thereby implies its band files are complete (the probe's legacy
       // fallback covers the reverse crash window — band rows whose state
@@ -951,8 +943,8 @@ object Dedup {
   def nearDedupStreaming(spark: org.apache.spark.sql.SparkSession, stagedDir: String,
       schema: org.apache.spark.sql.types.StructType, idCol: String, textCol: String,
       indexDir: String, outDir: String, threshold: Double,
-      checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame = {
-    EpochStream.run(spark, stagedDir, schema, checkpointDir, shufflePartitions, outDir,
+      checkpointDir: Option[String] = None): DataFrame = {
+    EpochStream.run(spark, stagedDir, schema, checkpointDir, outDir,
         keepFlagsSchema(schema(idCol).dataType)) {
       (batch, batchId) => EpochStream.writeSnapshot(
         nearDedupIncrement(batch, idCol, textCol, indexDir, threshold, epoch = batchId),
@@ -972,8 +964,8 @@ object Dedup {
   def exactDedupStreaming(spark: org.apache.spark.sql.SparkSession, stagedDir: String,
       schema: org.apache.spark.sql.types.StructType, idCol: String, fpCol: Column,
       indexDir: String, outDir: String,
-      checkpointDir: Option[String] = None, shufflePartitions: Int = 4): DataFrame = {
-    EpochStream.run(spark, stagedDir, schema, checkpointDir, shufflePartitions, outDir,
+      checkpointDir: Option[String] = None): DataFrame = {
+    EpochStream.run(spark, stagedDir, schema, checkpointDir, outDir,
         keepFlagsSchema(LongType)) {
       (batch, batchId) => EpochStream.writeSnapshot(
         exactDedupIncrement(batch, idCol, fpCol, indexDir, epoch = batchId), outDir, batchId)
@@ -1047,11 +1039,10 @@ object Dedup {
   /** Rebuild the band routing family wholesale from the (just-compacted)
     * state family: derive band rows + bk for EVERY state epoch, stage
     * them in the bk-v1 layout, and swap the whole bands directory —
-    * this is ALSO the migration path for retired-layout (bucket) and
-    * deferred-epoch directories. Crash windows all degrade to
-    * correct-but-slower: bands missing → the increment derives bands
-    * from state on the fly; a leftover stage/old dir is swept on the
-    * next rebuild.
+    * this is ALSO the backfill path for deferred-epoch directories.
+    * Crash windows all degrade to correct-but-slower: bands missing → the
+    * increment derives bands from state on the fly; a leftover stage/old
+    * dir is swept on the next rebuild.
     */
   private[llm] def rebuildBandsFromState(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {

@@ -16,9 +16,7 @@ import org.apache.spark.sql.types._
   * values, oracle-pinned via deterministic synthetic images whose pixel
   * formula the DuckDB side replays in closed form. Audio/video stay
   * raw-layout contracts (PCM16 / frame-major rawvideo — real layouts, no
-  * codec needed), and [[fakeDecode]]/[[fakeResize]] remain as the
-  * clearly-marked byte-level fallbacks for formats with no JVM decoder
-  * (swap for a JNI/process call or `mapInArrow` in production).
+  * codec needed).
   */
 object Multimodal {
 
@@ -54,9 +52,8 @@ object Multimodal {
     StructField("n_bytes", LongType, nullable = false)))
 
   /** Audio table from any (id, binary) source: payload treated as 16-bit
-    * mono PCM at `sampleRate` (the fixture has no real codecs — same
-    * honest-stub stance as `fakeDecode`; the framing arithmetic below is
-    * the real part).
+    * mono PCM at `sampleRate` (the fixture has no real codecs; the framing
+    * arithmetic below is the real part).
     */
   def asAudioTable(df: DataFrame, idCol: String, payloadCol: String,
       sampleRate: Int): DataFrame =
@@ -543,81 +540,6 @@ object Multimodal {
       }
     }
     spark.createDataFrame(rdd, tileSchema)
-  }
-
-  /** STUB — deterministic fake "decode + feature-extract" of a media
-    * payload: 8 float features from byte statistics. The byte-level
-    * fallback for formats with no JVM decoder; a real deployment
-    * replaces this body with the codec call; signature and batch shape stay.
-    */
-  def fakeDecode(payload: Array[Byte]): Array[Float] = {
-    var sum = 0L; var min = 255; var max = 0
-    var i = 0
-    while (i < payload.length) {
-      val b = payload(i) & 0xff
-      sum += b; if (b < min) min = b; if (b > max) max = b
-      i += 1
-    }
-    val n = math.max(payload.length, 1)
-    Array(
-      payload.length.toFloat, (sum.toDouble / n).toFloat,
-      min.toFloat, max.toFloat,
-      (sum % 251).toFloat, (payload.headOption.map(_ & 0xff).getOrElse(0)).toFloat,
-      (payload.lastOption.map(_ & 0xff).getOrElse(0)).toFloat,
-      ((sum * 2654435761L) % 1009).toFloat)
-  }
-
-  /** Feature extraction over the media table: per-partition batch loop (the
-    * shape a real decoder wants — amortized codec init per partition, rows
-    * streamed through). Output: (media_id, features array<float>, n_bytes).
-    */
-  def extractFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false), nullable = false),
-      StructField("n_bytes", LongType, nullable = false)))
-    val rdd = media.select(col("media_id"), col("payload")).rdd.mapPartitions { rows =>
-      // per-partition init happens here in a real codec (decoder handle etc.)
-      rows.map { r =>
-        val id = r.getLong(0)
-        // guard: the schema declares payload non-null but an upstream cast
-        // can still produce one — treat as empty media, don't NPE the task
-        val payload = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
-        Row(id, fakeDecode(payload).toSeq, payload.length.toLong)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
-  /** STUB — deterministic fake "resize": stride-decimate the payload bytes
-    * to a target size budget (a real deployment decodes, resamples pixels,
-    * re-encodes). Signature, per-partition batch shape and the metadata
-    * contract (width/height stamped on the output) are the real pipeline's.
-    */
-  def fakeResize(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val target = math.max(1, math.min(payload.length, w * h))
-    val stride = math.max(1, payload.length / target)
-    val out = new Array[Byte](math.min(target, (payload.length + stride - 1) / stride))
-    var i = 0
-    while (i < out.length) { out(i) = payload(i * stride); i += 1 }
-    out
-  }
-
-  /** Resize over the media table: per-partition batch loop like
-    * `extractFeatures`; output rows keep media_id and carry the resized
-    * payload with width/height stamped in meta.
-    */
-  def resize(spark: SparkSession, media: DataFrame, w: Int, h: Int): DataFrame = {
-    val rdd = media.select(col("media_id"), col("payload"), col("meta.format")).rdd
-      .mapPartitions { rows =>
-        // per-partition init point for a real codec
-        rows.map { r =>
-          val payload = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
-          val resized = fakeResize(payload, w, h)
-          Row(r.getLong(0), resized, Row(r.getString(2), w, h, resized.length.toLong))
-        }
-      }
-    spark.createDataFrame(rdd, mediaSchema)
   }
 
   // ---------------------------------------------------------------------

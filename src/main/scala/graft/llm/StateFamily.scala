@@ -23,17 +23,11 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * is a semi-join — so they plain-append; the streaming operators' state
   * (additive counts, one score per document) would double-count them, so
   * `replaceEpoch` makes a re-run overwrite the writer's own epoch.
-  *
-  * `unstampedRetired`: a directory holding data but no stamp is a retired
-  * layout that readers skip and writers leave alone (the band routing
-  * family, whose readers fall back to deriving from state). For every
-  * other family unstamped data throws.
   */
 private[graft] final case class FamilyLayout(tag: String,
     sortCols: Seq[String] = Nil,
     options: Map[String, String] = Map.empty,
     replaceEpoch: Boolean = false,
-    unstampedRetired: Boolean = false,
     clusterAppends: Boolean = false)
 
 /** One epoch-partitioned state directory, and the single owner of its
@@ -57,23 +51,17 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
   private val dir = new Path(path)
   private val fs: FileSystem = graft.GraftConf.fileSystem(spark, dir)
   private var stamped = readStamp(fs, dir) match {
-    case None => false
+    case None =>
+      if (exists) throw new IllegalStateException(
+        s"state family at $path holds data but no $StampFile stamp; it cannot be " +
+          s"read as layout '${layout.tag}' schema ${dataSchema.catalogString}")
+      false
     case Some((tag, schema)) =>
       if (tag != layout.tag || schema.catalogString != dataSchema.catalogString)
         throw new IllegalStateException(s"state family at $path is stamped with " +
           s"layout '$tag' schema ${schema.catalogString}, but was opened with layout " +
           s"'${layout.tag}' schema ${dataSchema.catalogString}")
       true
-  }
-
-  /** Unstamped data under a retired-tolerant layout: readers skip it and
-    * writers never append to it (see [[FamilyLayout]]).
-    */
-  val retired: Boolean = !stamped && exists && {
-    if (!layout.unstampedRetired) throw new IllegalStateException(
-      s"state family at $path holds data but no $StampFile stamp; it cannot be " +
-        s"read as layout '${layout.tag}' schema ${dataSchema.catalogString}")
-    true
   }
 
   /** Whether the family holds DATA: a zero-row write leaves a directory
@@ -115,7 +103,6 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     require(df.schema.catalogString == dataSchema.catalogString,
       s"state family at $path: appended schema ${df.schema.catalogString} " +
         s"is not the family's ${dataSchema.catalogString}")
-    require(!retired, s"state family at $path is a retired layout; it takes no appends")
     if (!stamped) {
       writeStamp(dir)
       stamped = true
@@ -150,6 +137,30 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
         append(fresh, epoch, Layout.sizedFileCount(fresh.count()))
       }
       out
+    }
+  }
+
+  /** The additive-count verb of the streaming operators. `counts` is the
+    * batch's count triplets: a `c` column, last, summed per the columns
+    * before it. It appends as epoch `epoch`; when `emit`, `snapshot` then
+    * gets the cumulative counts (the settled epochs and this batch, summed
+    * per key) while they are cached. Every `compactEvery`-th epoch (0 =
+    * never) folds the settled epochs with the same sum, after the
+    * snapshot. Counts are additive, so the fold is decision-neutral, and
+    * the `replaceEpoch` layout makes a re-run replace its own epoch instead
+    * of counting the batch twice.
+    */
+  def accumulate(counts: DataFrame, epoch: Long, compactEvery: Int, emit: Boolean = true)(
+      snapshot: DataFrame => Unit): Unit = labelled("accumulate") {
+    require(layout.replaceEpoch, s"state family at $path: additive counts need replaceEpoch")
+    val keys = counts.columns.filter(_ != "c").map(col)
+    def summed(df: DataFrame) = df.groupBy(keys: _*).agg(sum(col("c")).as("c"))
+    // the batch feeds the append and the cumulative read; the cumulative
+    // counts feed every consumer of the snapshot
+    CacheRegistry.during(counts) { batch =>
+      append(batch, epoch)
+      if (emit) CacheRegistry.during(summed(settled(epoch).unionByName(batch)))(snapshot)
+      if (compactEvery > 0 && (epoch + 1) % compactEvery == 0) compact(summed)
     }
   }
 
@@ -416,7 +427,7 @@ private[llm] object EpochStream {
 
   /** Run `body` per micro-batch over a maxFilesPerTrigger=1 file stream
     * of `stagedDir`, on a session clone with shuffle partitions sized to
-    * the staged source (`shufflePartitions <= 0` = auto — a fixed small
+    * the staged source ([[Layout.adaptivePartsForDir]] — a fixed small
     * count makes every per-batch aggregate run the whole scaled increment
     * through that many partitions; measured superlinear at the 100×
     * replay fixture). The `body`'s queries run with AQE on, so the size
@@ -426,10 +437,8 @@ private[llm] object EpochStream {
     * are described `EpochStream.drain <stagedDir> batch <id>`.
     */
   def drain(spark: SparkSession, stagedDir: String, schema: StructType,
-      checkpointDir: Option[String], shufflePartitions: Int)(
-      body: (DataFrame, Long) => Unit): Unit = {
-    val s2 = graft.GraftConf.cloneSession(spark,
-      if (shufflePartitions > 0) shufflePartitions else Layout.adaptivePartsForDir(stagedDir))
+      checkpointDir: Option[String])(body: (DataFrame, Long) => Unit): Unit = {
+    val s2 = graft.GraftConf.cloneSession(spark, Layout.adaptivePartsForDir(stagedDir))
     val stream = s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagedDir)
@@ -447,9 +456,9 @@ private[llm] object EpochStream {
     * empty result instead of throwing.
     */
   def run(spark: SparkSession, stagedDir: String, schema: StructType,
-      checkpointDir: Option[String], shufflePartitions: Int, outDir: String,
+      checkpointDir: Option[String], outDir: String,
       snapshotSchema: StructType)(body: (DataFrame, Long) => Unit): DataFrame = {
-    drain(spark, stagedDir, schema, checkpointDir, shufflePartitions)(body)
+    drain(spark, stagedDir, schema, checkpointDir)(body)
     val typed = snapshotSchema.add(StructField("batch_id", LongType))
     val out = new Path(outDir)
     if (Layout.hasParquetData(graft.GraftConf.fileSystem(spark, out), out))

@@ -542,27 +542,16 @@ object TextAnalysis {
       schema: org.apache.spark.sql.types.StructType, idCol: String, textCol: String,
       q: Double, stateDir: String, outDir: String,
       checkpointDir: Option[String] = None,
-      shufflePartitions: Int = 0,
       compactEvery: Int = 0): org.apache.spark.sql.DataFrame =
     EpochStream.run(spark, stagedDir, schema, checkpointDir,
-        shufflePartitions, outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
-      // explode_outer keeps zero-token docs as a NULL-term sentinel
-      // (c = 0): they must appear in every snapshot with kept = false
-      graft.ops.CacheRegistry.during(batch.select(col(idCol).as("id"),
-          explode_outer(wordTokens(col(textCol))).as("term"))
-        .groupBy(col("id"), col("term"))
-        .agg(sum(when(col("term").isNotNull, 1L).otherwise(0L)).as("c"))) { bt =>
-        val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
-        state.append(bt, batchId)
-        graft.ops.CacheRegistry.during(state.settled(batchId).unionByName(bt)
-            .groupBy(col("id"), col("term")).agg(sum(col("c")).as("c"))) { cum =>
+        outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
+      val bt = batchTermCounts(batch, idCol, textCol)
+      new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+        .accumulate(bt, batchId, compactEvery) { cum =>
           val scored = unigramLogProbFromCounts(
             cum.filter(col("term").isNotNull), cum.select(col("id")).distinct())
           EpochStream.writeSnapshot(selectByQuantileFromScores(scored, q), outDir, batchId)
         }
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          state.compact(_.groupBy(col("id"), col("term")).agg(sum(col("c")).as("c")))
-      }
     }
 
   /** STREAMING quality-quantile selection against a generationally FROZEN
@@ -591,11 +580,12 @@ object TextAnalysis {
     * Per-trigger read = the generation summary (vocabulary-bounded model
     * + 1-row cutoff) + the batch. Boundary triggers additionally fold the
     * settled term counts (Heaps-bounded) and read settled arrival scores
-    * once (O(docs), amortized 1/G). State: `terms/` epoch-partitioned
-    * batch vocab counts, `scores/` epoch-partitioned arrival scores,
-    * `models/` + `cuts/` gen-partitioned frozen summaries — all writes
-    * dynamic-overwrite, so at-least-once re-runs converge (a re-run
-    * boundary re-derives the identical summary from settled state).
+    * once (O(docs), amortized 1/G). State: `terms/` batch vocab counts
+    * and `scores/` arrival scores, one epoch per batch, and `models/` +
+    * `cuts/` frozen summaries, one epoch per generation — all
+    * [[StateFamily.Stream]] families, so at-least-once re-runs converge
+    * (a re-run boundary re-derives the identical summary from settled
+    * state).
     *
     * Returns the snapshots read back from `outDir`:
     * (batch_id, id, n_tok, avg_logp, kept).
@@ -605,12 +595,11 @@ object TextAnalysis {
       idCol: String, textCol: String,
       q: Double, stateDir: String, outDir: String,
       checkpointDir: Option[String] = None,
-      shufflePartitions: Int = 0,
       generationEvery: Int = 1): org.apache.spark.sql.DataFrame = {
     require(q > 0 && q < 1, s"quantile must be in (0,1): $q")
     require(generationEvery >= 1, s"generation width must be >= 1: $generationEvery")
     EpochStream.run(spark, stagedDir, schema, checkpointDir,
-        shufflePartitions, outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
+        outDir, verdictSchema(schema(idCol).dataType)) { (batch, batchId) =>
       val gen = batchId / generationEvery
       graft.ops.CacheRegistry.during(batchTermCounts(batch, idCol, textCol)) { tf =>
         val tc = tf.filter(col("term").isNotNull)
@@ -626,9 +615,7 @@ object TextAnalysis {
             if (batchId == 0) tc.select(col("term"), col("c").as("ct"))
             else terms.settled(batchId)
               .groupBy(col("term")).agg(sum(col("c")).as("ct"))
-          model.withColumn("gen", lit(gen))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen").parquet(stateDir + "/models")
+          frozenModels(tc.sparkSession, stateDir).append(model, gen)
         }
         val scored = frozenGenScoreFrame(tf, stateDir, gen)
         val scores = new StateFamily(scored.sparkSession, stateDir + "/scores", scored.schema,
@@ -640,13 +627,10 @@ object TextAnalysis {
           val cutSrc =
             if (batchId == 0) scored
             else scores.settled(batchId)
-          graft.ops.Percentiles.exactPercentiles(
+          frozenCuts(tc.sparkSession, stateDir).append(graft.ops.Percentiles.exactPercentiles(
               cutSrc.filter(col("avg_logp").isNotNull).withColumn("__g", lit(1)),
               "__g", "avg_logp", Seq(q), Seq("c"))
-            .agg(max(col("c")).as("cutoff"))
-            .withColumn("gen", lit(gen))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen").parquet(stateDir + "/cuts")
+            .agg(max(col("c")).as("cutoff")), gen)
         }
         graft.ops.CacheRegistry.during(frozenGenVerdicts(scored, stateDir, gen)) { verdicts =>
           scores.append(verdicts.select(col("id"), col("n_tok"), col("avg_logp")), batchId)
@@ -671,18 +655,28 @@ object TextAnalysis {
       .groupBy(col("id"), col("term"))
       .agg(sum(when(col("term").isNotNull, 1L).otherwise(0L)).as("c"))
 
+  /** The frozen generation summaries: the model's `(term, ct)` counts
+    * and the one-row quantile cutoff, each a family whose epoch is the
+    * generation. The stamp checks the schema on every open.
+    */
+  private def frozenModels(s: org.apache.spark.sql.SparkSession, stateDir: String) =
+    new StateFamily(s, stateDir + "/models",
+      new org.apache.spark.sql.types.StructType().add("term", "string").add("ct", "bigint"),
+      StateFamily.Stream)
+  private def frozenCuts(s: org.apache.spark.sql.SparkSession, stateDir: String) =
+    new StateFamily(s, stateDir + "/cuts",
+      new org.apache.spark.sql.types.StructType().add("cutoff", "double"), StateFamily.Stream)
+
   /** Arrival scores of a batch's count triplets against the FROZEN
     * generation-`gen` model at rest: inner join on the frozen vocabulary
     * (out-of-model terms drop from numerator and denominator), left join
     * back to the batch's id universe so featureless docs surface as
-    * (n_tok=0, NULL). Reads ONLY `models/gen=` — the per-trigger input
-    * bound ScaleSpec asserts.
+    * (n_tok=0, NULL). Reads ONLY `models/epoch=gen` — the per-trigger
+    * input bound ScaleSpec asserts.
     */
   private[graft] def frozenGenScoreFrame(tf: org.apache.spark.sql.DataFrame,
       stateDir: String, gen: Long): org.apache.spark.sql.DataFrame = {
-    val s = tf.sparkSession
-    val model = s.read.schema("term STRING, ct BIGINT, gen BIGINT")
-      .parquet(stateDir + "/models").filter(col("gen") === gen)
+    val model = frozenModels(tf.sparkSession, stateDir).read.filter(col("epoch") === gen)
       .select(col("term"), col("ct"))
     val total = model.agg(sum(col("ct")).cast("double").as("t"))
     val scoredRaw = tf.filter(col("term").isNotNull)
@@ -697,12 +691,12 @@ object TextAnalysis {
   }
 
   /** Keep verdicts under the frozen generation-`gen` cutoff (1-row read
-    * from `cuts/gen=`; NULL cutoff — no scoreable history — keeps nothing).
+    * from `cuts/epoch=gen`; NULL cutoff — no scoreable history — keeps
+    * nothing).
     */
   private[graft] def frozenGenVerdicts(scored: org.apache.spark.sql.DataFrame,
       stateDir: String, gen: Long): org.apache.spark.sql.DataFrame = {
-    val cut = scored.sparkSession.read.schema("cutoff DOUBLE, gen BIGINT")
-      .parquet(stateDir + "/cuts").filter(col("gen") === gen)
+    val cut = frozenCuts(scored.sparkSession, stateDir).read.filter(col("epoch") === gen)
       .select(col("cutoff"))
     scored.crossJoin(broadcast(cut))
       .select(col("id"), col("n_tok"), col("avg_logp"),
@@ -779,7 +773,7 @@ object TextAnalysis {
     * At scale only count triplets ever land in state — text is read once
     * in its arrival batch and never again — and `compactEvery` bounds the
     * STATE LIFECYCLE too: every N batches the settled epochs fold into
-    * one summed generation ([[StateFamily.compact]]), so the per-trigger
+    * one summed generation ([[StateFamily.accumulate]]), so the per-trigger
     * state read is generations + live epochs, not one partition per
     * micro-batch ever streamed.
     *
@@ -797,27 +791,16 @@ object TextAnalysis {
       schema: org.apache.spark.sql.types.StructType, srcCol: String, textCol: String,
       stateDir: String, outDir: String,
       checkpointDir: Option[String] = None,
-      shufflePartitions: Int = 0,
       compactEvery: Int = 0): org.apache.spark.sql.DataFrame =
-    EpochStream.run(spark, stagedDir, schema, checkpointDir, shufflePartitions, outDir,
+    EpochStream.run(spark, stagedDir, schema, checkpointDir, outDir,
         new org.apache.spark.sql.types.StructType().add("source", schema(srcCol).dataType)
           .add("n_tok", "bigint").add("kl", "double")) { (batch, batchId) =>
-      graft.ops.CacheRegistry.during(batch.select(col(srcCol).as("source"),
-          explode(wordTokens(col(textCol))).as("term"))
-        .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))) { bt =>
-        val state = new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
-        state.append(bt, batchId)
-        graft.ops.CacheRegistry.during(state.settled(batchId).unionByName(bt)
-            .groupBy(col("source"), col("term")).agg(sum(col("c")).as("c"))) { cum =>
+      val bt = batch.select(col(srcCol).as("source"), explode(wordTokens(col(textCol))).as("term"))
+        .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
+      new StateFamily(bt.sparkSession, stateDir, bt.schema, StateFamily.Stream)
+        .accumulate(bt, batchId, compactEvery) { cum =>
           EpochStream.writeSnapshot(sourceTokenKLFromCounts(cum), outDir, batchId)
         }
-        // periodic state compaction AFTER the snapshot write: folds only
-        // epochs strictly below this one (the live epoch must survive an
-        // at-least-once re-run of this batch), and the fold is additive,
-        // so every later batch's cumulative read is value-identical
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          state.compact(_.groupBy(col("source"), col("term")).agg(sum(col("c")).as("c")))
-      }
     }
 
   /** The Gopher document-quality rule bundle (Rae et al. 2021 §A1.1.2, the

@@ -44,6 +44,12 @@ object RowIndex {
   private val midCol = "__graft_mid"
   private val valCol = "__graft_val"
 
+  /** Inputs up to this many rows take [[withRunningTotal]]'s single-task
+    * fast path. The cap is deliberately a row COUNT, not bytes: it bounds
+    * the single task's sort exactly.
+    */
+  private val FastPathMaxRows = 65536L
+
   /** Shared pass-1 scaffolding: range-shuffle + local sort + partition id,
     * persisted (the per-partition aggregate below and the caller's action
     * share one shuffle), plus cumulative prefix OFFSETS of a per-partition
@@ -152,15 +158,11 @@ object RowIndex {
     // path, +19%; estimates above aggregates can't size their output).
     // Dimension-sized fast path (count unpinned only): on one sorted
     // partition the local running sum IS the global prefix sum — no
-    // range exchange, no boundary sampling, no offsets job. The cap is
-    // deliberately a row COUNT, not bytes: it bounds the single task's
-    // sort exactly. Cluster deployments can raise/lower it via conf.
-    val fastCap = graft.GraftConf.longConf(spark,
-      "spark.graft.runningTotal.fastPathMaxRows", 65536L)
+    // range exchange, no boundary sampling, no offsets job.
     val in = CacheRegistry.persist(df.withColumn(valCol, coalesce(value.cast("long"), lit(0L))))
     val rows = in.count()
     val (ranged, offsetSeq) =
-      if (numPartitions == 0 && rows <= fastCap) {
+      if (numPartitions == 0 && rows <= FastPathMaxRows) {
         // narrow lineage over the cached input — no second persist needed
         (in.coalesce(1).sortWithinPartitions(order: _*)
           .withColumn(pidCol, spark_partition_id()),

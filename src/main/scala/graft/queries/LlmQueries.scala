@@ -11,13 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmQueries {
 
-  /** Per-query previous-invocation scratch dirs: unique dirs keep lazy
-    * index reads safe (a deleted shared path would yank files from an
-    * un-materialized plan), and deleting the PREVIOUS invocation's dirs
-    * at the next invocation bounds /tmp growth to one generation — by
-    * then the sequential harness (Verify, Bench passes) has materialized
-    * the earlier result.
-    */
   /** The frozen BPE artifact rendered as SQL literals, so the
     * q156/q157/q161/q162 oracles carry the exact merge table, vocabulary,
     * and 256-entry byte→printable map the kernels use. Symbols are in
@@ -137,57 +130,17 @@ object LlmQueries {
       TextAnalysis.unigramLogProb(Tables.documents(s, d), "doc_id", "text")
     }
 
-  /** Stage `corpus` as two parity-split parquet files (batch 0 = even
-    * doc_ids, batch 1 = odd) with FORGED mtimes, so a
-    * maxFilesPerTrigger=1 file stream replays deterministic micro-batch
-    * boundaries. The split files are a pure function of the source table:
-    * staged once per (tag, sfDir) and reused while a marker matches the
-    * source's mtime; any mismatch restages BOTH atomically (comparing
-    * forged per-file mtimes against the source could reuse one stale
-    * half or invert the batch order). Shared by the streaming gate rows
-    * (q136 near-dedup, q158 drift monitor).
-    */
-  private def stageParitySplits(corpus: org.apache.spark.sql.DataFrame, d: String,
-      tag: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_staged_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    Files.createDirectories(staged)
-    val srcMtime = Files.getLastModifiedTime(
-      Paths.get(d, "documents.parquet")).toMillis
-    val marker = staged.resolve("_src_mtime")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == srcMtime.toString &&
-      Files.exists(staged.resolve("a_even.parquet")) &&
-      Files.exists(staged.resolve("b_odd.parquet"))
-    def stage(parity: Int, name: String, mtimeSec: Long): Unit = {
-      val tmpDir = Files.createTempDirectory(s"graft_${tag}_tmp_")
-      val tmp = tmpDir.toString + "/p"
-      corpus.filter(pmod(col("doc_id"), lit(2)) === parity).coalesce(1).write.parquet(tmp)
-      val part = scala.util.Using.resource(Files.list(Paths.get(tmp))) { st =>
-        st.toArray.map(_.toString)
-          .find(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).get
-      }
-      Files.copy(Paths.get(part), staged.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-      // fixed forged mtimes: the file-stream orders batches by them
-      Files.setLastModifiedTime(staged.resolve(name), FileTime.fromMillis(mtimeSec * 1000))
-      graft.ops.Layout.deleteRecursively(tmpDir)
-    }
-    if (!fresh) {
-      Files.deleteIfExists(marker)
-      stage(0, "a_even.parquet", 1000000000L)
-      stage(1, "b_odd.parquet", 1000000100L)
-      Files.write(marker, srcMtime.toString.getBytes)
-    }
-    staged.toString
-  }
-
-  /** [[stageParitySplits]] generalized to `mod` deterministic slices
-    * (doc_id % mod = 0 .. mod−1, forged ascending mtimes so the file
-    * stream drains them in slice order) — the 3-batch staging the
-    * frozen-generation streaming rows need to exercise boot + frozen
-    * reuse + a real boundary fold in one run.
+  /** Stage `corpus` as `mod` deterministic slice files (doc_id % mod =
+    * 0 .. mod−1) with FORGED ascending mtimes, so a maxFilesPerTrigger=1
+    * file stream replays deterministic micro-batch boundaries in slice
+    * order. The slices are a pure function of the source table: staged
+    * once per (tag, sfDir) and reused while a marker matches the source's
+    * mtime; any mismatch restages every slice into an emptied directory
+    * (comparing forged per-file mtimes against the source could reuse one
+    * stale slice or invert the batch order). Shared by the streaming gate
+    * rows: two slices for q136, q158, q170 and q171, more for the
+    * frozen-generation rows, which need boot + frozen reuse + a real
+    * boundary fold in one run.
     */
   private def stageModSplits(corpus: org.apache.spark.sql.DataFrame, d: String,
       tag: String, mod: Int): String = {
@@ -204,7 +157,9 @@ object LlmQueries {
       new String(Files.readAllBytes(marker)).trim == srcMtime.toString &&
       names.forall(n => Files.exists(staged.resolve(n)))
     if (!fresh) {
-      Files.deleteIfExists(marker)
+      // a stale file of another slicing would stream as an extra batch
+      graft.ops.Layout.deleteRecursively(staged)
+      Files.createDirectories(staged)
       names.zipWithIndex.foreach { case (name, i) =>
         val tmpDir = Files.createTempDirectory(s"graft_${tag}_tmp_")
         val tmp = tmpDir.toString + "/p"
@@ -226,6 +181,13 @@ object LlmQueries {
   private val lastRunDirs =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 
+  /** Per-query previous-invocation scratch dirs: unique dirs keep lazy
+    * index reads safe (a deleted shared path would yank files from an
+    * un-materialized plan), and deleting the PREVIOUS invocation's dirs
+    * at the next invocation bounds /tmp growth to one generation — by
+    * then the sequential harness (Verify, Bench passes) has materialized
+    * the earlier result.
+    */
   private def rotateRunDirs(key: String, dirs: Seq[String]): Unit = {
     val prev = Option(lastRunDirs.put(key, dirs)).getOrElse(Nil)
     prev.foreach(d => graft.ops.Layout.deleteRecursively(java.nio.file.Paths.get(d)))
@@ -756,7 +718,7 @@ object LlmQueries {
            |ORDER BY doc_id""".stripMargin
       }) { (s, d) =>
       val corpus = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val staged = stageParitySplits(corpus, d, "q136")
+      val staged = stageModSplits(corpus, d, "q136", 2)
       val base = java.nio.file.Files.createTempDirectory("graft_q136_").toString
       rotateRunDirs("q136", Seq(base))
       Dedup.nearDedupStreaming(s, staged, corpus.schema,
@@ -2139,7 +2101,7 @@ object LlmQueries {
       }) { (s, d) =>
       val corpus = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
-      val staged = stageParitySplits(corpus, d, "q158")
+      val staged = stageModSplits(corpus, d, "q158", 2)
       val base = java.nio.file.Files.createTempDirectory("graft_q158_").toString
       rotateRunDirs("q158", Seq(base))
       TextAnalysis.unigramDriftStreaming(s, staged, corpus.schema, "source", "text",
@@ -2759,7 +2721,7 @@ object LlmQueries {
            |ORDER BY batch_id, id""".stripMargin
       }) { (s, d) =>
       val corpus = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val staged = stageParitySplits(corpus, d, "q170")
+      val staged = stageModSplits(corpus, d, "q170", 2)
       val base = java.nio.file.Files.createTempDirectory("graft_q170_").toString
       rotateRunDirs("q170", Seq(base))
       TextAnalysis.qualityQuantileStreaming(s, staged, corpus.schema, "doc_id", "text",
@@ -2815,7 +2777,7 @@ object LlmQueries {
         when(col("source").isin("src0", "src1", "src2", "src3"), lit("ref"))
           .otherwise(lit("other")).as("label"),
         col("text"))
-      val staged = stageParitySplits(corpus, d, "q171")
+      val staged = stageModSplits(corpus, d, "q171", 2)
       val base = java.nio.file.Files.createTempDirectory("graft_q171_").toString
       rotateRunDirs("q171", Seq(base))
       graft.llm.Classify.nbTrainStreaming(s, staged, corpus.schema, "label", "text",

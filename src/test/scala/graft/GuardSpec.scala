@@ -119,6 +119,15 @@ class GuardSpec extends SparkSpec {
       s"Hadoop conf lookups outside GraftConf.hadoopConf: ${sites.mkString(", ")}")
   }
 
+  test("src/main writes dynamic partition overwrites only in StateFamily and the table sinks") {
+    // the family writes and EpochStream.writeSnapshot own the epoch
+    // layouts, Sinks the table upserts: a partitioned overwrite anywhere
+    // else is state outside any family, read back without a stamp
+    val sites = mainSites("partitionOverwriteMode", Set("StateFamily.scala", "Sinks.scala"))
+    assert(sites.isEmpty,
+      s"partitionOverwriteMode outside StateFamily and Sinks: ${sites.mkString(", ")}")
+  }
+
   test("src/main persists operator frames only through CacheRegistry (two pinned holders)") {
     // the holders that keep their own lifetime, with their exact counts:
     //  - LlmQueries.sharedFrame (1): session-pinned tables shared by q31,

@@ -1857,18 +1857,9 @@ class LlmSpec extends SparkSpec {
       Seq(Some("en"), Some("es"), Some("de"), Some("und")))
   }
 
-  test("multimodal: media table schema + deterministic feature extraction") {
-    val media = Multimodal.asMediaTable(docs, "doc_id", "text", "text/plain")
-    assert(media.schema.fieldNames.toSeq === Seq("media_id", "payload", "meta"))
-    val feats = Multimodal.extractFeatures(spark, media).orderBy(col("media_id")).collect()
-    assert(feats.length === 4)
-    assert(feats.map(_.getSeq[Float](1).length).forall(_ === 8))
-    // identical payloads -> identical features
-    assert(feats(0).getSeq[Float](1) === feats(3).getSeq[Float](1))
-  }
-
   test("multimodal: patch sampling emits bounded slices") {
     val media = Multimodal.asMediaTable(docs, "doc_id", "text", "text/plain")
+    assert(media.schema.fieldNames.toSeq === Seq("media_id", "payload", "meta"))
     val patches = Multimodal.samplePatches(media, n = 3, patchBytes = 8)
     assert(patches.groupBy(col("media_id")).count().collect().forall(_.getLong(1) <= 3))
   }
@@ -2440,23 +2431,6 @@ class LlmSpec extends SparkSpec {
       Map("s0" -> 1.0, "s1" -> 0.1), 2000L)
     assert(kept.select("id").collect().map(_.getLong(0)).sorted.toSeq ===
       again.select("id").collect().map(_.getLong(0)).sorted.toSeq)
-  }
-
-  test("multimodal: resize keeps the media schema and stamps target dims in meta") {
-    val media = Multimodal.asMediaTable(docs, "doc_id", "text", "text/plain")
-    val resized = Multimodal.resize(spark, media, w = 4, h = 2)
-    assert(resized.schema === Multimodal.mediaSchema)
-    val rows = resized.orderBy(col("media_id")).collect()
-    assert(rows.length === 4)
-    rows.foreach { r =>
-      val meta = r.getStruct(2)
-      assert(meta.getInt(1) === 4 && meta.getInt(2) === 2)
-      val payload = r.getAs[Array[Byte]](1)
-      assert(payload.length <= 8 && payload.length >= 1)
-      assert(meta.getLong(3) === payload.length.toLong)
-    }
-    // deterministic: identical payloads resize identically
-    assert(rows(0).getAs[Array[Byte]](1).toSeq === rows(3).getAs[Array[Byte]](1).toSeq)
   }
 
   test("frameSlices: window timing, overlap, short-clip drop, rate scaling") {

@@ -152,19 +152,6 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-
-  test("withRunningTotal: a malformed fast-path cap names its conf key") {
-    import graft.ops.RowIndex
-    val key = "spark.graft.runningTotal.fastPathMaxRows"
-    spark.conf.set(key, "64k")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        RowIndex.withRunningTotal(Seq((1L, 2L)).toDF("k", "v"), "rt", col("v"), Seq(col("k")))
-      }
-      assert(e.getMessage.contains(key) && e.getMessage.contains("64k"), e.getMessage)
-    } finally spark.conf.unset(key)
-  }
-
   test("session settings default to the machine's cores and 1g executors") {
     val cores = Runtime.getRuntime.availableProcessors
     assert(GraftConf.sessionSettings(Map.empty) ===

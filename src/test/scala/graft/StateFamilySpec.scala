@@ -38,13 +38,18 @@ class StateFamilySpec extends SparkSpec {
     assert(reopened.settled(1L).as[(Long, String)].collect().toSet === Set((1L, "x"), (2L, "y")))
   }
 
-  test("stamp: a streaming state directory reused by another operator throws instead of null-filling") {
+  private lazy val corpus = Seq((0L, "web", "the quick brown fox"),
+    (1L, "books", "a slow green turtle"), (2L, "web", "quick quick fox jumps"),
+    (3L, "books", "the turtle and the fox")).toDF("doc_id", "source", "text")
+
+  /** A fresh base directory holding `corpus` staged as two parity files
+    * with ascending forged mtimes: a file stream replays them as batches
+    * 0 and 1.
+    */
+  private def stagedCorpus(tag: String): (String, java.nio.file.Path) = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import java.nio.file.attribute.FileTime
-    val corpus = Seq((0L, "web", "the quick brown fox"), (1L, "books", "a slow green turtle"),
-      (2L, "web", "quick quick fox jumps"), (3L, "books", "the turtle and the fox"))
-      .toDF("doc_id", "source", "text")
-    val base = Files.createTempDirectory("graft_family_reuse_").toString
+    val base = Files.createTempDirectory(s"graft_family_${tag}_").toString
     val staged = Paths.get(base, "staged"); Files.createDirectories(staged)
     for (p <- 0 until 2) {
       val tmpDir = Paths.get(base, s"tmp$p").toString
@@ -56,6 +61,12 @@ class StateFamilySpec extends SparkSpec {
       Files.copy(Paths.get(part), dest, StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(dest, FileTime.fromMillis((1000000000L + 100 * p) * 1000))
     }
+    (base, staged)
+  }
+
+  test("stamp: a streaming state directory reused by another operator throws instead of null-filling") {
+    import java.nio.file.Paths
+    val (base, staged) = stagedCorpus("reuse")
     val stateDir = s"$base/state"
     // NB training leaves (label, bucket, c) triplets, folded into a
     // sentinel generation below every epoch a later stream writes
@@ -74,6 +85,23 @@ class StateFamilySpec extends SparkSpec {
     graft.ops.Layout.deleteRecursively(Paths.get(base))
   }
 
+  test("stamp: a frozen run whose models/ holds another family's stamp throws") {
+    import java.nio.file.Paths
+    val (base, staged) = stagedCorpus("frozen")
+    val models = s"$base/state/models"
+    val other = Seq(("fox", 1L)).toDF("term", "c")
+    new StateFamily(spark, models, other.schema, StateFamily.Stream).append(other, 0L)
+    val e = intercept[Exception] {
+      TextAnalysis.qualityQuantileStreamingFrozen(spark, staged.toString, corpus.schema,
+        "doc_id", "text", q = 0.4, s"$base/state", s"$base/out").collect()
+    }
+    val msg = messages(e)
+    assert(msg.contains(models), msg)
+    assert(msg.contains("struct<term:string,c:bigint>"), msg)
+    assert(msg.contains("struct<term:string,ct:bigint>"), msg)
+    graft.ops.Layout.deleteRecursively(Paths.get(base))
+  }
+
   test("a streaming operator whose stream wrote no snapshot returns its typed empty result") {
     val base = java.nio.file.Files.createTempDirectory("graft_family_nostream_")
     val staged = java.nio.file.Files.createDirectories(base.resolve("staged")).toString
@@ -86,15 +114,12 @@ class StateFamilySpec extends SparkSpec {
     graft.ops.Layout.deleteRecursively(base)
   }
 
-  test("stamp: unstamped data throws, or opens retired under a retired-tolerant layout") {
+  test("stamp: unstamped data throws") {
     val path = tmp("unstamped")
     val df = Seq((1L, "x")).toDF("k", "v")
     df.withColumn("epoch", lit(0L)).write.partitionBy("epoch").parquet(path)
     val e = intercept[IllegalStateException] { new StateFamily(spark, path, df.schema, Plain) }
     assert(e.getMessage.contains(path) && e.getMessage.contains(StateFamily.StampFile))
-    val retired = new StateFamily(spark, path, df.schema, Plain.copy(unstampedRetired = true))
-    assert(retired.retired)
-    intercept[IllegalArgumentException] { retired.append(df, 1L) }
     // compaction opens from the stamp, so unstamped data throws there too
     intercept[IllegalStateException] { StateFamily.stamped(spark, path, Plain) }
     assert(StateFamily.stamped(spark, tmp("absent"), Plain).isEmpty)
@@ -117,7 +142,7 @@ class StateFamilySpec extends SparkSpec {
     sc.setJobGroup("graft-family-open", "open")
     try {
       val fam = new StateFamily(spark, path, df.schema, Plain)
-      assert(fam.exists && fam.epochs === Set(0L) && !fam.retired)
+      assert(fam.exists && fam.epochs === Set(0L))
       fam.settled(1L) // plan construction only
     } finally sc.clearJobGroup()
     assert(sc.statusTracker.getJobIdsForGroup("graft-family-open").isEmpty)
@@ -141,6 +166,30 @@ class StateFamilySpec extends SparkSpec {
     // a fold that changes the schema is refused before anything is written
     intercept[IllegalArgumentException] { fam.compact(_.withColumn("extra", lit(1))) }
     assert(fam.epochs === Set(-1L, 2L))
+  }
+
+  test("accumulate: the snapshot sees settled plus batch counts; a re-run and compaction change no sum") {
+    val fam = new StateFamily(spark, tmp("accumulate"), Seq(("a", 1L)).toDF("k", "c").schema,
+      StateFamily.Stream)
+    def run(epoch: Long, rows: (String, Long)*): Map[String, Long] = {
+      var got = Map.empty[String, Long]
+      fam.accumulate(rows.toDF("k", "c"), epoch, compactEvery = 2) { cum =>
+        got = cum.as[(String, Long)].collect().toMap
+      }
+      got
+    }
+    assert(run(0L, "a" -> 1L, "b" -> 2L) === Map("a" -> 1L, "b" -> 2L))
+    assert(run(1L, "a" -> 3L) === Map("a" -> 4L, "b" -> 2L))
+    assert(fam.epochs === Set(-1L, 1L)) // epoch 1 closed a compaction cadence
+    assert(run(2L, "c" -> 1L) === Map("a" -> 4L, "b" -> 2L, "c" -> 1L))
+    // an at-least-once re-run of epoch 2 replaces it instead of adding
+    assert(run(2L, "c" -> 5L) === Map("a" -> 4L, "b" -> 2L, "c" -> 5L))
+    assert(fam.settled(3L).groupBy("k").agg(sum("c")).as[(String, Long)].collect().toMap ===
+      Map("a" -> 4L, "b" -> 2L, "c" -> 5L))
+    intercept[IllegalArgumentException] {
+      new StateFamily(spark, tmp("accumulate_plain"), Seq(("a", 1L)).toDF("k", "c").schema, Plain)
+        .accumulate(Seq(("a", 1L)).toDF("k", "c"), 0L, compactEvery = 0)(_ => ())
+    }
   }
 
   test("index lease: a malformed TTL names its conf key") {

@@ -56,9 +56,22 @@ class JobLabelSpec extends graft.SparkSpec {
       assert(labels(fam.land(rows(7).withColumn("epoch", lit(7L)), 1, Seq(7L))) ===
         Set(verb("land")))
       assert(labels(fam.replace(rows(9).withColumn("epoch", lit(9L)), 1)) === Set(verb("replace")))
+      // the additive-count verb runs the snapshot under its own label; the
+      // append and, every compactEvery-th epoch, the compact label theirs
+      val countsPath = s"$base/counts"
+      def counts(epoch: Long) = spark.range(3).select(col("id").as("k"), lit(epoch).as("c"))
+      val additive = new StateFamily(spark, countsPath, counts(0).schema, StateFamily.Stream)
+      def countsVerb(v: String) = s"StateFamily.$v $countsPath"
+      assert(labels(additive.accumulate(counts(0), 0L, compactEvery = 2)(_.count())) ===
+        Set(countsVerb("accumulate"), countsVerb("append")))
+      assert(labels(additive.accumulate(counts(1), 1L, compactEvery = 2)(_.count())) ===
+        Set(countsVerb("accumulate"), countsVerb("append"), countsVerb("compact")))
+      // no snapshot due: the batch appends and nothing reads the family
+      assert(labels(additive.accumulate(counts(2), 2L, compactEvery = 2, emit = false)(
+        _ => fail("no snapshot is due"))) === Set(countsVerb("append")))
       val staged = s"$base/staged"
       (0L to 1L).foreach(e => rows(e).coalesce(1).write.mode("append").parquet(staged))
-      val drained = labels(EpochStream.drain(spark, staged, schema, None, 2) { (b, _) => b.count() })
+      val drained = labels(EpochStream.drain(spark, staged, schema, None) { (b, _) => b.count() })
       assert(drained === Set(s"EpochStream.drain $staged batch 0", s"EpochStream.drain $staged batch 1"))
       sc.setJobDescription(null)
       // no caller label: none is left behind

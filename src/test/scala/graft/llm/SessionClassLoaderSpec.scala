@@ -27,7 +27,7 @@ class SessionClassLoaderSpec extends graft.SparkSpec {
     val staged = Files.createTempDirectory("graft_loader_staged").toString + "/in"
     spark.range(3).coalesce(1).write.parquet(staged)
     val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
-    EpochStream.drain(spark, staged, schema, checkpointDir = None, shufflePartitions = 2) {
+    EpochStream.drain(spark, staged, schema, checkpointDir = None) {
       (batch, _) => seen += taskLoader(batch.sparkSession)
     }
     assert(seen.nonEmpty)

@@ -45,7 +45,7 @@ class SpawnGuardSpec extends graft.SparkSpec {
       val staged = s"$base/$tag/staged"
       (0L to 1L).foreach(e => rows(e).coalesce(1).write.mode("append").parquet(staged))
       var batches = 0
-      EpochStream.drain(s, staged, schema, Some(s"$base/$tag/checkpoint"), 2) { (b, _) =>
+      EpochStream.drain(s, staged, schema, Some(s"$base/$tag/checkpoint")) { (b, _) =>
         b.count(); batches += 1
       }
       assert(batches === 2)

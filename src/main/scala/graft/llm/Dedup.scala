@@ -92,14 +92,7 @@ object Dedup {
     val r = counted.select(col("band"), col("bkey"), col("id").as("id2"))
     val cand = l.join(r, Seq("band", "bkey")).filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2")).distinct()
-    val sh = withSig.select(col("id"), col("sh"))
-    cand
-      .join(sh.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
-      .join(sh.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard",
-        col("inter") / (size(col("sh1")) + size(col("sh2")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
+    verifyPairs(cand, withSig, withSig, "sh", threshold, hintBroadcast = false)
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
@@ -225,37 +218,19 @@ object Dedup {
     * every value is exact in any engine), k = 16 "permutations" via exact
     * universal hashes (a_j·h + b_j) mod (2^31 − 1) — all BIGINT-exact —
     * banded 4×4: candidates share all 4 signature slots of ≥1 band, then
-    * exact-Jaccard verified. Every step is a deterministic integer
-    * function of the text, so the full pair set hash-matches a SQL
-    * oracle. Docs with empty shingle sets are excluded.
+    * exact-Jaccard verified over the distinct shingle STRINGS. Every step
+    * is a deterministic integer function of the text, so the full pair
+    * set hash-matches a SQL oracle. Docs with empty shingle sets are
+    * excluded.
     *
     * Scale shape: one md5 per (doc, shingle) in a codegen projection (no
-    * HOF folds), 16 mins in ONE map-side-combined aggregate (no row
-    * blowup), banding joins 4 rows/doc of 5 ints, and only candidate
-    * pairs re-attach shingle arrays for the verify.
+    * HOF folds), the 16 mins and the shingle set in ONE cached aggregate
+    * ([[portableState]]; a warm call reads it), banding joins 4 rows/doc
+    * of 5 ints, and only candidate pairs meet their sets in the verify.
     */
   def minHashLshPairsPortable(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double): DataFrame = {
-    val tok = graft.ops.CacheRegistry.persist(portableTok(df, idCol, textCol))
-    val cand = bandSelfCands(portableBands(tok)).distinct()
-    val t1 = tok.select(col("id").as("id1"), col("toks").as("toks1"))
-    val t2 = tok.select(col("id").as("id2"), col("toks").as("toks2"))
-    cand.join(t1, "id1").join(t2, "id2")
-      .withColumn("inter", size(array_intersect(col("toks1"), col("toks2"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("toks1")) + size(col("toks2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("jaccard"))
-  }
-
-  /** Distinct 3-shingle arrays (id, toks) — the portable signature basis
-    * of [[minHashLshPairsPortable]]. Empty-shingle docs stay in the frame
-    * but explode to no signature rows, so they are never candidates. No
-    * `size(toks) > 0` filter: Catalyst pushes it below the projection,
-    * where it runs the shingle kernel a second time per row.
-    */
-  private def portableTok(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("id"), shingles(col(textCol), 3).as("toks"))
+      threshold: Double): DataFrame =
+    portablePairs(df, idCol, textCol, threshold, hashed = false)
 
   // The portable hashing/banding constants live in EXACTLY ONE place
   // each — every Spark consumer (q134's string path, q135's hash-set
@@ -274,12 +249,12 @@ object Dedup {
     min((col("h") * (2L * j + 3L) + 104729L * (j + 1)) % 2147483647L).as(s"s$j")
   }
 
-  /** (id, id1<id2) candidate pairs sharing all four slots of ≥1 band.
-    * Over bands aggregated above a cached frame (q134) each side runs
-    * the aggregate, as the planner reuses no exchange above a cached
-    * relation; pairing inside band groups over one window exchange
-    * removed that but ran a duplicate-heavy group in one task, several
-    * times slower (ROADMAP carried items).
+  /** (id, id1<id2) candidate pairs sharing all four slots of ≥1 band: a
+    * self-join whose own exchange can split a skewed band key (exact
+    * duplicates share every band; pairing inside band groups over one
+    * window exchange ran such a group in one task, several times
+    * slower). Both sides read the bands of a cached [[portableState]],
+    * so no aggregate runs twice.
     */
   private def bandSelfCands(bands: DataFrame): DataFrame = {
     val keys = Seq("band", "v0", "v1", "v2", "v3")
@@ -289,28 +264,21 @@ object Dedup {
       .select(col("id1"), col("id2"))
   }
 
-  /** Engine-portable 4×4 banded MinHash rows (id, band, v0..v3) from the
-    * string-shingle frame. Every value is a deterministic integer
-    * function of the text — the property that makes candidate SETS (and
-    * therefore incremental keep decisions) SQL-replayable.
+  /** Per-doc portable state (id, hs, s0..s15) from ONE map-side-combined
+    * aggregate: the 16 portable MinHash mins for banding and the verify
+    * set `hs`, its one varying input — the distinct md5-hi32 shingle
+    * hashes when `hashed` (the index state, layout near-v1: Jaccard over
+    * distinct integer hashes is itself engine-portable, and 8-byte
+    * hashes keep the index a fraction of the shingle text), else the
+    * distinct shingle strings (q134's string Jaccard). Docs without
+    * shingles explode to no row, so they are never candidates.
     */
-  private def portableBands(tok: DataFrame): DataFrame = {
-    val inv = tok.select(col("id"), explode(col("toks")).as("w"))
-      .withColumn("h", md5Hi32(col("w")))
-    stateBands(inv.groupBy(col("id")).agg(sigMinExprs.head, sigMinExprs.tail: _*))
-  }
-
-  /** Per-doc index state (id, hs, s0..s15): the distinct md5-hi32 shingle
-    * hash set AND the 16 portable MinHash mins from ONE map-side-combined
-    * aggregate — signatures for banding, the hash set for exact-Jaccard
-    * verification. Jaccard over distinct integer hashes is itself
-    * engine-portable (identical collisions on both engines), and 8-byte
-    * hashes keep the at-rest index a fraction of the shingle text.
-    */
-  private[graft] def portableState(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+  private[graft] def portableState(df: DataFrame, idCol: String, textCol: String,
+      hashed: Boolean = true): DataFrame = {
     val inv = df.select(col(idCol).as("id"), explode(shingles(col(textCol), 3)).as("w"))
       .withColumn("h", md5Hi32(col("w")))
-    inv.groupBy(col("id")).agg(collect_set(col("h")).as("hs"), sigMinExprs: _*)
+    inv.groupBy(col("id"))
+      .agg(collect_set(col(if (hashed) "h" else "w")).as("hs"), sigMinExprs: _*)
   }
 
   /** 4×4 band rows (id, band, v0..v3) projected from [[portableState]] —
@@ -347,32 +315,46 @@ object Dedup {
     * (LlmSpec pins the equality).
     */
   private[graft] def portableHashedPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double): DataFrame = {
-    val state = graft.ops.CacheRegistry.persist(portableState(df, idCol, textCol))
+      threshold: Double): DataFrame =
+    portablePairs(df, idCol, textCol, threshold, hashed = true)
+
+  /** The portable MinHash-LSH pipeline: the cached [[portableState]],
+    * its band self-join and the Jaccard verify over the state's set.
+    */
+  private def portablePairs(df: DataFrame, idCol: String, textCol: String,
+      threshold: Double, hashed: Boolean): DataFrame = {
+    val state = graft.ops.CacheRegistry.persist(portableState(df, idCol, textCol, hashed))
     val cand = bandSelfCands(stateBands(state)).distinct()
     // hint = false: both sides here are the WHOLE corpus — forcing a
-    // broadcast would cap the global twin at driver memory
-    verifyPairs(cand, state.select(col("id"), col("hs")),
-      state.select(col("id"), col("hs")), threshold, hintBroadcast = false)
+    // broadcast would cap the global pairs at driver memory
+    verifyPairs(cand, state, state, "hs", threshold, hintBroadcast = false)
+      .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** Exact hash-set Jaccard over candidate pairs; earlier/later sides may
-    * come from different stores. `hintBroadcast` forces the
+  /** Exact set Jaccard over candidate pairs (id1, id2) — the one verify
+    * of every Jaccard-checked pair family. `earlier` (id1's side) and
+    * `later` (id2's) are (id, `set`) frames of distinct-element arrays
+    * and may come from different stores. `hintBroadcast` forces the
     * increment-sized sides (cand, later) to broadcast — pass false when
     * `later` is corpus-sized and the planner should choose.
+    *
+    * Returns (id1, id2, inter, n1, n2, jaccard) with jaccard ≥
+    * `threshold`; every operand is an exact integer, so jaccard is the
+    * one correctly rounded quotient on any engine.
     */
-  private def verifyPairs(cand: DataFrame, earlier: DataFrame, later: DataFrame,
+  private def verifyPairs(cand: DataFrame, earlier: DataFrame, later: DataFrame, set: String,
       threshold: Double, hintBroadcast: Boolean): DataFrame = {
     val candSide = if (hintBroadcast) broadcast(cand) else cand
-    val laterSide = later.select(col("id").as("id2"), col("hs").as("hs2"))
+    val laterSide = later.select(col("id").as("id2"), col(set).as("set2"))
     candSide
-      .join(earlier.select(col("id").as("id1"), col("hs").as("hs1")), "id1")
+      .join(earlier.select(col("id").as("id1"), col(set).as("set1")), "id1")
       .join(if (hintBroadcast) broadcast(laterSide) else laterSide, "id2")
-      .withColumn("inter", size(array_intersect(col("hs1"), col("hs2"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("hs1")) + size(col("hs2")) - col("inter")).cast("double"))
+      .select(col("id1"), col("id2"),
+        size(array_intersect(col("set1"), col("set2"))).cast("long").as("inter"),
+        size(col("set1")).cast("long").as("n1"), size(col("set2")).cast("long").as("n2"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("jaccard"))
   }
 
   /** Incremental near-dup dedup against a PERSISTENT signature index —
@@ -442,6 +424,17 @@ object Dedup {
       }
     }
 
+  /** Age past which [[materializeScratch]] reclaims an orphaned scratch
+    * attempt: 7 days. The window must comfortably exceed both (a) how
+    * long ANY caller lazily holds a scratch reader — multi-epoch training
+    * jobs routinely run for hours between materializing an increment and
+    * consuming it — and (b) plausible clock skew between writers on a
+    * shared store, since the comparison is this JVM's clock vs the
+    * store's mtimes. A crashed-attempt copy is ~the dropped-id set, cheap
+    * to retain a week.
+    */
+  private val ScratchTtlMs = 7L * 24 * 3600 * 1000
+
   /** Durably materialize a batch-derived lazy frame under the index's
     * scratch area and return a reader over the written files. This is the
     * compaction-isolation mechanism for the increment results: the
@@ -458,12 +451,12 @@ object Dedup {
     * race-free: a crashed (or re-run) epoch writes a fresh attempt subdir,
     * never touching files an earlier attempt's reader may still be on.
     * Scratch attempts are reclaimed only by a TTL-based orphan sweep
-    * (default 7 days, spark.graft.index.scratchTtlMs): compaction never
-    * touches them, and the window is sized so an arbitrarily old result
-    * plan still mid-read on its attempt is safe — only attempts older
-    * than the TTL (crashed or superseded re-runs) are deleted, on a
-    * best-effort basis. Read-back pins the writer's schema
-    * explicitly so an all-empty write (dup-free batch) is still readable.
+    * ([[ScratchTtlMs]]): compaction never touches them, and the window is
+    * sized so an arbitrarily old result plan still mid-read on its
+    * attempt is safe — only attempts older than the TTL (crashed or
+    * superseded re-runs) are deleted, on a best-effort basis. Read-back
+    * pins the writer's schema explicitly so an all-empty write (dup-free
+    * batch) is still readable.
     */
   private[llm] def materializeScratch(indexDir: String, family: String,
       epoch: Long, lazyDf: DataFrame): DataFrame = {
@@ -471,29 +464,19 @@ object Dedup {
     // epoch writes a fresh attempt instead of overwriting files an earlier
     // caller's still-lazy plan may be mid-read (each returned reader pins
     // its own attempt; orphaned sibling attempts are reclaimed below once
-    // they age past the configurable TTL)
+    // they age past the TTL)
     val epochDir = indexDir.stripSuffix("/") + s"/scratch/$family/epoch=$epoch"
     val path = epochDir + s"/attempt_${java.util.UUID.randomUUID()}"
     lazyDf.write.mode("overwrite").parquet(path)
     // reclaim ORPHANED sibling attempts past a retention window: a re-run
     // of the same epoch otherwise accumulates scratch copies unboundedly
-    // until the whole index dir is retired. The window must comfortably
-    // exceed both (a) how long ANY caller lazily holds a scratch reader —
-    // multi-epoch training jobs routinely run for hours between
-    // materializing an increment and consuming it — and (b) plausible
-    // clock skew between writers on a shared store, since the comparison
-    // is this JVM's clock vs the store's mtimes. Default 7 days (a
-    // crashed-attempt copy is ~the dropped-id set, cheap to retain a
-    // week); tune with spark.graft.index.scratchTtlMs. Deletion is
-    // best-effort (another writer racing the same cleanup is harmless).
-    // Parse the TTL OUTSIDE the best-effort sweep: a malformed conf value
-    // must surface as an error, not silently disable reclamation forever.
-    val ttlMs = graft.GraftConf.longConf(lazyDf.sparkSession,
-      "spark.graft.index.scratchTtlMs", 7L * 24 * 3600 * 1000)
+    // until the whole index dir is retired (see ScratchTtlMs for the
+    // window). Deletion is best-effort (another writer racing the same
+    // cleanup is harmless).
     try {
       val dir = new org.apache.hadoop.fs.Path(epochDir)
       val fs = graft.GraftConf.fileSystem(lazyDf.sparkSession, dir)
-      val cutoff = System.currentTimeMillis() - ttlMs
+      val cutoff = System.currentTimeMillis() - ScratchTtlMs
       fs.listStatus(dir).foreach { st =>
         val name = st.getPath.getName
         if (name.startsWith("attempt_") && name != new org.apache.hadoop.fs.Path(path).getName
@@ -789,8 +772,7 @@ object Dedup {
       // would not guarantee that: cache eviction recomputes from files;
       // a collect() would but puts the batch-sized set in driver RAM).
       materializeScratch(indexDir, "near_dropped", epoch,
-        verifyPairs(cand, earlier, state.select(col("id"), col("hs")), threshold,
-            hintBroadcast = true)
+        verifyPairs(cand, earlier, state, "hs", threshold, hintBroadcast = true)
           .select(col("id2").as("id")).distinct())
     }
     val dropped =
@@ -1149,16 +1131,7 @@ object Dedup {
     val cand = withLen.as("a").join(withLen.as("b"),
         col("a.w") === col("b.w") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
-    val t1 = tok.select(col("id").as("id1"), col("toks").as("toks1"))
-    val t2 = tok.select(col("id").as("id2"), col("toks").as("toks2"))
-    cand.join(t1, "id1").join(t2, "id2")
-      .withColumn("inter", size(array_intersect(col("toks1"), col("toks2"))).cast("long"))
-      .withColumn("n1", size(col("toks1")).cast("long"))
-      .withColumn("n2", size(col("toks2")).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("inter"), col("n1"), col("n2"), col("jaccard"))
+    verifyPairs(cand, tok, tok, "toks", threshold, hintBroadcast = false)
   }
 
   /** Fuzzy string pairs: every (id1 < id2) pair with edit distance ≤

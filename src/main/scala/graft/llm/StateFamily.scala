@@ -299,12 +299,14 @@ private[graft] object StateFamily {
     val p = new Path(dir, StampFile)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      val (tag, json) = text.span(_ != '\n')
+      val (tag, json) = readText(fs, p).span(_ != '\n')
       Some((tag, DataType.fromJson(json.trim).asInstanceOf[StructType]))
     }
+  }
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
   }
 
   /** Lock-file name guarding an index directory's lifecycle (single
@@ -352,10 +354,16 @@ private[graft] object StateFamily {
     val fs = graft.GraftConf.fileSystem(spark, lock)
     fs.mkdirs(lock.getParent)
     val ttlMs = graft.GraftConf.longConf(spark, "spark.graft.index.leaseTtlMs", LeaseTtlMsDefault)
-    def locked() = new IllegalStateException(
-      s"near-dedup index at $dir is locked by a concurrent writer — " +
-      s"index operations are single-writer; retry after it finishes (a " +
-      s"crashed holder's lease self-heals after ${ttlMs} ms)")
+    // the holder's tag is read on this failure path only; a holder that
+    // released in between leaves no tag to name
+    def locked() = {
+      val holder = try readText(fs, lock)
+        catch { case _: java.io.IOException => "a writer that has since released" }
+      new IllegalStateException(
+        s"index at $dir is locked: '$op' refused while held by '$holder' — " +
+        s"index operations are single-writer; retry after it finishes (a " +
+        s"crashed holder's lease self-heals after ${ttlMs} ms)")
+    }
     // TTL steal: returns true when THIS caller renamed the stale lock away
     // and may retry the create-exclusive acquisition exactly once.
     def stealIfStale(): Boolean = {

@@ -105,6 +105,33 @@ class GuardSpec extends SparkSpec {
     finally files.close()
   }
 
+  /** Every occurrence of `needle` in src/main, once per occurrence, as
+    * `File.scala:name` of the nearest `def` above it.
+    */
+  private def mainOccurrences(needle: String): List[String] = {
+    val defName = """\bdef (\w+)""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        var enclosing = "<none>"
+        java.nio.file.Files.readAllLines(p).asScala.flatMap { l =>
+          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+          val n = Iterator.iterate(l.indexOf(needle))(i => l.indexOf(needle, i + 1))
+            .takeWhile(_ >= 0).size
+          Seq.fill(n)(s"${p.getFileName}:$enclosing")
+        }
+      }.toList
+    finally files.close()
+  }
+
+  test("Dedup has one Jaccard verify and one portable signature aggregate") {
+    // every Jaccard-checked pair family verifies through verifyPairs, and
+    // the 16 portable MinHash mins are aggregated only with the verify
+    // set, in portableState
+    assert(mainOccurrences("array_intersect(") === List("Dedup.scala:verifyPairs"))
+    assert(mainOccurrences("sigMinExprs") ===
+      List("Dedup.scala:sigMinExprs", "Dedup.scala:portableState"))
+  }
+
   test("src/main builds sessions only in GraftConf (and SessionBridge's extension session)") {
     val sites = mainSites("SparkSession.builder", Set("GraftConf.scala", "ColumnBridge.scala"))
     assert(sites.isEmpty, s"SparkSession.builder outside GraftConf.session: ${sites.mkString(", ")}")

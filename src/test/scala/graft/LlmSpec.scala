@@ -659,8 +659,8 @@ class LlmSpec extends SparkSpec {
       _.toArray.map(_.toString).filter(_.contains("attempt_")).toSet)
     val first = attempts()
     assert(first.size === 1)
-    // plant an orphaned attempt aged past the default 7-day window AND
-    // one aged 2 h (inside the default window — a long-lived caller may
+    // plant an orphaned attempt aged past the 7-day window AND
+    // one aged 2 h (inside the window — a long-lived caller may
     // still hold its reader; the old 1 h wall-clock rule yanked these)
     def plant(name: String, ageMs: Long): java.nio.file.Path = {
       val p = epochDir.resolve(name)
@@ -677,14 +677,6 @@ class LlmSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(recent),
       "recent sibling yanked — a live reader inside the window would break")
     assert(after.exists(first.contains), "previous real attempt should be within TTL")
-    // conf override shrinks the window
-    spark.conf.set("spark.graft.index.scratchTtlMs", "1000")
-    try {
-      java.nio.file.Files.setLastModifiedTime(recent,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 5000))
-      inc()
-      assert(!java.nio.file.Files.exists(recent), "configured TTL not honored")
-    } finally spark.conf.unset("spark.graft.index.scratchTtlMs")
     graft.ops.Layout.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
@@ -1696,6 +1688,139 @@ class LlmSpec extends SparkSpec {
       .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(base === prefix)
     assert(base.nonEmpty)
+  }
+
+  // The formulations Dedup used before it had one portable signature
+  // aggregate and one Jaccard verify, kept here as references.
+
+  /** The sf0.001 documents plus the edge texts: null, empty, letterless,
+    * under three tokens, and two exact copies of a fixture text.
+    */
+  private lazy val verifyDocs = {
+    val base = Tables.documents(spark, "/root/testdata/sf0.001").select(col("doc_id"), col("text"))
+    val copy = base.orderBy(col("doc_id")).select(col("text")).first().getString(0)
+    base.unionByName(Seq[(Long, Option[String])](
+      (900001L, None), (900002L, Some("")), (900003L, Some("123 !!! 456")),
+      (900004L, Some("two words")), (900005L, Some(copy)), (900006L, Some(copy))
+    ).toDF("doc_id", "text"))
+  }
+
+  /** Rows with every double as its raw bits, so equal sets are bit-equal. */
+  private def bitRows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).toSet
+
+  /** q134 before: the string-shingle frame, a separate band aggregate
+    * over it and an inline verify; `hashed` verifies on the md5-hi32
+    * sets instead, as the hashed pairs always did.
+    */
+  private def refPortablePairs(df: org.apache.spark.sql.DataFrame, hashed: Boolean,
+      threshold: Double): org.apache.spark.sql.DataFrame = {
+    def md5Hi32(c: org.apache.spark.sql.Column) =
+      conv(substring(md5(c.cast("binary")), 1, 8), 16, 10).cast("long")
+    val tok = df.select(col("doc_id").as("id"), Dedup.shingles(col("text"), 3).as("toks"))
+    val mins = (0 until 16).map { j =>
+      min((col("h") * (2L * j + 3L) + 104729L * (j + 1)) % 2147483647L).as(s"s$j")
+    }
+    val sigs = tok.select(col("id"), explode(col("toks")).as("w"))
+      .withColumn("h", md5Hi32(col("w")))
+      .groupBy(col("id")).agg(mins.head, mins.tail: _*)
+    val bands = sigs.select(col("id"), explode(array((0 until 4).map { t =>
+        struct((lit(t).as("band") +: (0 until 4).map(r => col(s"s${t * 4 + r}").as(s"v$r"))): _*)
+      }: _*)).as("bb"))
+      .select(col("id"), col("bb.band"), col("bb.v0"), col("bb.v1"), col("bb.v2"), col("bb.v3"))
+    val keys = Seq("band", "v0", "v1", "v2", "v3")
+    val cand = bands.select((keys.map(col) :+ col("id").as("id1")): _*)
+      .join(bands.select((keys.map(col) :+ col("id").as("id2")): _*), keys)
+      .filter(col("id1") < col("id2")).select(col("id1"), col("id2")).distinct()
+    val sets = if (!hashed) tok
+      else tok.select(col("id"), array_distinct(transform(col("toks"), md5Hi32(_))).as("toks"))
+    val t1 = sets.select(col("id").as("id1"), col("toks").as("toks1"))
+    val t2 = sets.select(col("id").as("id2"), col("toks").as("toks2"))
+    cand.join(t1, "id1").join(t2, "id2")
+      .withColumn("inter", size(array_intersect(col("toks1"), col("toks2"))).cast("long"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("toks1")) + size(col("toks2")) - col("inter")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id1"), col("id2"), col("jaccard"))
+  }
+
+  test("portable MinHash-LSH: one signature aggregate equals the separate band aggregate, bit for bit") {
+    val state = Dedup.portableState(verifyDocs, "doc_id", "text")
+    assert(state.schema.fieldNames.toSeq === Seq("id", "hs") ++ (0 until 16).map(j => s"s$j"))
+    assert(state.schema("hs").dataType === org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.LongType, containsNull = false))
+    assert(Dedup.portableState(verifyDocs, "doc_id", "text", hashed = false).schema("hs")
+      .dataType === org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.StringType, containsNull = false))
+    for (t <- Seq(0.3, 0.5)) {
+      val strings = bitRows(Dedup.minHashLshPairsPortable(verifyDocs, "doc_id", "text", t))
+      assert(strings === bitRows(refPortablePairs(verifyDocs, hashed = false, t)), s"threshold $t")
+      assert(strings.contains(Seq(900005L, 900006L, java.lang.Double.doubleToRawLongBits(1.0))))
+      assert(bitRows(Dedup.portableHashedPairs(verifyDocs, "doc_id", "text", t)) ===
+        bitRows(refPortablePairs(verifyDocs, hashed = true, t)), s"threshold $t")
+    }
+  }
+
+  test("minHashLshPairs and ngramJaccardPairsPrefix: the shared verify equals their inline ones") {
+    // minHashLshPairs before: a double inter, int sizes
+    def refLsh(df: org.apache.spark.sql.DataFrame, threshold: Double) = {
+      val withSig = df.select(col("doc_id").as("id"), Dedup.shingles(col("text")).as("sh"),
+        Dedup.minHashSignature(col("text"), 3, 32).as("sig"))
+      val banded = withSig.select(col("id"),
+          explode(array((0 until 8).map(b =>
+            struct(lit(b).as("band"), hash(slice(col("sig"), b * 4 + 1, 4)).as("bkey"))): _*)).as("bb"))
+        .select(col("id"), col("bb.band"), col("bb.bkey"))
+      val cand = banded.select(col("band"), col("bkey"), col("id").as("id1"))
+        .join(banded.select(col("band"), col("bkey"), col("id").as("id2")), Seq("band", "bkey"))
+        .filter(col("id1") < col("id2")).select(col("id1"), col("id2")).distinct()
+      val sh = withSig.select(col("id"), col("sh"))
+      cand
+        .join(sh.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
+        .join(sh.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
+        .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
+        .withColumn("jaccard",
+          col("inter") / (size(col("sh1")) + size(col("sh2")) - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id1"), col("id2"), col("jaccard"))
+    }
+    // ngramJaccardPairsPrefix before: the verify inline, over the
+    // prefix candidates
+    def refPrefix(df: org.apache.spark.sql.DataFrame, threshold: Double) = {
+      val tok = df.select(col("doc_id").as("id"), Dedup.shingles(col("text"), 3).as("toks"))
+      val inv = tok.select(col("id"), explode(col("toks")).as("w"))
+      val freq = inv.groupBy(col("w")).agg(count(lit(1)).as("df"))
+      val ranked = inv.join(freq, "w")
+        .withColumn("rk", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
+            .orderBy(col("df"), col("w"))))
+      val withLen = ranked.join(tok.select(col("id"), size(col("toks")).as("len")), "id")
+        .filter(col("rk") <= col("len") - ceil(lit(threshold) * col("len")) + 1)
+        .select(col("id"), col("w"))
+      val cand = withLen.as("a").join(withLen.as("b"),
+          col("a.w") === col("b.w") && col("a.id") < col("b.id"))
+        .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
+      val t1 = tok.select(col("id").as("id1"), col("toks").as("toks1"))
+      val t2 = tok.select(col("id").as("id2"), col("toks").as("toks2"))
+      cand.join(t1, "id1").join(t2, "id2")
+        .withColumn("inter", size(array_intersect(col("toks1"), col("toks2"))).cast("long"))
+        .withColumn("n1", size(col("toks1")).cast("long"))
+        .withColumn("n2", size(col("toks2")).cast("long"))
+        .withColumn("jaccard",
+          col("inter").cast("double") / (col("n1") + col("n2") - col("inter")).cast("double"))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id1"), col("id2"), col("inter"), col("n1"), col("n2"), col("jaccard"))
+    }
+    for (t <- Seq(0.3, 0.5)) {
+      val lsh = bitRows(Dedup.minHashLshPairs(verifyDocs, "doc_id", "text", threshold = t))
+      assert(lsh === bitRows(refLsh(verifyDocs, t)), s"threshold $t")
+      assert(lsh.contains(Seq(900005L, 900006L, java.lang.Double.doubleToRawLongBits(1.0))))
+      val prefix = bitRows(Dedup.ngramJaccardPairsPrefix(verifyDocs, "doc_id", "text", t))
+      assert(prefix === bitRows(refPrefix(verifyDocs, t)), s"threshold $t")
+      assert(prefix.exists(_.take(2) == Seq(900005L, 900006L)))
+    }
   }
 
   test("connected components merge transitive near-dup chains") {

@@ -203,6 +203,18 @@ class StateFamilySpec extends SparkSpec {
     } finally spark.conf.unset(key)
   }
 
+  test("index lease: a refusal names the directory, the refused op and the holder") {
+    val dir = tmp("refusal")
+    val e = StateFamily.withLease(spark, dir, "compact epoch=7") {
+      intercept[IllegalStateException] {
+        StateFamily.withLease(spark, dir, "increment epoch=8") { () }
+      }
+    }
+    val msg = e.getMessage
+    assert(msg.contains("locked") && msg.contains(dir), msg)
+    assert(msg.contains("increment epoch=8") && msg.contains("compact epoch=7"), msg)
+  }
+
   /** A stale lease at `hookfs://` plus the racer that `hook` plays between
     * this writer's age check and its steal rename. Returns what the writer
     * did, the lock file's content after, and any tombstones left.

@@ -2,6 +2,8 @@ package graft.llm
 
 import graft.ops.{CacheRegistry, Layout}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -143,25 +145,23 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
   /** The additive-count verb of the streaming operators. `counts` is the
     * batch's count triplets: a `c` column, last, summed per the columns
     * before it. It appends as epoch `epoch`; when `emit`, `snapshot` then
-    * gets the cumulative counts (the settled epochs and this batch, summed
-    * per key) while they are cached. Every `compactEvery`-th epoch (0 =
-    * never) folds the settled epochs with the same sum, after the
+    * gets the cumulative counts: the settled epochs and this batch's own
+    * append, read back and summed per key. Every `compactEvery`-th epoch
+    * (0 = never) folds the settled epochs with the same sum, after the
     * snapshot. Counts are additive, so the fold is decision-neutral, and
     * the `replaceEpoch` layout makes a re-run replace its own epoch instead
-    * of counting the batch twice.
+    * of counting the batch twice. Nothing is cached: the snapshot reads a
+    * scan, so its consumers can share an aggregate's exchange (adaptive
+    * execution reuses none above a cached relation).
     */
   def accumulate(counts: DataFrame, epoch: Long, compactEvery: Int, emit: Boolean = true)(
       snapshot: DataFrame => Unit): Unit = labelled("accumulate") {
     require(layout.replaceEpoch, s"state family at $path: additive counts need replaceEpoch")
     val keys = counts.columns.filter(_ != "c").map(col)
     def summed(df: DataFrame) = df.groupBy(keys: _*).agg(sum(col("c")).as("c"))
-    // the batch feeds the append and the cumulative read; the cumulative
-    // counts feed every consumer of the snapshot
-    CacheRegistry.during(counts) { batch =>
-      append(batch, epoch)
-      if (emit) CacheRegistry.during(summed(settled(epoch).unionByName(batch)))(snapshot)
-      if (compactEvery > 0 && (epoch + 1) % compactEvery == 0) compact(summed)
-    }
+    append(counts, epoch)
+    if (emit) snapshot(summed(settled(epoch + 1)))
+    if (compactEvery > 0 && (epoch + 1) % compactEvery == 0) compact(summed)
   }
 
   /** Fold every SETTLED epoch — all but the newest — through `fold` into
@@ -183,11 +183,9 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
       require(folded.schema.catalogString == dataSchema.catalogString,
         s"state family at $path: fold changed the schema to ${folded.schema.catalogString}")
       val stage = path + ".__graft_compact_stage"
-      // cached for this call's count and write only: a registered cache
-      // would outlive the folded epochs this call deletes
-      CacheRegistry.during(folded.withColumn("epoch", lit(sentinel))) { gen =>
-        write(gen, Layout.sizedFileCount(gen.count()), stage, "overwrite", cluster = true)
-      }
+      // sized by the folded epochs' rows, the fold's upper bound: the write is the one job
+      write(folded.withColumn("epoch", lit(sentinel)),
+        Layout.sizedFileCount(es.init.map(footerRows).sum), stage, "overwrite", cluster = true)
       // Hadoop rename signals most failures by returning FALSE — an unchecked
       // rename followed by the deletes is exactly the window this closes
       require(fs.rename(new Path(stage, s"epoch=$sentinel"), new Path(dir, s"epoch=$sentinel")),
@@ -196,6 +194,12 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
       fs.delete(new Path(stage), true)
     }
   }
+
+  /** Epoch `e`'s rows, from its data files' parquet footers (no Spark job). */
+  private def footerRows(e: Long): Long =
+    fs.listStatus(new Path(dir, s"epoch=$e")).iterator.filter(_.getPath.getName.endsWith(".parquet"))
+      .map(st => scala.util.Using.resource(
+        ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf)))(_.getRecordCount)).sum
 
   /** Land whole epochs that do not exist yet (`rows` carry their own
     * `epoch`): staged, then renamed in one epoch at a time, so an epoch

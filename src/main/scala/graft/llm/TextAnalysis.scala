@@ -400,13 +400,9 @@ object TextAnalysis {
     */
   def unigramLogProbFromCounts(tf: org.apache.spark.sql.DataFrame,
       ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // NOTE (round-15 measurement): persisting `model` and deriving the
-    // grand total from it was tried and REVERTED — the cache barrier cost
-    // +0.3 s flat on small-vocabulary calls (q150 0.12 -> 0.43 s,
-    // q163 +52%) for a recompute that is one cheap pass over the caller's
-    // already-cached tf. The callers that loop (q170's trigger) persist
-    // their own cum frame, so the model aggregate is a cache scan there
-    // too.
+    // NOTE (round-15 measurement): persisting `model` was tried and
+    // REVERTED — the cache barrier cost +0.3 s flat on small-vocabulary
+    // calls (q150 0.12 -> 0.43 s, q163 +52%) for one cheap pass over `tf`.
     val model = tf.groupBy(col("term")).agg(sum(col("c")).as("ct"))
     val total = tf.agg(sum(col("c")).cast("double").as("t"))
     val scored = tf.join(model, "term").crossJoin(total)
@@ -721,41 +717,40 @@ object TextAnalysis {
     * construction: every source term is a corpus term, so q(t) > 0
     * wherever p_s(t) > 0.
     *
-    * Distributed shape: one tokenization pass to (source, term) counts;
-    * the corpus marginal and the per-source totals both re-aggregate
-    * those counts (term-keyed and source-keyed respectively), so text is
-    * read once and only count triplets shuffle. Per-source totals are
-    * |sources| rows — broadcast into the final join. Output is one row
-    * per source.
+    * Distributed shape: one tokenization pass to (source, term) counts,
+    * which [[sourceTokenKLFromCounts]] reads once, so text is read once
+    * and only count triplets shuffle. Output is one row per source.
     */
   def sourceTokenKL(df: org.apache.spark.sql.DataFrame, srcCol: String,
       textCol: String,
-      tokens: Column => Column = wordTokens): org.apache.spark.sql.DataFrame = {
-    // the marginal and the totals both re-aggregate these counts
-    val st = graft.ops.CacheRegistry.persist(
+      tokens: Column => Column = wordTokens): org.apache.spark.sql.DataFrame =
+    sourceTokenKLFromCounts(
       df.select(col(srcCol).as("source"), explode(tokens(col(textCol))).as("term"))
-      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c")))
-    sourceTokenKLFromCounts(st)
-  }
+        .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c")))
 
   /** [[sourceTokenKL]] from a pre-aggregated `(source, term, c)` count
-    * table (the caller owns its materialization — three consumers below).
-    * This is the reusable half that makes the statistic INCREMENTAL: a
-    * streaming monitor merges per-batch count triplets into a cumulative
-    * table and re-derives the drift from counts alone — text is never
-    * re-read ([[graft.streaming]] leg, q158).
+    * table. This is the reusable half that makes the statistic
+    * INCREMENTAL: a streaming monitor merges per-batch count triplets into
+    * a cumulative table and re-derives the drift from counts alone — text
+    * is never re-read ([[graft.streaming]] leg, q158).
+    *
+    * One exchange chain over `st`: a window over `term` for the corpus
+    * count `ct`, one per-source aggregate, then the total `t` over its
+    * |sources| rows. As Σ c = ts, KL_s = Σ c·ln(c/ct) / ts + ln(t/ts).
     */
   def sourceTokenKLFromCounts(st: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val corpus = st.groupBy(col("term")).agg(sum(col("c")).as("ct"))
-    val bySource = st.groupBy(col("source")).agg(sum(col("c")).as("ts"))
-    val total = st.agg(sum(col("c")).cast("double").as("t"))
-    st.join(corpus, "term")
-      .join(broadcast(bySource), "source").crossJoin(total)
-      .withColumn("p", col("c").cast("double") / col("ts"))
-      .withColumn("q", col("ct").cast("double") / col("t"))
+    import org.apache.spark.sql.expressions.Window
+    st.withColumn("ct", sum(col("c")).over(Window.partitionBy(col("term"))))
       .groupBy(col("source"))
-      .agg(max(col("ts")).as("n_tok"),
-        round(sum(col("p") * log(col("p") / col("q"))), 6).as("kl"))
+      .agg(sum(col("c")).as("ts"),
+        sum(col("c") * log(col("c").cast("double") / col("ct"))).as("x"))
+      // t over the |sources| rows as one global row, exploded back: an
+      // aggregate, not an unpartitioned window (PlanSweepSpec)
+      .agg(collect_list(struct(col("source"), col("ts"), col("x"))).as("s"), sum(col("ts")).as("t"))
+      .select(explode(col("s")).as("s"), col("t"))
+      .select(col("s.source").as("source"), col("s.ts").as("n_tok"),
+        round(col("s.x") / col("s.ts") + log(col("t") / col("s.ts")), 6).as("kl"))
+      .filter(col("source").isNotNull) // counted in t, but no row: the SQL form joins USING source
   }
 
   /** STREAMING unigram-drift monitor — the operational leg of
@@ -766,7 +761,7 @@ object TextAnalysis {
     * batch — the drift time series an ingest pipeline alerts on.
     *
     * Exactly the q136 proof pattern: state reads are epoch-isolated
-    * (`epoch < batchId` plus this batch's in-memory triplets), the state
+    * (`epoch <= batchId`, this batch's append read back), the state
     * append and the snapshot write are dynamic-partition overwrites, so
     * at-least-once re-runs converge; the FINAL snapshot equals the batch
     * [[sourceTokenKL]] over everything streamed (oracle-pinned by q158).

@@ -132,6 +132,13 @@ class GuardSpec extends SparkSpec {
       List("Dedup.scala:sigMinExprs", "Dedup.scala:portableState"))
   }
 
+  test("StateFamily caches only in probeAppend") {
+    // the additive-count verb and compaction read scans: adaptive
+    // execution reuses no exchange above a cached relation
+    assert(mainOccurrences("CacheRegistry.during(").filter(_.startsWith("StateFamily.scala:")) ===
+      List("StateFamily.scala:probeAppend", "StateFamily.scala:probeAppend"))
+  }
+
   test("src/main builds sessions only in GraftConf (and SessionBridge's extension session)") {
     val sites = mainSites("SparkSession.builder", Set("GraftConf.scala", "ColumnBridge.scala"))
     assert(sites.isEmpty, s"SparkSession.builder outside GraftConf.session: ${sites.mkString(", ")}")

@@ -1928,6 +1928,63 @@ class LlmSpec extends SparkSpec {
       .foreach(r => assert(r.getDouble(2) === 0.0))
   }
 
+  /** The three-aggregate, two-join, cross-join form of
+    * `sourceTokenKLFromCounts` that the one-chain form replaced, kept as
+    * the reference: KL_s = Σ p·ln(p/q), p = c/ts, q = ct/t.
+    */
+  private def referenceKL(st: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val corpus = st.groupBy(col("term")).agg(sum(col("c")).as("ct"))
+    val bySource = st.groupBy(col("source")).agg(sum(col("c")).as("ts"))
+    val total = st.agg(sum(col("c")).cast("double").as("t"))
+    st.join(corpus, "term")
+      .join(broadcast(bySource), "source").crossJoin(total)
+      .withColumn("p", col("c").cast("double") / col("ts"))
+      .withColumn("q", col("ct").cast("double") / col("t"))
+      .groupBy(col("source"))
+      .agg(max(col("ts")).as("n_tok"),
+        round(sum(col("p") * log(col("p") / col("q"))), 6).as("kl"))
+  }
+
+  /** `got` equals `want` per source: `n_tok` exactly, `kl` under the
+    * oracle's float rule (|a − b| ≤ 1e-9 · max(1, |a|, |b|)).
+    */
+  private def assertSameKL(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val (g, w) = (rows(got), rows(want))
+    assert(g.keySet === w.keySet)
+    for ((src, (n, kl)) <- w) {
+      val (gn, gkl) = g(src)
+      assert(gn === n, s"n_tok of $src")
+      assert(math.abs(gkl - kl) <= 1e-9 * math.max(1.0, math.max(math.abs(gkl), math.abs(kl))),
+        s"kl of $src: $gkl vs reference $kl")
+    }
+  }
+
+  test("sourceTokenKLFromCounts matches the joined reference on the fixture and a Zipf vocabulary") {
+    val corpus = Tables.documents(spark, "/root/testdata/sf0.001")
+    val counts = corpus.select(col("source"), explode(TextAnalysis.wordTokens(col("text"))).as("term"))
+      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
+    assertSameKL(TextAnalysis.sourceTokenKLFromCounts(counts), referenceKL(counts))
+    // q151's batch operator tokenizes and counts the same way
+    assertSameKL(TextAnalysis.sourceTokenKL(corpus, "source", "text"), referenceKL(counts))
+    // 60k terms with Zipf counts over 8 named sources, each missing a
+    // third of the vocabulary and scaled differently, plus a NULL source,
+    // which counts toward the corpus and has no row in either form
+    val (terms, sources) = (60000L, 9L)
+    val zipf = spark.range(terms * sources)
+      .select((col("id") % terms).as("i"), (col("id") / terms).cast("long").as("s"))
+      .filter((col("i") + col("s")) % 3 =!= 0 || col("i") < 50)
+      .select(
+        when(col("s") === 0, lit(null).cast("string"))
+          .otherwise(concat(lit("src"), col("s").cast("string"))).as("source"),
+        concat(lit("w"), col("i").cast("string")).as("term"),
+        (floor(lit(1e6) * (col("s") + 1) / pow(col("i") + 1, 1.1)) + 1).cast("long").as("c"))
+    assert(zipf.select("term").distinct().count() >= 50000)
+    assertSameKL(TextAnalysis.sourceTokenKLFromCounts(zipf), referenceKL(zipf))
+  }
+
   test("gopherRules: each rule rejects its own violation; clean doc passes") {
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog and runs with pace"), // clean

@@ -168,6 +168,23 @@ class StateFamilySpec extends SparkSpec {
     assert(fam.epochs === Set(-1L, 2L))
   }
 
+  test("compaction to a one-file generation starts one Spark job and keeps every row sum") {
+    val path = tmp("compact_one_job")
+    val fam = new StateFamily(spark, path, Seq((1L, 1L)).toDF("k", "c").schema, Plain)
+    for (e <- 0L until 3L)
+      fam.append(Seq((1L, 1L), (e + 2, e + 1), (e + 5, 2L)).toDF("k", "c"), e, nFiles = 2)
+    def sums() = fam.settled(3L).groupBy("k").agg(sum("c")).as[(Long, Long)].collect().toMap
+    val before = sums()
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-family-compact", "compact")
+    try fam.compact(identity) finally sc.clearJobGroup()
+    // sized from the folded epochs' footers: the write is the only job
+    assert(sc.statusTracker.getJobIdsForGroup("graft-family-compact").length === 1)
+    assert(fam.epochs === Set(-1L, 2L))
+    assert(new java.io.File(s"$path/epoch=-1").list().count(_.endsWith(".parquet")) === 1)
+    assert(sums() === before)
+  }
+
   test("accumulate: the snapshot sees settled plus batch counts; a re-run and compaction change no sum") {
     val fam = new StateFamily(spark, tmp("accumulate"), Seq(("a", 1L)).toDF("k", "c").schema,
       StateFamily.Stream)

@@ -144,15 +144,13 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
 
   /** The additive-count verb of the streaming operators. `counts` is the
     * batch's count triplets: a `c` column, last, summed per the columns
-    * before it. It appends as epoch `epoch`; when `emit`, `snapshot` then
-    * gets the cumulative counts: the settled epochs and this batch's own
-    * append, read back and summed per key. Every `compactEvery`-th epoch
-    * (0 = never) folds the settled epochs with the same sum, after the
-    * snapshot. Counts are additive, so the fold is decision-neutral, and
-    * the `replaceEpoch` layout makes a re-run replace its own epoch instead
-    * of counting the batch twice. Nothing is cached: the snapshot reads a
-    * scan, so its consumers can share an aggregate's exchange (adaptive
-    * execution reuses none above a cached relation).
+    * before it. It appends as epoch `epoch`; when `emit`, `snapshot` gets
+    * the settled epochs and this append, read back and summed per key: a
+    * scan, not a cache, so its consumers can share an aggregate's
+    * exchange. Every `compactEvery`-th epoch (0 = never) then folds the
+    * settled epochs with the same sum. Counts are additive, so the fold is
+    * decision-neutral, and `replaceEpoch` makes a re-run replace its own
+    * epoch instead of counting the batch twice.
     */
   def accumulate(counts: DataFrame, epoch: Long, compactEvery: Int, emit: Boolean = true)(
       snapshot: DataFrame => Unit): Unit = labelled("accumulate") {
@@ -173,6 +171,10 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
     * staged durably, renamed in, and only then are the folded partitions
     * deleted: a crash in between leaves the folded epochs beside their
     * generation until the next compaction, never a lost epoch.
+    *
+    * Sized by the folded epochs' footer rows (no job): near exact for the
+    * dedup folds, up to k + 1 times high for `accumulate`'s summed fold
+    * (`compactEvery` = k; its keys recur in every epoch; ROADMAP).
     */
   def compact(fold: DataFrame => DataFrame): Unit = {
     val es = epochs.toIndexedSeq.sorted
@@ -183,11 +185,9 @@ private[graft] final class StateFamily(spark: SparkSession, val path: String,
       require(folded.schema.catalogString == dataSchema.catalogString,
         s"state family at $path: fold changed the schema to ${folded.schema.catalogString}")
       val stage = path + ".__graft_compact_stage"
-      // sized by the folded epochs' rows, the fold's upper bound: the write is the one job
       write(folded.withColumn("epoch", lit(sentinel)),
         Layout.sizedFileCount(es.init.map(footerRows).sum), stage, "overwrite", cluster = true)
-      // Hadoop rename signals most failures by returning FALSE — an unchecked
-      // rename followed by the deletes is exactly the window this closes
+      // Hadoop rename reports most failures as FALSE; unchecked, the deletes would lose data
       require(fs.rename(new Path(stage, s"epoch=$sentinel"), new Path(dir, s"epoch=$sentinel")),
         s"compaction rename failed; staged generation left at $stage")
       es.init.foreach(e => fs.delete(new Path(dir, s"epoch=$e"), true))

@@ -744,8 +744,8 @@ object TextAnalysis {
       .groupBy(col("source"))
       .agg(sum(col("c")).as("ts"),
         sum(col("c") * log(col("c").cast("double") / col("ct"))).as("x"))
-      // t over the |sources| rows as one global row, exploded back: an
-      // aggregate, not an unpartitioned window (PlanSweepSpec)
+      // t as one global row holding the |sources| rows, exploded back: a warm
+      // q158 run starts 19 jobs, 23 with per.crossJoin(broadcast(per.agg(...)))
       .agg(collect_list(struct(col("source"), col("ts"), col("x"))).as("s"), sum(col("ts")).as("t"))
       .select(explode(col("s")).as("s"), col("t"))
       .select(col("s.source").as("source"), col("s.ts").as("n_tok"),

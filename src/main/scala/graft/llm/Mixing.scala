@@ -115,11 +115,15 @@ object Mixing {
     * silently unspent. An explicit iters pins the round count (the
     * oracle-replay path, where the SQL unrolls a fixed number).
     *
-    * Scale shape: one corpus aggregate to a |sources|-row frame, then
-    * `iters` scalar-aggregate rounds over that frame, each round's two
-    * pool scalars materialized as literals (a bounded metadata pass) —
-    * the corpus is scanned once and never shuffled, exactly like
-    * [[temperatureRates]]. Output one row per source:
+    * Scale shape: the per-source aggregate (|sources| rows) is collected
+    * ONCE in the build phase, under a job description naming this
+    * operator, as in [[temperatureRates]]; the rounds run over those rows
+    * on the driver with Spark's null and double-ordering rules, and the
+    * result is rounded over a local relation, so the returned frame reads
+    * no corpus. A source with NULL tokens stays out of the pool: its
+    * weight, epochs and capped are NULL, and so is its alloc_tok unless
+    * the last round had no budget to split (then 0.0). Output one row
+    * per source:
     * (source, n_tok, weight, alloc_tok, epochs, capped).
     */
   def tokenBudgetEpochs(df: DataFrame, tokenCol: String, sourceCol: String,
@@ -128,50 +132,46 @@ object Mixing {
     require(alpha > 0 && alpha <= 1, s"temperature alpha must be in (0,1]: $alpha")
     require(budgetTokens > 0, s"token budget must be positive: $budgetTokens")
     require(maxEpochs > 0, s"epoch cap must be positive: $maxEpochs")
-    // |sources| rows; every round re-reads it
-    val tot = graft.ops.CacheRegistry.persist(df.groupBy(col(sourceCol).as("source"))
-      .agg(sum(col(tokenCol)).cast("long").as("n_tok")))
-    // each round caps ≥1 source or is a fixpoint, so |sources| rounds are
-    // EXACT for any input; iters ≤ 0 (the default) auto-sizes to that —
-    // a fixed small round count would silently under-allocate when more
-    // sources cap sequentially than there are rounds. tot is |sources|
-    // rows and persisted, so the sizing count is a bounded metadata pass.
-    val rounds = if (iters >= 1) iters else math.max(1, tot.count().toInt)
-    // The round scalars (wsum_all once; wsum/rem per round) are 1-row
-    // aggregates of the |sources|-row frame: materialize them as LITERALS
-    // (the tot.count() bounded-metadata-pass convention) instead of
-    // nesting a broadcast-agg subtree per round. The all-frame form
-    // referenced `cur` twice per round (pool + main), DOUBLING the plan
-    // each round — ~2^rounds broadcast exchanges executed by the final
-    // action (optimization guide §7.3: very large plans are their own
-    // bottleneck; measured on q182's 4-round gate: 65 jobs -> 13,
-    // formatted plan 1713 -> 160 lines, min-of-5 2.09 -> 0.99 s).
-    // Arithmetic is unchanged: the identical doubles ride in as literals.
-    def dlit(r: org.apache.spark.sql.Row, i: Int): Column =
-      if (r.isNullAt(i)) lit(null).cast("double") else lit(r.getDouble(i))
-    val wsumAll = dlit(tot.agg(sum(pow(col("n_tok"), lit(alpha)))).head(), 0)
-    var cur = tot
-      .withColumn("wsum_all", wsumAll)
+    val tot = df.groupBy(col(sourceCol).as("source"))
+      .agg(sum(col(tokenCol)).cast("long").as("n_tok"))
       .withColumn("w", pow(col("n_tok"), lit(alpha)))
-      .withColumn("cap", col("n_tok").cast("double") * maxEpochs)
-      .withColumn("capped", lit(false))
-      .withColumn("alloc", lit(0.0))
-    for (_ <- 1 to rounds) {
-      val pool = cur.agg(
-        sum(when(!col("capped"), col("w"))).as("wsum"),
-        (lit(budgetTokens.toDouble)
-          - coalesce(sum(when(col("capped"), col("alloc"))), lit(0.0))).as("rem"))
-        .head()
-      val (wsum, rem) = (dlit(pool, 0), dlit(pool, 1))
-      cur = cur
-        .withColumn("raw", when(col("capped"), col("alloc")).otherwise(
-          when(wsum > 0 && rem > 0,
-            col("w") / wsum * rem).otherwise(lit(0.0))))
-        .select(col("source"), col("n_tok"), col("w"), col("cap"), col("wsum_all"),
-          (col("capped") || col("raw") >= col("cap")).as("capped"),
-          least(col("raw"), col("cap")).as("alloc"))
+    val spark = df.sparkSession
+    val rows = graft.GraftConf.withJobDescription(spark,
+      s"Mixing.tokenBudgetEpochs by $sourceCol")(tot.collect())
+    // Spark's double comparison: -0.0 equals 0.0, NaN sorts above all
+    def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
+    // Spark's sum: NULLs skipped, a fold from 0.0 in row order, no values -> NULL
+    def sumOf(xs: Seq[Double]): Option[Double] =
+      if (xs.isEmpty) None else Some(xs.foldLeft(0.0)(_ + _))
+    // the pool: the sources with tokens (w is NULL exactly when n_tok is)
+    val pool = rows.indices.filterNot(rows(_).isNullAt(1))
+    val w = rows.map(r => if (r.isNullAt(2)) 0.0 else r.getDouble(2))
+    val cap = rows.map(r => if (r.isNullAt(1)) 0.0 else r.getLong(1).toDouble * maxEpochs)
+    val capped = Array.fill(rows.length)(false)
+    val alloc = Array.fill(rows.length)(0.0)
+    var split = false
+    for (_ <- 1 to (if (iters >= 1) iters else math.max(1, rows.length))) {
+      val wsum = sumOf(pool.filterNot(capped(_)).map(w(_)))
+      val rem = budgetTokens.toDouble - sumOf(pool.filter(capped(_)).map(alloc(_))).getOrElse(0.0)
+      split = wsum.exists(cmp(_, 0.0) > 0) && cmp(rem, 0.0) > 0
+      for (s <- pool if !capped(s)) {
+        val raw = if (split) w(s) / wsum.get * rem else 0.0
+        capped(s) = cmp(raw, cap(s)) >= 0
+        alloc(s) = if (cmp(cap(s), raw) < 0) cap(s) else raw
+      }
     }
-    cur.select(col("source"), col("n_tok"),
+    val wsumAll = sumOf(pool.map(w(_))).map(Double.box).orNull
+    // a NULL-token source's alloc is its last round's raw share: NULL
+    // while the pool splits a budget, 0.0 once there is none to split
+    val out = rows.indices.map { s =>
+      val (a, c) = if (rows(s).isNullAt(1)) (if (split) null else 0.0, null)
+        else (alloc(s), capped(s))
+      org.apache.spark.sql.Row.fromSeq(rows(s).toSeq ++ Seq(wsumAll, a, c))
+    }
+    val schema = tot.schema.add("wsum_all", "double").add("alloc", "double")
+      .add("capped", "boolean")
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+      .select(col("source"), col("n_tok"),
         round(col("w") / col("wsum_all"), 6).as("weight"),
         round(col("alloc"), 4).as("alloc_tok"),
         round(col("alloc") / col("n_tok"), 6).as("epochs"),

@@ -345,11 +345,12 @@ object TextAnalysis {
     val docLen = tf.groupBy(col("id")).agg(sum(col("c")).as("len"))
     val docFreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= lit(maxDocFreq * n))
-    // weights persisted: the self-join consumes this lineage twice
-    val w = graft.ops.CacheRegistry.persist(tf.join(docLen, "id").join(docFreq, "term")
+    // not cached: both self-join sides read one exchange on `term`,
+    // which adaptive execution reuses only above an uncached plan
+    val w = tf.join(docLen, "id").join(docFreq, "term")
       .select(col("id"), col("term"),
         round((col("c").cast("double") / col("len")) * log(lit(n.toDouble) / col("df")), 9)
-          .as("w")))
+          .as("w"))
     val norms = w.groupBy(col("id")).agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     val a = w.select(col("id").as("id1"), col("term"), col("w").as("w1"))
     val b = w.select(col("id").as("id2"), col("term"), col("w").as("w2"))

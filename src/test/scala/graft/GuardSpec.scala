@@ -139,6 +139,14 @@ class GuardSpec extends SparkSpec {
       List("StateFamily.scala:probeAppend", "StateFamily.scala:probeAppend"))
   }
 
+  test("the iterative operators cut lineage without the cache registry") {
+    // pageRankExact checkpoints every step and tokenBudgetEpochs (with its
+    // local defs) water-fills collected rows: a cache chain inside a loop
+    // grew the plan strings exponentially with iters
+    assert(mainOccurrences("CacheRegistry.").filter(o => o.startsWith("Graphs.scala:") ||
+      Seq("tokenBudgetEpochs", "cmp", "sumOf").map("Mixing.scala:" + _).contains(o)) === Nil)
+  }
+
   test("src/main builds sessions only in GraftConf (and SessionBridge's extension session)") {
     val sites = mainSites("SparkSession.builder", Set("GraftConf.scala", "ColumnBridge.scala"))
     assert(sites.isEmpty, s"SparkSession.builder outside GraftConf.session: ${sites.mkString(", ")}")

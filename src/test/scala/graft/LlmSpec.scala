@@ -866,46 +866,29 @@ class LlmSpec extends SparkSpec {
     assert(pr2 === pr)
   }
 
-  test("PageRank lineage is cut per iteration: plan size constant in iters, ranks read from cache") {
+  test("PageRank lineage is cut per iteration: ranks are a checkpointed leaf, plan size constant in iters") {
     import graft.llm.Graphs
+    import org.apache.spark.sql.execution.LogicalRDD
     import spark.implicits._
-    // Before the per-iteration persist, iteration i's plan embedded the
-    // FULL lineage of iteration i−1 twice (dangling aggregate +
-    // contribution join) — the returned plan grew ~2^iters and so did
-    // execution. With the lineage cut, the final plan reads the previous
-    // ranks from an InMemoryRelation and its size is CONSTANT in iters.
+    // Without a cut, iteration i's plan embedded the FULL lineage of
+    // iteration i−1 twice (dangling aggregate + contribution join), so
+    // the plan grew ~2^iters and so did execution. Each step ends in an
+    // eager local checkpoint: the returned ranks are a leaf over
+    // materialized blocks, and their plan and RDD lineage are the same
+    // size whatever iters is.
     val nodes = (0L until 6L).toDF("id")
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 3L)).toDF("src", "dst")
-    // Inspect the LAST iteration's physical plan (the cached plan inside
-    // the returned frame's InMemoryRelation). SparkPlan.collect does not
-    // traverse an InMemoryTableScan's relation, so its node count is the
-    // true lineage size of one step.
-    def stats(iters: Int): (Int, Int) = {
+    def shape(iters: Int): (Int, Int) = {
       val pr = Graphs.pageRankExact(edges, "src", "dst", nodes, "id", iters)
-      val imr = pr.queryExecution.withCachedData.collectFirst {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-      }.getOrElse(fail("returned ranks are not cached — lineage cut missing"))
-      // the count() in each step finalized the adaptive plan; AQE query
-      // stages are leaf wrappers, so recurse into them explicitly
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-        case q: QueryStageExec => q +: flatten(q.plan)
-        case other => other +: other.children.flatMap(flatten)
+      val leaf = pr.queryExecution.logical match {
+        case r: LogicalRDD => r
+        case p => fail(s"returned ranks are not a checkpointed leaf:\n$p")
       }
-      val flat = flatten(imr.cacheBuilder.cachedPlan)
-      (flat.size,
-        flat.count(_.getClass.getSimpleName.contains("InMemoryTableScan")))
+      assert(leaf.rdd.isCheckpointed, "the leaf's blocks are not materialized")
+      (pr.queryExecution.executedPlan.collect { case p => p }.size,
+        leaf.rdd.toDebugString.linesIterator.size)
     }
-    val (n2, scans2) = stats(2)
-    val (n5, scans5) = stats(5)
-    assert(scans2 > 0 && scans5 > 0,
-      "previous-iteration ranks must be read via InMemoryTableScan, not recomputed")
-    // allow AQE shape noise (reused exchanges vary run-to-run) but not
-    // growth: the unpersisted chain doubled the plan per extra iteration
-    assert(n5 <= n2 + 15,
-      s"last-step plan grows with iters (lineage not cut): iters=2 -> $n2, iters=5 -> $n5")
+    assert(shape(2) === shape(20))
   }
 
   test("PII redaction: staged order keeps narrow patterns out of the phone pattern's mouth") {
@@ -3167,6 +3150,84 @@ class LlmSpec extends SparkSpec {
         alpha = 0.5, budgetTokens = 1000000L, maxEpochs = 2.0)
       .collect().map(r => (r.getAs[Double]("epochs"), r.getAs[Boolean]("capped")))
     assert(all.forall { case (e, c) => c && math.abs(e - 2.0) < 1e-9 }, all.toSeq)
+  }
+
+  /** The Spark-expression water-fill `tokenBudgetEpochs` replaced: the
+    * per-source aggregate cached, then one 1-row aggregate per round whose
+    * two pool scalars ride back in as literals.
+    */
+  private def referenceTokenBudgetEpochs(df: org.apache.spark.sql.DataFrame, tokenCol: String,
+      sourceCol: String, alpha: Double, budgetTokens: Long, maxEpochs: Double,
+      iters: Int): org.apache.spark.sql.DataFrame = {
+    val tot = graft.ops.CacheRegistry.persist(df.groupBy(col(sourceCol).as("source"))
+      .agg(sum(col(tokenCol)).cast("long").as("n_tok")))
+    val rounds = if (iters >= 1) iters else math.max(1, tot.count().toInt)
+    def dlit(r: org.apache.spark.sql.Row, i: Int): org.apache.spark.sql.Column =
+      if (r.isNullAt(i)) lit(null).cast("double") else lit(r.getDouble(i))
+    val wsumAll = dlit(tot.agg(sum(pow(col("n_tok"), lit(alpha)))).head(), 0)
+    var cur = tot
+      .withColumn("wsum_all", wsumAll)
+      .withColumn("w", pow(col("n_tok"), lit(alpha)))
+      .withColumn("cap", col("n_tok").cast("double") * maxEpochs)
+      .withColumn("capped", lit(false))
+      .withColumn("alloc", lit(0.0))
+    for (_ <- 1 to rounds) {
+      val pool = cur.agg(
+        sum(when(!col("capped"), col("w"))).as("wsum"),
+        (lit(budgetTokens.toDouble)
+          - coalesce(sum(when(col("capped"), col("alloc"))), lit(0.0))).as("rem"))
+        .head()
+      val (wsum, rem) = (dlit(pool, 0), dlit(pool, 1))
+      cur = cur
+        .withColumn("raw", when(col("capped"), col("alloc")).otherwise(
+          when(wsum > 0 && rem > 0,
+            col("w") / wsum * rem).otherwise(lit(0.0))))
+        .select(col("source"), col("n_tok"), col("w"), col("cap"), col("wsum_all"),
+          (col("capped") || col("raw") >= col("cap")).as("capped"),
+          least(col("raw"), col("cap")).as("alloc"))
+    }
+    cur.select(col("source"), col("n_tok"),
+        round(col("w") / col("wsum_all"), 6).as("weight"),
+        round(col("alloc"), 4).as("alloc_tok"),
+        round(col("alloc") / col("n_tok"), 6).as("epochs"),
+        col("capped"))
+  }
+
+  test("tokenBudgetEpochs: same rows as the Spark-expression water-fill on random source tables") {
+    import graft.llm.Mixing
+    val rnd = new scala.util.Random(16)
+    val fracs = Seq(0.05, 0.3, 1.2, 10.0) // of the tokens: a few caps .. every source capped
+    var calls = 0
+    for (t <- 0 until 4) {
+      // 2-10 sources of skewed size, a source whose every count is NULL,
+      // rows with a NULL source key (with tokens in odd tables, without in
+      // even ones), and in table 3 a source whose tokens sum negative
+      val sized = (0 until 2 + rnd.nextInt(9)).flatMap { k =>
+        val scale = math.pow(10, 1 + rnd.nextInt(5)).toLong
+        Seq.fill(1 + rnd.nextInt(4))((Option(s"s$k"), Option(1L + rnd.nextLong(scale))))
+      }
+      val rows = sized ++ Seq((Option("no_tokens"), Option.empty[Long]),
+        (Option.empty[String], if (t % 2 == 1) Some(1L + rnd.nextLong(1000L)) else None)) ++
+        (if (t == 3) Seq((Option("negative"), Option(-500L))) else Nil)
+      val df = rows.toDF("source", "n_tokens").repartition(1 + t)
+      val total = sized.map(_._2.get).sum
+      for (_ <- 0 until 4) {
+        val alpha = Seq(0.2, 0.5, 1.0)(rnd.nextInt(3))
+        val cap = Seq(1.0, 1.5, 4.0)(rnd.nextInt(3))
+        val budget = math.max(1L, (total * fracs(rnd.nextInt(fracs.size))).toLong)
+        val iters = Seq(0, 1, 3)(calls % 3)
+        calls += 1
+        val got = Mixing.tokenBudgetEpochs(df, "n_tokens", "source", alpha, budget, cap, iters)
+        val want = referenceTokenBudgetEpochs(df, "n_tokens", "source", alpha, budget, cap, iters)
+        assert(got.columns.toSeq === want.columns.toSeq)
+        // Row equality: NaN (a negative sum's weight) equals NaN
+        def rows(f: org.apache.spark.sql.DataFrame) =
+          f.collect().toSeq.sortBy(r => Option(r.getString(0)).getOrElse(""))
+        assert(rows(got) === rows(want),
+          s"table $t alpha=$alpha cap=$cap budget=$budget iters=$iters")
+      }
+    }
+    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("splitSentences: abbrev/initial/decimal guards, quote tails, unterminated fragment") {

@@ -211,11 +211,9 @@ class ScaleSpec extends SparkSpec {
     import graft.ops.CacheRegistry
     import org.apache.spark.storage.StorageLevel
     CacheRegistry.releaseAll()
-    // 7 live operator caches + the returned ranks fill the 8 slots: each
-    // iteration's ranks must give their slot up to the next, or 5
-    // iterations evict 4 live caches. (iters >= 8 exhausts a 4 GB heap
-    // before the check: each step's cached plan reads the previous ranks
-    // twice, so the plan strings Spark builds grow 2^iters.)
+    // 7 live operator caches fill 7 of the 8 slots: the iterations'
+    // ranks are local checkpoints, not registry caches, so however many
+    // steps run, no live cache is pushed out
     val live = (1 to 7).map { i =>
       val df = spark.range(i * 10L).toDF("x").persist()
       df.count()
@@ -228,6 +226,47 @@ class ScaleSpec extends SparkSpec {
     assert(live.forall(_.storageLevel != StorageLevel.NONE),
       "a live registered cache was evicted by pageRankExact's iterations")
     CacheRegistry.releaseAll()
+  }
+
+  test("pageRankExact runs 20 steps on a 5-node graph, each step's plan no larger than the second's") {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    // The plan strings Spark builds for every execution (the start event
+    // and each adaptive update) recurse into every cached plan below: when
+    // each step cached its ranks and the next read them twice, they grew
+    // exponentially with iters, and iters = 8 exhausted a 4 GB heap on
+    // this graph. Each step now ends in a local checkpoint, a leaf.
+    val label = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val chars = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    def record(id: Long, plan: String): Unit =
+      Option(label.get(id)).foreach(chars.merge(_, plan.length, math.max))
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          label.put(s.executionId, s.description)
+          record(s.executionId, s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          record(u.executionId, u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
+    sc.addSparkListener(listener)
+    val pr = try {
+      val pr = graft.llm.Graphs.pageRankExact(edges, "src", "dst", nodes, "id", iters = 20)
+      org.apache.spark.sql.graft.MetricsBridge.waitListenerBusEmpty(sc)
+      pr
+    } finally sc.removeSparkListener(listener)
+    assert(pr.count() === 5)
+    val steps = (1 to 20).map(i => chars.getOrDefault(s"Graphs.pageRankExact step $i", 0))
+    assert(steps.forall(_ > 0), s"a step ran no labelled execution: $steps")
+    // A step's longest plan string is about 12.6k chars on Spark 4.1.
+    // Expression ids gain digits as the session runs, hence the 10%
+    // slack; a chained step multiplied it several times over.
+    assert(steps.drop(2).forall(_ <= steps(1) * 1.1), s"per-step plan chars grow: $steps")
   }
 
   test("CacheRegistry counts capacity evictions only: 9 live registrations evict 1") {

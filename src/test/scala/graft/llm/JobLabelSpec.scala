@@ -107,4 +107,23 @@ class JobLabelSpec extends graft.SparkSpec {
     }
     graft.ops.Layout.deleteRecursively(dir)
   }
+
+  test("tokenBudgetEpochs and pageRankExact label their build-phase jobs") {
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      val tokens = spark.range(40).select(col("id"),
+        (col("id") % 3).cast("string").as("source"), lit(5L).as("n"))
+      assert(labels(Mixing.tokenBudgetEpochs(tokens, "n", "source", 0.5, 300L, 2.0)) ===
+        Set("Mixing.tokenBudgetEpochs by source"))
+      val edges = spark.range(4).select(col("id").as("src"), ((col("id") + 1) % 4).as("dst"))
+      // step 0 materializes the loop invariants, steps 1..3 the ranks
+      assert(labels(Graphs.pageRankExact(edges, "src", "dst", spark.range(5).toDF(), "id", 3)) ===
+        (0 to 3).map(i => s"Graphs.pageRankExact step $i").toSet)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
